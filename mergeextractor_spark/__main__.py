@@ -46,8 +46,7 @@ def main() -> None:
 
     if args.cmd == "list":
         for key, q in reg.items():
-            kind = "oracle" if q.oracle else "rows-only"
-            print(f"{key:32s} [{kind}] {q.doc.splitlines()[0][:80] if q.doc else ''}")
+            print(f"{key:32s} {q.doc.splitlines()[0][:80] if q.doc else ''}")
         return
 
     from .session import get_spark
@@ -81,37 +80,18 @@ def main() -> None:
         return
 
 
-def _eager_keys() -> frozenset[str]:
-    """Keys whose CONSTRUCTION performs work (iterative loops, warehouse
-    writes) — excluded from view registration, which must stay lazy.
-    Derived from the registry's declared ``eager`` flags, never hand-listed
-    (VERDICT r4 item 4)."""
-    from .registry import load_all
-
-    return frozenset(k for k, q in load_all().items() if q.eager)
-
-
-def __getattr__(name: str):
-    # Back-compat: tests import _EAGER_KEYS; keep it, derived lazily.
-    if name == "_EAGER_KEYS":
-        return _eager_keys()
-    raise AttributeError(name)
-
-
 def register_views(spark, sf_dir: str, prefix: str = "mx_") -> int:
-    """Expose every oracle-paired (pure-query) operator as a temp view
-    named ``<prefix><key>`` so the surface is queryable from plain
-    spark.sql — the migration path for SQL-first users of the reference.
-    Lazy: a view only executes when queried, and registration itself
-    performs ZERO writes (eager-constructing keys are excluded via their
-    registry flag; asserted in tests/test_contract.py). Rows-only keys
-    (sinks, mock-client pipelines) are excluded by design."""
+    """Expose every pure-query operator as a temp view named
+    ``<prefix><key>`` so the surface is queryable from plain spark.sql —
+    the migration path for SQL-first users of the reference. Lazy: a view
+    only executes when queried, and registration itself performs ZERO
+    writes (eager-constructing keys are excluded via their registry flag;
+    asserted in tests/test_contract.py)."""
     from .registry import load_all
 
-    eager = _eager_keys()
     n = 0
     for key, q in load_all().items():
-        if q.oracle is None or key in eager:
+        if q.eager:
             continue
         q.spark(spark, sf_dir).createOrReplaceTempView(f"{prefix}{key}")
         n += 1

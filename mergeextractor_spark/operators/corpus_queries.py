@@ -248,13 +248,6 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 NGRAM_OVERLAP_N = 8  # same shingle width as the decontamination screen
 
-# The sorted source list is a pure function of the fixture data and a
-# bounded dimension (the _probed_cids boundedness class), so it is
-# memoized per (sf_dir, source mtime) like _BATCH_PARTS_MEMO — benchmark
-# loops skip the collect job, regenerated fixtures miss.
-_OVERLAP_SRCS_MEMO: dict[tuple[str, float], list[str]] = {}
-
-
 def _sql_escape(s: str) -> str:
     """Escape a string for interpolation into a single-quoted Spark SQL
     literal: Spark's parser treats backslash as an escape inside single
@@ -266,19 +259,16 @@ def _sql_escape(s: str) -> str:
 
 
 def _overlap_sources(spark: SparkSession, sf_dir: str) -> list[str]:
-    from .scale_queries import _source_mtime
-
-    key = (sf_dir, _source_mtime(sf_dir, ("documents",)))
-    if key not in _OVERLAP_SRCS_MEMO:
-        _OVERLAP_SRCS_MEMO[key] = [
-            r[0]
-            for r in t(spark, sf_dir, "documents")
-            .select("source")
-            .distinct()
-            .orderBy("source")
-            .collect()
-        ]
-    return _OVERLAP_SRCS_MEMO[key]
+    """Sorted distinct sources — driver-side, bounded by the source count
+    (the _probed_cids boundedness class)."""
+    return [
+        r[0]
+        for r in t(spark, sf_dir, "documents")
+        .select("source")
+        .distinct()
+        .orderBy("source")
+        .collect()
+    ]
 
 
 @register(

@@ -1649,33 +1649,17 @@ def dedup_minhash_store_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     return minhash_store_read(spark, path).select("doc_id", "band", "bucket", "bpfx")
 
 
-# Probe partition lists are a pure function of the fixture data, so they
-# are memoized per (sf_dir, source mtime) like _PROBE_CIDS_MEMO —
-# benchmark loops skip the collect job, regenerated fixtures miss.
-_BATCH_PARTS_MEMO: dict[tuple[str, float], tuple[list[int], list[str]]] = {}
-
-
-def _batch_band_parts(
-    bands_b: DataFrame, sf_dir: str
-) -> tuple[list[int], list[str]]:
+def _batch_band_parts(bands_b: DataFrame) -> tuple[list[int], list[str]]:
     """Distinct (band, bucket-prefix) partitions the batch can probe —
     driver-side, bounded by bands x 16 hex prefixes (48 at fixture
     parameters, a few thousand in production), never by corpus or
     batch size."""
-    from .scale_queries import _source_mtime
-
-    memo_key = (sf_dir, _source_mtime(sf_dir, ("documents",)))
-    if memo_key not in _BATCH_PARTS_MEMO:
-        rows = (
-            bands_b.select("band", F.substring("bucket", 1, 1).alias("bpfx"))
-            .distinct()
-            .collect()
-        )
-        _BATCH_PARTS_MEMO[memo_key] = (
-            sorted({r.band for r in rows}),
-            sorted({r.bpfx for r in rows}),
-        )
-    return _BATCH_PARTS_MEMO[memo_key]
+    rows = (
+        bands_b.select("band", F.substring("bucket", 1, 1).alias("bpfx"))
+        .distinct()
+        .collect()
+    )
+    return sorted({r.band for r in rows}), sorted({r.bpfx for r in rows})
 
 
 @register(
@@ -1728,7 +1712,7 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = d.filter(F.col("doc_id") % INCR_BATCH_MOD == 0)
     sh_b = _cache_shingles(_spread_doc_shingles(batch))
     bands_b = _bands_of(sh_b.groupBy("doc_id").agg(*_minhash_agg_cols()))
-    bands_hit, pfx_hit = _batch_band_parts(bands_b, sf_dir)
+    bands_hit, pfx_hit = _batch_band_parts(bands_b)
     store = minhash_store_read(spark, path).filter(
         F.col("band").isin(bands_hit) & F.col("bpfx").isin(pfx_hit)
     )

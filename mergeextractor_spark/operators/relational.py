@@ -533,9 +533,22 @@ def set_distinct_defs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t(spark, sf_dir, "documents").select("lang", "source").distinct()
 
 
+def _date_window_oracle() -> str:
+    from ..functions.dates import duckdb_date_window_sql
+
+    lb, ub = duckdb_date_window_sql("CAST(o_orderdate AS DATE)", 4)
+    return f"""
+    SELECT o_orderkey,
+           strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS announce,
+           strftime({lb}, '%Y-%m-%d') AS lb,
+           strftime({ub}, '%Y-%m-%d') AS ub
+    FROM orders
+    """
+
+
 @register(
     "date_window",
-    oracle=None,  # built below — needs the CASE-WHEN mirror
+    oracle=_date_window_oracle(),
     doc="Announcement-date search window ±4 months with the reference's exact "
     "day-overflow semantics (CrawlerSupport.py:30-83): LB overflow → day 1 "
     "same month, UB overflow → day 1 NEXT month, floor 2001-01-01. Native "
@@ -551,21 +564,3 @@ def date_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         date_str(date_window_lb(d, 4)).alias("lb"),
         date_str(date_window_ub(d, 4)).alias("ub"),
     )
-
-
-def _date_window_oracle() -> str:
-    from ..functions.dates import duckdb_date_window_sql
-
-    lb, ub = duckdb_date_window_sql("CAST(o_orderdate AS DATE)", 4)
-    return f"""
-    SELECT o_orderkey,
-           strftime(CAST(o_orderdate AS DATE), '%Y-%m-%d') AS announce,
-           strftime({lb}, '%Y-%m-%d') AS lb,
-           strftime({ub}, '%Y-%m-%d') AS ub
-    FROM orders
-    """
-
-
-from ..registry import REGISTRY as _REG  # noqa: E402
-
-_REG["date_window"].oracle = _date_window_oracle()

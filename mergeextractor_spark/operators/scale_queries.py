@@ -799,7 +799,7 @@ def ivf_store_probe(
 def _source_mtime(sf_dir: str, names: tuple[str, ...]) -> float:
     """Newest mtime across the given fixture parquet files/dirs — the
     freshness stamp for derived on-disk artifacts (bucketed tables, IVF
-    stores, memoized probe lists). Round-5 review: a path-only guard
+    stores). Round-5 review: a path-only guard
     silently served STALE derived data after fixtures were regenerated
     in place (e.g. bench_scaling --rebuild)."""
     import os
@@ -844,23 +844,11 @@ def ensure_ivf_store(spark: SparkSession, sf_dir: str) -> str:
     return path
 
 
-# Probed-cid lists are a pure function of the fixture data (deterministic
-# codebook), so they are memoized per (sf_dir, source mtime) — repeat
-# constructions in a session (benchmark loops) skip the collect job, and
-# regenerated fixtures miss the memo instead of serving stale cells.
-_PROBE_CIDS_MEMO: dict[tuple[str, float], list[int]] = {}
-
-
-def _probed_cids(e: DataFrame, sf_dir: str) -> list[int]:
+def _probed_cids(e: DataFrame) -> list[int]:
     """Distinct cells probed by the query set — driver-side, bounded by
-    the CELL count (never the corpus), memoized per (sf_dir, mtime)."""
-    memo_key = (sf_dir, _source_mtime(sf_dir, ("embeddings",)))
-    if memo_key not in _PROBE_CIDS_MEMO:
-        _, qprobe = _ivf_assign_probe(e)
-        _PROBE_CIDS_MEMO[memo_key] = sorted(
-            r.cid for r in qprobe.select("cid").distinct().collect()
-        )
-    return _PROBE_CIDS_MEMO[memo_key]
+    the CELL count (never the corpus)."""
+    _, qprobe = _ivf_assign_probe(e)
+    return sorted(r.cid for r in qprobe.select("cid").distinct().collect())
 
 
 @register(
@@ -883,7 +871,7 @@ def _probed_cids(e: DataFrame, sf_dir: str) -> list[int]:
 def ann_ivf_pq_refine_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spread(t(spark, sf_dir, "embeddings"))
     path = ensure_ivf_store(spark, sf_dir)
-    cids = _probed_cids(e, sf_dir)
+    cids = _probed_cids(e)
     pool = _adc_shortlist(_ivf_pq_adc_scores(e))
     qe = e.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("q_emb")
@@ -1097,7 +1085,7 @@ def ann_ivf_pq_stored(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = spread(t(spark, sf_dir, "embeddings"))
     path = ensure_pq_store(spark, sf_dir)
-    cids = _probed_cids(e, sf_dir)
+    cids = _probed_cids(e)
     store_schema = T.StructType(
         [
             T.StructField("vec_id", T.LongType()),

@@ -212,35 +212,11 @@ def clf_labels(d: DataFrame) -> DataFrame:
     )
 
 
-# Feature-bearing doc counts per (sf_dir, source mtime): N enters the
-# plan as a LITERAL (the lr denominator), and it is a pure function of
-# the fixture — the dedup._BATCH_PARTS_MEMO plan-construction-metadata
-# class, so repeat constructions (bench samples) skip the count job
-# (r15).  The memo key folds the fixture mtime so regenerated fixtures
-# miss instead of serving a stale N.
-_CLF_NDOCS_MEMO: dict[tuple[str, float], int] = {}
-
-
-def _clf_ndocs(spark: SparkSession, sf_dir: str) -> int:
-    from ..operators.scale_queries import _source_mtime
-
-    key = (sf_dir, _source_mtime(sf_dir, ("documents",)))
-    if key not in _CLF_NDOCS_MEMO:
-        _CLF_NDOCS_MEMO[key] = (
-            clf_features(t(spark, sf_dir, "documents"))
-            .select("doc_id")
-            .distinct()
-            .count()
-        )
-    return _CLF_NDOCS_MEMO[key]
-
-
 def clf_train(
     feat: DataFrame,
     lab: DataFrame,
     rounds: int = CLF_ROUNDS,
     buckets: int = CLF_BUCKETS,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """Run ``rounds`` exact-integer GD rounds; returns the (b, w) weight
     frame. Per round: score aggregate (shuffles (doc_id, int64)),
@@ -258,8 +234,7 @@ def clf_train(
     # 2.0 s with exceptAll both ways 0 rows.
     feat = truncate_lineage(feat, eager=False)
     lab = truncate_lineage(lab, eager=False)
-    if n_docs is None:
-        n_docs = feat.select("doc_id").distinct().count()  # driver: one int
+    n_docs = feat.select("doc_id").distinct().count()  # driver: one int
     w = spark.range(-1, buckets).select(
         F.col("id").alias("b"), F.lit(0).cast("long").alias("w")
     )
@@ -327,8 +302,7 @@ def clf_train(
 )
 def pipeline_classifier_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
-    w = clf_train(clf_features(d), clf_labels(d),
-                  n_docs=_clf_ndocs(spark, sf_dir))
+    w = clf_train(clf_features(d), clf_labels(d))
     return w.filter(F.col("w") != 0).select(
         F.col("b").alias("bucket"), F.col("w").alias("weight")
     )
@@ -341,8 +315,7 @@ def clf_store_write(spark: SparkSession, sf_dir: str, path: str,
     100 TB the weight store is the model artifact: trained once per
     corpus snapshot, broadcast into every downstream scoring join."""
     d = t(spark, sf_dir, "documents")
-    clf_train(clf_features(d), clf_labels(d), rounds=rounds,
-              n_docs=_clf_ndocs(spark, sf_dir)).write.mode(
+    clf_train(clf_features(d), clf_labels(d), rounds=rounds).write.mode(
         "overwrite"
     ).parquet(path)
 

@@ -197,11 +197,6 @@ def pipeline_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 REKEY_BELOW = 50       # committed docs re-keyed into the batch (planted exact dups)
 REKEY_OFFSET = 1_000_000
 
-# probed-partition lists per (sf_dir, source mtime) — see the memo note
-# in pipeline_ingest_cycle (the dedup._BATCH_PARTS_MEMO class)
-_CYCLE_PARTS_MEMO: dict[tuple[str, float], list] = {}
-
-
 def _ingest_cycle_oracle() -> str:
     from ..operators.dedup import (
         INCR_BATCH_MOD,
@@ -341,32 +336,21 @@ def pipeline_ingest_cycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # anti-join, and the commit's own partition-list + merged write) —
     # without the cut each consumer re-runs the signature aggregate
     # (r14 profile: commit alone re-evaluated the whole verify tail
-    # twice, 5.5 s executor-CPU of the cycle's 8.4 s).  LAZY since r15:
-    # the checkpoint's first consumer used to be the immediate parts
-    # collect (lazy bought nothing), but that collect is now memoized
-    # per (sf_dir, mtime), so on every warm construction the first
-    # consumer is the near-dup verify job — the cut materializes inside
-    # it instead of as its own blocking driver job.
+    # twice, 5.5 s executor-CPU of the cycle's 8.4 s).  LAZY: the first
+    # consumer is the partition-list collect just below, so the cut
+    # materializes inside that job instead of as its own blocking driver
+    # job ahead of it.
     bands_b = truncate_lineage(
         _bands_of(sh_b.groupBy("doc_id").agg(*_minhash_agg_cols())),
         eager=False,
     )
-    # the probed (band, bpfx) list is a pure function of the fixture
-    # (bands depend on text only, and the rekeyed rows carry committed
-    # TEXT) — memoized per (sf_dir, mtime) like dedup.py's
-    # _BATCH_PARTS_MEMO (plan-construction metadata, the _probed_cids
-    # boundedness class: <= bands x 16 rows), so repeat constructions
-    # skip one driver collect (r15)
-    from ..operators.scale_queries import _source_mtime
-
-    memo_key = (sf_dir, _source_mtime(sf_dir, ("documents",)))
-    if memo_key not in _CYCLE_PARTS_MEMO:
-        _CYCLE_PARTS_MEMO[memo_key] = (
-            bands_b.select("band", F.substring("bucket", 1, 1).alias("bpfx"))
-            .distinct()
-            .collect()
-        )
-    parts = _CYCLE_PARTS_MEMO[memo_key]
+    # the probed (band, bpfx) partition list, collected driver-side (the
+    # _probed_cids boundedness class: <= bands x 16 rows)
+    parts = (
+        bands_b.select("band", F.substring("bucket", 1, 1).alias("bpfx"))
+        .distinct()
+        .collect()
+    )
     # empty batch (quiet ingest day): no band keys → no touched partitions
     # → the probed store slice is empty by construction
     pair_pred = (

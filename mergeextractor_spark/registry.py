@@ -5,7 +5,7 @@ Each operator from SURVEY.md §2 registers:
   spark   — Callable[(SparkSession, sf_dir) -> DataFrame]
   oracle  — equivalent DuckDB ANSI SQL over the pre-registered views
             (region nation customer supplier part orders lineitem events
-            documents embeddings), or None for rows-only checks.
+            documents embeddings).
 
 Parity rules (driver compares row-count + schema + order-insensitive
 value hash, columns sorted by name):
@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 class Query:
     key: str
     spark: Callable[[SparkSession, str], DataFrame]
-    oracle: str | None = None
+    oracle: str
     doc: str = ""
     # True when merely CONSTRUCTING the DataFrame performs work (iterative
     # driver loops, warehouse/sink writes).  Declared at registration so
@@ -38,7 +38,7 @@ class Query:
 REGISTRY: dict[str, Query] = {}
 
 
-def register(key: str, oracle: str | None = None, doc: str = "", eager: bool = False):
+def register(key: str, oracle: str, doc: str = "", eager: bool = False):
     """Decorator: register a (spark_fn, oracle_sql) pair under ``key``."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
@@ -52,331 +52,9 @@ def register(key: str, oracle: str | None = None, doc: str = "", eager: bool = F
     return wrap
 
 
-# Current driver round.  Bumped once per round when the previous round's
-# CORRECTNESS file is folded into _DRIVER_GREEN below; seeds the canary
-# sample so each round re-checks a different deterministic slice of the
-# already-green keys (VERDICT r3 "Next round" item 3).
-_ROUND: int = 14
-
-# Keys that already hold a green hash-checked row in CORRECTNESS_r01–r03
-# (historical fact, frozen).  The driver's correctness gate walks the dict
-# returned by load_all() front-to-back under a wall-clock budget and in
-# rounds 2 and 3 demonstrably covered exactly the first 50 keys — so every
-# oracle-paired key that has NEVER had a driver row must sit in positions
-# 1..50 this round.  Rotation policy: never-checked oracle keys first
-# (flagships leading), then oracle keys added after the r03 snapshot, then
-# ~10 canary re-checks of previously-green keys, then rows-only keys, then
-# the remaining already-green keys.
-_DRIVER_GREEN: frozenset[str] = frozenset({
-    # CORRECTNESS_r01/r02 (50 distinct keys, all green)
-    "project_cols", "filter_index_range", "filter_token_floor",
-    "filter_company_presence", "filter_hyphen_retry", "filter_skip_terms",
-    "filter_min_length", "join_anti_incremental", "join_deal_filing",
-    "join_fuzzy_entity", "join_chunk_back", "join_org_definition",
-    "join_union_dedup", "agg_count_total", "agg_org_topk",
-    "agg_first_match", "agg_concat_section", "rank_hybrid_top1",
-    "window_chunk_follow", "sort_by_key", "set_union_hits",
-    "set_distinct_urls", "set_distinct_defs", "date_window",
-    "str_strip_parens", "str_drop_last_word", "str_first_token",
-    "str_replace_dash", "str_cik_battery", "str_urlencode",
-    "str_page_clean", "str_truncate", "str_html_to_text",
-    "str_normalize_quotes", "date_format_iso", "math_weighted_sum",
-    "math_sigmoid", "json_parse_toolcall", "json_extract_hits",
-    "json_parse_corrupt_tolerant", "text_lang_id", "text_quality_score",
-    "text_token_count", "text_fingerprint", "text_winnow_fingerprint",
-    "set_distinct_lines", "chunk_fixed", "ner_orgs_regex", "fuzzy_ratio",
-    "text_pii_scrub",
-    # CORRECTNESS_r03.json (50 keys, all green)
-    "extract_section_pipeline", "curation_pipeline",
-    "dedup_exact", "dedup_minhash_lsh", "dedup_minhash_rep",
-    "dedup_ngram_jaccard", "dedup_simhash", "dedup_simhash_neardup",
-    "dedup_components", "dedup_embedding_neardup", "dedup_keep_latest",
-    "ann_bruteforce_topk", "ann_lsh_buckets", "ann_ivf_topk",
-    "math_cosine_sim", "agg_vector_mean", "query_embed_build",
-    "vector_quantize_int8", "rerank_crossencoder",
-    "text_repetition_ratio", "sample_hash_split", "contamination_ngram",
-    "agg_salted_skew", "olap_pricing_summary", "olap_top_revenue_orders",
-    "olap_nation_revenue", "agg_rollup", "agg_cube", "agg_pivot",
-    "agg_unpivot", "agg_percentile", "agg_count_distinct",
-    "join_asof", "join_range_interval", "profile_numeric",
-    "events_tumbling_counts", "events_sliding_counts", "events_sessionize",
-    "join_stream_static", "scan_csv_deals", "filter_exists_skip",
-    "str_regex_extract_cik", "str_lstrip_zeros", "str_build_url",
-    "str_drop_pagenums", "str_collapse_newlines", "str_strip_toc",
-    "str_html_to_text_v2", "str_company_loose", "str_mojibake_repair",
-    # CORRECTNESS_r04.json (46 hash-green rows: the 36 r04 rotation-first
-    # keys below; the other 10 were canary re-passes already listed above)
-    "curation_pipeline_ingest", "sample_domain_cap", "agg_mixture_weights",
-    "text_ttr", "sample_temperature", "sample_apply_mixture",
-    "sample_stratified", "sample_quality_decile", "sample_pack_sequences",
-    "dq_expectations", "dedup_url_canonical", "dedup_exact_normalized",
-    "ann_pq_topk", "ann_ivf_pq", "olap_order_priority",
-    "olap_returned_customers", "olap_shipmode_priority",
-    "olap_promo_revenue", "olap_disjunctive_filter", "olap_top_supplier",
-    "olap_global_sales_gap", "agg_grouping_sets", "agg_histogram",
-    "join_stream_stream", "cdc_scd2_history", "events_session_stats",
-    "window_retention_cohort", "agg_funnel", "events_gap_fill",
-    "events_moving_zscore", "window_running_total", "join_salted_skew",
-    "text_unigram_logprob", "text_token_count_bpe", "text_ngram_topk",
-    "text_tfidf_topk",
-    # CORRECTNESS_r05.json (19 hash-green rows: the r05 rotation-first keys)
-    "join_bucketed_colocated", "dedup_substring_spans", "ann_ivf_pq_refine",
-    "text_gopher_rules", "dedup_paragraph", "dedup_span_merge",
-    "text_dsir_select", "olap_customer_orders_dist",
-    "olap_small_quantity_revenue", "olap_large_orders",
-    "olap_late_sole_supplier", "olap_volume_shipping", "olap_market_share",
-    "olap_product_profit", "olap_best_supplier_per_part",
-    "olap_important_parts", "olap_supplier_part_counts",
-    "olap_forecast_revenue", "olap_excess_shippers",
-    # CORRECTNESS_r06.json (41 hash-green rows: the 37 r06 rotation-first
-    # keys below; the other 4 were canary re-passes already listed above)
-    "pipeline_pretrain_corpus", "pipeline_hybrid_search",
-    "graph_pagerank", "agg_source_overlap", "eval_ann_recall",
-    "rank_rrf_fusion", "rank_mmr_diversify", "sample_kcenter_diverse",
-    "dedup_semantic_semdedup", "agg_embedding_covariance",
-    "eval_matryoshka_recall", "eval_embedding_drift",
-    "dq_embedding_norms", "eval_retrieval_rank_corr",
-    "ann_ivf_pq_refine_probe", "ann_ivf_pq_stored", "sort_zorder",
-    "agg_cms_estimate", "dedup_containment", "entity_resolution_clusters",
-    "eval_minhash_accuracy", "dedup_source_flow",
-    "graph_item_transitions", "agg_market_basket",
-    "graph_degree_distribution", "eval_markov_predictor",
-    "sample_logprob_bucket", "text_hash_classifier", "text_zipf_slope",
-    "scan_jsonl_roundtrip", "scan_csv_corrupt_permissive",
-    "json_variant_extract", "str_xml_extract", "str_try_cast_battery",
-    "str_multiformat_dates", "olap_pricing_pipe", "join_asof_forward",
-    # CORRECTNESS_r07.json (49 hash-green rows: the 45 r07 rotation-first
-    # keys below; the other 4 were canary re-passes already listed above)
-    "pipeline_training_export", "eval_tokenizer_fertility",
-    "agg_context_window_share", "sample_epoch_shuffle",
-    "dq_outlier_iqr", "olap_skyline_suppliers", "events_top_paths",
-    "sample_strata_neyman", "agg_rate_wilson_ci",
-    "eval_self_similarity_sample", "dedup_signature_banded",
-    "join_asof_nearest", "olap_yoy_growth", "window_percent_change",
-    "olap_abc_analysis",
-    "agg_histogram_log_bins", "agg_trend_regression", "join_null_safe_dim",
-    "agg_numeric_correlations", "window_value_percentiles",
-    "olap_price_volume_mix", "olap_median_order_by_segment",
-    "dq_duplicate_invoices",
-    "text_keyphrase_rake", "text_c4_line_filter",
-    "text_code_quality_rules", "text_readability_fk",
-    "eval_langid_confusion", "eval_langid_auc", "text_langid_trained",
-    "text_bigram_logprob", "agg_benford_digit_profile",
-    "text_boilerplate_lines", "str_split_identifiers",
-    "text_extractive_summary",
-    "text_bm25_topk", "text_bpe_encode", "text_bpe_merge_candidates",
-    "sample_reservoir_weighted", "sample_balanced_classes",
-    "text_collocation_pmi", "text_ngram_novelty", "agg_entropy_by_source",
-    "text_stopword_induction", "text_vocab_coverage_curve",
-    # CORRECTNESS_r08.json (48 hash-green rows: the 40 r08 rotation-first
-    # keys below; the other 8 were canary re-passes already listed above)
-    "text_hapax_ratio", "text_word_burstiness", "text_charset_profile",
-    "dq_skew_report", "dq_completeness_profile",
-    "dq_referential_integrity", "dq_uniqueness_audit", "dq_file_inventory",
-    "dq_chi_square_independence", "eval_jackknife_se",
-    "pipeline_dq_scorecard", "join_scd2_pointintime", "events_attribution",
-    "events_anomaly_mad", "events_funnel_windowed",
-    "agg_incremental_maintain", "agg_ab_test_stats", "agg_rfm_segmentation",
-    "agg_seasonality_profile", "events_slo_burn_rate",
-    "agg_new_vs_returning", "events_interarrival_profile",
-    "dq_event_order_violations", "events_peak_concurrency",
-    "events_bounce_rate", "agg_activity_streaks", "events_error_impact",
-    "events_time_to_value", "eval_forecast_seasonal_naive",
-    "events_pit_features", "eval_psi_drift", "events_changepoint_cusum",
-    "agg_winsorized_mean", "events_fraud_velocity", "agg_ltv_curve",
-    "eval_ab_power_mde", "agg_user_growth_curve", "agg_dau_mau_stickiness",
-    "cascade_title_check", "cascade_toc_check",
-    # CORRECTNESS_r09.json (50 hash-green rows: the 16 r09 rotation-first
-    # keys below; the other 34 were canary/reverify re-passes already
-    # listed above)
-    "join_asof_tolerance", "eval_dedup_cluster_profile",
-    "agg_dedup_impact_by_source", "phrase_catalog", "ner_orgs",
-    "sample_hard_negatives", "eval_ndcg_quantized", "join_interval_overlap",
-    "sample_token_budget", "agg_source_gini", "eval_calibration_bins",
-    "dq_k_anonymity", "dq_freshness_lag", "graph_triangle_count",
-    "eval_ks_drift", "sample_anneal_mix",
-    # CORRECTNESS_r10.json (50 hash-green rows: the 33 r10 graduation
-    # keys below earned their FIRST value-level hash rows; the other 17
-    # were canary/straggler re-passes already listed above)
-    "abbrev_enrich", "chunk_split_overlap", "dedup_image_phash",
-    "embed_text", "fuzzy_partial_ratio", "header_cascade",
-    "llm_classify_doc", "llm_extract_initiator",
-    "multimodal_audio_fingerprint", "multimodal_audio_meta",
-    "multimodal_frame_sample", "multimodal_image_meta",
-    "multimodal_image_phash", "multimodal_video_fingerprint",
-    "multimodal_video_meta", "pipeline_crawler", "pipeline_crawler_audit",
-    "pipeline_separator", "scan_kv_store", "scan_orc_roundtrip",
-    "sink_csv_append", "sink_csv_union", "sink_fs_dump",
-    "sink_kv_roundtrip", "sink_kv_store", "sink_kv_upsert", "sink_log",
-    "source_http_doc", "source_http_fts", "str_normalize_unicode",
-    "stream_dedup_first_seen", "stream_upsert_to_kv",
-    "text_compression_ratio",
-    # CORRECTNESS_r11.json (50 hash-green rows: the 11 _ORACLE_BACKLOG
-    # keys below earned their FIRST value-level hash rows — emptying the
-    # rows-only class entirely; the other 39 were head-cargo/reverify/
-    # canary re-passes already listed above)
-    "dedup_audio_fingerprint", "dedup_video_fingerprint", "sink_pyds_kv",
-    "source_pyds_fts", "agg_percentile_approx", "events_approx_distinct",
-    "agg_hll_daily_union", "dedup_bloom_prefilter", "vector_pca_project",
-    "pipeline_incremental_ingest", "ann_ivf_trained",
-    # CORRECTNESS_r13.json (50 hash-green rows: the 4 r13 head-cargo keys
-    # below earned their FIRST value-level hash rows; the other 46 were
-    # reverify/canary/staleness-tail re-passes already listed above)
-    "pipeline_bpe_train", "pipeline_classifier_train",
-    "dedup_minhash_store_write", "dedup_minhash_incremental",
-})
-
-# Keys without CLEAN driver evidence in the window.  r14: none.
-_EVIDENCE_FIX: tuple[str, ...] = ()
-
-# r14 head cargo: the round's NEW keys — the two ordered ones
-# (VERDICT r13 items 2 and 4: the classifier train→persist→apply
-# distillation flagship and the multimodal interleaved packer) plus two
-# unordered loop-closers built on the same store pattern (the BPE
-# train→persist→encode distill and the minhash band-store partition-
-# scoped COMMIT).  New oracle keys always lead the window so their
-# first driver rows land the same round they ship.
-_ROTATION_FIRST: tuple[str, ...] = (
-    "pipeline_classifier_distill",
-    "sample_pack_interleaved",
-    "pipeline_bpe_distill",
-    "dedup_minhash_store_compact",
-    "pipeline_ingest_cycle",
-)
-
-# r12: EMPTY — all 11 r11 backlog keys (the 4 slipped r10 graduations,
-# the bounded-error sketch trio, the exact-oracle bloom/PCA pair, the
-# ingest flagship and trained-IVF) earned their first value-level hash
-# rows in CORRECTNESS_r11; the rows-only class is empty and stays
-# empty.  A future genuinely hash-inexpressible key re-enters here.
-_ORACLE_BACKLOG: tuple[str, ...] = ()
-
-# Already-green keys whose PLANS changed this round — ranked directly
-# behind the backlog (and AHEAD of the canaries: changed-plan evidence
-# can never again lose the slot race to re-checks of unchanged keys —
-# the r10 lesson).  r13's agg_rfm_segmentation entry landed its fused-cut
-# hash row in CORRECTNESS_r13, so it rotates out.  r14 is the first
-# OPTIMIZATION round, so the list is large: every key whose physical
-# plan the round rewrote (per-side norms, codegen shingle/pair builders,
-# packed-codebook argmax, single-pass banding, window-form spans,
-# map-side distincts, the bitmask overlap matrix, lazy iterative
-# checkpoints, the collect-free two-phase rank) queues for a fresh
-# driver hash row ahead of the canary tail.
-_REVERIFY: tuple[str, ...] = (
-    "agg_source_overlap",
-    "ann_ivf_pq",
-    "ann_ivf_pq_refine",
-    "ann_ivf_pq_refine_probe",
-    "ann_ivf_pq_stored",
-    "ann_ivf_topk",
-    "ann_ivf_trained",
-    "ann_pq_topk",
-    "ann_bruteforce_topk",
-    "agg_market_basket",
-    "dedup_containment",
-    "dedup_embedding_neardup",
-    "dedup_minhash_incremental",
-    "dedup_minhash_lsh",
-    "dedup_minhash_store_write",
-    "dedup_ngram_jaccard",
-    "dedup_paragraph",
-    "dedup_semantic_semdedup",
-    "dedup_simhash",
-    "dedup_span_merge",
-    "dedup_substring_spans",
-    "dedup_image_phash",
-    "eval_matryoshka_recall",
-    "eval_minhash_accuracy",
-    "eval_ndcg_quantized",
-    "extract_section_pipeline",
-    "multimodal_image_phash",
-    "pipeline_classifier_train",
-    "pipeline_hybrid_search",
-    "rank_mmr_diversify",
-    "rank_rrf_fusion",
-    "graph_pagerank",
-    "pipeline_bpe_train",
-    "sample_logprob_bucket",
-    "agg_rfm_segmentation",
-    "text_zipf_slope",
-    "pipeline_pretrain_corpus",
-)
-
-# Rows-only keys WITH driver evidence.  EMPTY since late r11: all seven
-# keys that entered the round oracle-less graduated — the bounded-error
-# sketch trio, the md5-sliced bloom prefilter (full exact oracle), the
-# rounded-covariance PCA projection (inline numpy golden), the ingest
-# flagship (full exact oracle — its bloom was the md5-sliced one), and
-# trained-IVF (recall-floor summary with an exact ground-truth anchor).
-# The tuple and the rank-6 branch below stay: a future genuinely
-# hash-inexpressible key re-enters here rather than resurrecting the
-# machinery.
-_ROWS_ONLY_EVIDENCED: tuple[str, ...] = ()
-
-# Number of previously-green keys re-checked per round, drawn
-# OLDEST-EVIDENCE-FIRST from _DRIVER_GREEN (VERDICT r9 item 5) so a
-# regression in r01-era code cannot stay invisible forever.
-# r13: STEADY-STATE at 12 (the policy VERDICT r11 item 7 set and
-# VERDICT r12 item 3 confirms): the r12 one-round burn cleared the
-# r2/r3 bands (post-r12 histogram: 34 keys at r4, oldest), so 12
-# canaries per round clears the r4 band in ~3 rounds while leaving
-# ~35 window seats for new keys, reverifies, and the staleness-ordered
-# green tail.  The canary tail points at the r4 band automatically
-# (oldest-evidence-first over the regenerated _evidence.py).
-_CANARY_SLOTS: int = 12
-
-
-def canary_keys(round_no: int = _ROUND) -> tuple[str, ...]:
-    """Deterministic per-round sample of already-green keys to re-check,
-    drawn OLDEST-EVIDENCE-FIRST (VERDICT r9 item 5): sort the green pool
-    by the round of each key's most recent driver row (_evidence.py,
-    regenerated per round by tools/make_evidence_map.py), tiebreak by a
-    round-seeded shuffle so equally-stale keys rotate deterministically.
-    The uniform sampler this replaces left 73 keys unchecked since r2/r3
-    behind six rounds of shared-helper churn.  Keys already scheduled
-    this round (head cargo / backlog / reverify) are excluded — they get
-    fresh rows anyway, so a canary slot on them would be wasted."""
-    import random
-
-    from ._evidence import LAST_GREEN
-
-    scheduled = (
-        set(_ROTATION_FIRST)
-        | set(_ORACLE_BACKLOG)
-        | set(_REVERIFY)
-        | set(_EVIDENCE_FIX)
-    )
-    pool = sorted(k for k in _DRIVER_GREEN if k not in scheduled)
-    rng = random.Random(round_no)
-    tie = {k: rng.random() for k in pool}
-    pool.sort(key=lambda k: (LAST_GREEN.get(k, 0), tie[k]))
-    return tuple(pool[: _CANARY_SLOTS])
-
-
 def load_all() -> dict[str, Query]:
-    """Import every module that registers queries (idempotent).
-
-    Returned order implements the r14 gate-window rotation (steady
-    state since r13, VERDICT r12 item 3):
-      0. head cargo (_ROTATION_FIRST: the 2 new r14 keys — the
-         classifier train→persist→apply distillation flagship and the
-         interleaved multimodal packer, VERDICT r13 items 2 and 4);
-      1. evidence-fix keys (_EVIDENCE_FIX: empty in r14);
-      2. oracle graduations (_ORACLE_BACKLOG: empty — the rows-only
-         class emptied in r11); the rank-function fallback still
-         catches any key registered without a scheduling entry;
-      3. green keys whose PLANS changed THIS round (_REVERIFY: empty
-         so far in r14 — the r13 agg_rfm_segmentation entry landed);
-      4. 12 canary re-checks of previously-green keys, drawn
-         oldest-evidence-first (the tail now points at the r5 band —
-         5 keys — then the 34-key r6 band, per VERDICT r13 item 3);
-      5. the remaining already-green oracle keys, ALSO staleness-
-         ordered (oldest evidence first, round-seeded tiebreak) so a
-         wall-clock budget that stretches past the canaries keeps
-         burning the oldest band;
-      6. rows-only keys that already hold driver rows (weakest
-         evidence per run, so they queue last) — EMPTY since late r11.
-    """
+    """Import every module that registers queries (idempotent) and return
+    the registry in registration order."""
     from .operators import (  # noqa: F401
         relational,
         scalar_queries,
@@ -403,42 +81,4 @@ def load_all() -> dict[str, Query]:
         classifier_pipeline,
     )
 
-    import random
-
-    from ._evidence import LAST_GREEN
-
-    fixes = {k: i for i, k in enumerate(_EVIDENCE_FIX)}
-    canaries = {k: i for i, k in enumerate(canary_keys())}
-    first = {k: i for i, k in enumerate(_ROTATION_FIRST)}
-    backlog = {k: i for i, k in enumerate(_ORACLE_BACKLOG)}
-    reverify = {k: i for i, k in enumerate(_REVERIFY)}
-    rows_only = {k: i for i, k in enumerate(_ROWS_ONLY_EVIDENCED)}
-    # the green band behind the canaries is staleness-ordered too
-    # (VERDICT r10 item 3): oldest driver evidence first, round-seeded
-    # tiebreak so equally-stale keys rotate deterministically
-    greens = sorted(_DRIVER_GREEN)
-    rng = random.Random(_ROUND * 7919)
-    tie = {k: rng.random() for k in greens}
-    greens.sort(key=lambda k: (LAST_GREEN.get(k, 0), tie[k]))
-    green_rank = {k: i for i, k in enumerate(greens)}
-
-    def rank(kv: tuple[str, Query]) -> tuple[int, int]:
-        key, q = kv
-        if key in first:
-            return (0, first[key])
-        if key in fixes:
-            return (1, fixes[key])
-        if key in backlog:
-            return (2, backlog[key])
-        if key in reverify and q.oracle is not None:
-            return (3, reverify[key])
-        if key in canaries:
-            return (4, canaries[key])
-        if q.oracle is None:
-            # rows-only: every key here holds driver evidence (r04-r08)
-            return (6, rows_only.get(key, len(_ROWS_ONLY_EVIDENCED)))
-        if key in _DRIVER_GREEN:
-            return (5, green_rank[key])
-        return (2, len(_ORACLE_BACKLOG))  # new oracle key → backlog rank
-
-    return dict(sorted(REGISTRY.items(), key=rank))
+    return REGISTRY

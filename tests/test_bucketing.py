@@ -150,9 +150,11 @@ def test_register_views_performs_zero_writes(spark):
     flag, so a write here means a key forgot to declare eager=True."""
     import os
 
-    from mergeextractor_spark.__main__ import _EAGER_KEYS, register_views
+    from mergeextractor_spark.__main__ import register_views
+    from mergeextractor_spark.registry import load_all
 
-    assert {"dedup_components", "join_bucketed_colocated"} <= set(_EAGER_KEYS)
+    reg = load_all()
+    assert reg["dedup_components"].eager and reg["join_bucketed_colocated"].eager
 
     wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
 

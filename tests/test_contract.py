@@ -31,102 +31,19 @@ def test_every_oracle_key_has_a_query(spark):
         assert len(inspect.signature(fn).parameters) == 2
 
 
-def test_gate_window_rotation_order():
-    """The driver walks queries() in order under a wall-clock budget that
-    historically covers ~50 keys per round.  The r14 rotation (steady
-    state since r13): (a) the 5 NEW r14 keys lead (the classifier
-    distillation flagship, the interleaved multimodal packer, the BPE
-    distill loop, the minhash store commit, and the composed ingest
-    cycle — new oracle keys always earn their first driver rows the
-    round they ship), then (b) the changed-plan reverify band — 37 keys
-    this round: r14 is the first OPTIMIZATION round and every key whose
-    physical plan it rewrote queues for a fresh hash row ahead of any
-    re-check of unchanged greens,
-    then (c) 12 staleness-ordered canaries drawn from the r5/r6
-    evidence bands, then staleness-ordered green re-checks.  The
-    rows-only class is empty — every registered key carries an
-    oracle."""
+def test_load_all_returns_registration_order():
+    """load_all() hands back the registry as registered: same order, same
+    Query objects on every call, and the driver contract's two maps cover
+    the same keys."""
     from mergeextractor_spark import registry
-    from mergeextractor_spark._evidence import LAST_GREEN
 
+    first = registry.load_all()
+    assert list(first) == list(registry.REGISTRY)
+    second = registry.load_all()
+    assert list(second) == list(first)
+    assert all(second[k] is q for k, q in first.items())
     mod = _load_entry()
-    qs, osql = mod.queries(), mod.oracle_sql()
-    keys = list(qs)
-
-    n_fix = len(registry._EVIDENCE_FIX)
-    n_first = len(registry._ROTATION_FIRST)
-    n_backlog = len(registry._ORACLE_BACKLOG)
-    n_rev = len(registry._REVERIFY)
-    # window arithmetic: 5 new keys + 37 changed-plan reverifies + 12
-    # canaries = 54-key head — the optimization round spends its whole
-    # ~50-key wall budget proving the rewritten plans still hash.
-    assert n_fix == 0 and n_first == 5 and n_backlog == 0 and n_rev == 37
-    assert registry._CANARY_SLOTS + n_first + n_backlog + n_rev <= 54
-    assert registry._CANARY_SLOTS >= 12  # VERDICT r7 item 3 / r8 item 5
-
-    at = 0
-    assert keys[at : at + n_first] == list(registry._ROTATION_FIRST)
-    for key in registry._ROTATION_FIRST:
-        # r14 head cargo: NEW keys — each carries an oracle and has no
-        # driver row yet (first hash rows land this round)
-        assert key in osql and key not in registry._DRIVER_GREEN, key
-    at += n_first + n_fix
-
-    # the graduations ride directly behind the head band: every one
-    # must now carry an oracle (that is the graduation) and none can
-    # already hold a hash-green driver row
-    assert keys[at : at + n_backlog] == list(registry._ORACLE_BACKLOG)
-    for key in registry._ORACLE_BACKLOG:
-        assert key in osql, f"graduated key {key!r} lost its oracle"
-        assert key not in registry._DRIVER_GREEN, key
-    at += n_backlog
-
-    # keys whose plans changed THIS round re-hash before any re-check
-    # of unchanged greens
-    assert keys[at : at + n_rev] == list(registry._REVERIFY)
-    for key in registry._REVERIFY:
-        assert key in osql and key in registry._DRIVER_GREEN, key
-    at += n_rev
-
-    canaries = registry.canary_keys()
-    assert len(canaries) == registry._CANARY_SLOTS
-    assert keys[at : at + len(canaries)] == list(canaries)
-    # Canaries are a deterministic, staleness-ordered sample of green keys
-    assert registry.canary_keys() == registry.canary_keys()
-    assert set(canaries) <= registry._DRIVER_GREEN
-    assert canaries != registry.canary_keys(registry._ROUND + 1)
-    # oldest-evidence-first (VERDICT r9 item 5): no unscheduled green key
-    # may be STALER than the stalest drawn canary
-    scheduled = (
-        set(registry._ROTATION_FIRST)
-        | set(registry._ORACLE_BACKLOG)
-        | set(registry._REVERIFY)
-        | set(registry._EVIDENCE_FIX)
-    )
-    max_canary_age = max(LAST_GREEN[k] for k in canaries)
-    undrawn = [
-        k
-        for k in registry._DRIVER_GREEN
-        if k not in scheduled and k not in canaries
-    ]
-    assert all(LAST_GREEN[k] >= max_canary_age for k in undrawn)
-    at += len(canaries)
-
-    # positions behind the canaries: green oracle keys, ALSO staleness-
-    # ordered (VERDICT r10 item 3 — a stretched wall budget keeps
-    # burning the tail). The rows-only class is EMPTY since late r11 —
-    # every registered key carries a value-level oracle.
-    rows_only = [k for k in keys if k not in osql]
-    assert sorted(rows_only) == sorted(registry._ROWS_ONLY_EVIDENCED)
-    assert rows_only == [], "every registered key must carry an oracle"
-    mid_green = [k for k in keys[at:] if k in osql]
-    assert set(mid_green) <= registry._DRIVER_GREEN
-    ages = [LAST_GREEN.get(k, 0) for k in mid_green]
-    assert ages == sorted(ages), "green band must be oldest-evidence-first"
-    # the ordering is deterministic within a round...
-    assert list(mod.queries()) == keys
-    # ...and NOT the sorted/import order (the tiebreak rotates per round)
-    assert mid_green != sorted(mid_green)
+    assert set(mod.queries()) == set(mod.oracle_sql())
 
 
 def test_sql_view_surface(spark):
@@ -154,15 +71,13 @@ def test_sql_view_results_match_dataframe_surface(spark):
     DataFrame results."""
     import random
 
-    from mergeextractor_spark.__main__ import _EAGER_KEYS, register_views
+    from mergeextractor_spark.__main__ import register_views
     from mergeextractor_spark.registry import load_all
 
     sf = "/root/testdata/sf0.001"
     register_views(spark, sf)
     reg = load_all()
-    eligible = sorted(
-        k for k, q in reg.items() if q.oracle is not None and k not in _EAGER_KEYS
-    )
+    eligible = sorted(k for k, q in reg.items() if not q.eager)
     sample = random.Random(9).sample(eligible, 20)
     for key in sample:
         via_df = reg[key].spark(spark, sf)

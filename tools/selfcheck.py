@@ -97,7 +97,7 @@ def main():
         )
     else:
         spark = get_spark("selfcheck")
-    n_pass = n_fail = n_rowsonly = 0
+    n_pass = n_fail = 0
     failures = []
     for key in keys:
         q = reg[key]
@@ -113,11 +113,6 @@ def main():
             n_fail += 1
             failures.append(key)
             print(f"FAIL {key}: spark error\n{traceback.format_exc()}")
-            continue
-        if q.oracle is None:
-            n_rowsonly += 1
-            if not args.quiet:
-                print(f"rows {key}: {len(srows)} rows (rows-only) [{time.time()-t0:.1f}s]")
             continue
         try:
             opdf = con.execute(q.oracle).df()
@@ -148,7 +143,7 @@ def main():
             if not args.quiet:
                 print(f"PASS {key} ({len(srows)} rows) [{time.time()-t0:.1f}s]")
 
-    print(f"\n== {n_pass} pass, {n_rowsonly} rows-only, {n_fail} fail / {len(keys)} keys")
+    print(f"\n== {n_pass} pass, {n_fail} fail / {len(keys)} keys")
     if failures:
         print("failing:", ",".join(failures))
         sys.exit(1)
