@@ -17,6 +17,10 @@ pushdown), which is the standard way this stays sub-quadratic.
 
 from __future__ import annotations
 
+import glob
+import os
+import shutil
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
@@ -1585,8 +1589,6 @@ def ensure_minhash_store(spark: SparkSession, sf_dir: str) -> str:
     silently reused against an oracle that recomputes bands from source
     (ADVICE r13)."""
     import hashlib
-    import os
-    import shutil
 
     from .scale_queries import _source_mtime
 
@@ -1602,6 +1604,30 @@ def ensure_minhash_store(spark: SparkSession, sf_dir: str) -> str:
         shutil.rmtree(path, ignore_errors=True)
         minhash_store_write(spark, sf_dir, path)
     return path
+
+
+def _aside(target: str) -> str:
+    """Where a commit parks a partition dir while its replacement moves in;
+    the leading dot hides it from Spark's file listing."""
+    head, name = os.path.split(target)
+    return os.path.join(head, f".{name}.old")
+
+
+def _restore_asides(path: str, staging: str | None = None) -> None:
+    """Settle the partitions of the store at ``path`` left renamed aside.
+    A commit that raised passes its ``staging``: the staged copy goes back
+    there and the aside is restored.  After a killed process, a copy
+    already in place holds every aside row, so only missing ones return."""
+    for old in glob.glob(os.path.join(path, "band=*", ".bpfx=*.old")):
+        head, name = os.path.split(old)
+        target = os.path.join(head, name[1 : -len(".old")])
+        if not os.path.isdir(target):
+            os.rename(old, target)
+        elif staging:
+            os.rename(target, os.path.join(staging, os.path.relpath(target, path)))
+            os.rename(old, target)
+        else:
+            shutil.rmtree(old)
 
 
 def minhash_store_read(spark: SparkSession, path: str) -> DataFrame:
@@ -1784,8 +1810,6 @@ def ensure_minhash_commit_store(spark: SparkSession, sf_dir: str,
     by a commit.  Each commit-writing key passes its own tag so their
     stores never cross-contaminate either."""
     import hashlib
-    import os
-    import shutil
 
     from .scale_queries import _source_mtime
 
@@ -1807,29 +1831,23 @@ def minhash_store_commit(spark: SparkSession, path: str,
                          bands_new: DataFrame) -> int:
     """Commit a batch's band keys into the store, rewriting ONLY the
     (band, bucket-prefix) partitions the batch lands in — the
-    index-maintenance write production runs per ingest cycle.  The
-    merged frame (touched-partition existing rows ∪ new rows, DISTINCT
-    so re-commits are idempotent) is written to a SIBLING STAGING
-    prefix and the touched partition directories are renamed into
-    place after the job completes — the stage-and-atomic-rename
-    protocol this docstring previously only pointed production at.
-    One write job materializes the merge (r14: the previous
-    checkpoint-then-dynamic-overwrite shape paid the merge twice —
-    once into executor storage, once into files — ~1.2 s executor-CPU
-    per commit at sf0.1 for the identical on-disk result), and no task
-    ever reads a file the commit is about to replace because the
-    replacement happens driver-side after the write.  Returns the
-    number of partitions rewritten — bounded by bands x 16 at fixture
-    parameters regardless of batch or corpus size."""
-    import os
-    import shutil
-
+    index-maintenance write production runs per ingest cycle.  One write
+    job puts the merged frame (touched-partition existing rows ∪ new
+    rows, DISTINCT so re-commits are idempotent) under a sibling staging
+    prefix; the touched partition dirs are then swapped in driver-side,
+    so no task reads a file the commit replaces.  Each is renamed aside
+    first and the asides are deleted only after every swap; a raising
+    swap restores every aside and keeps the staging prefix, so a
+    replayed commit lands the same store as a clean one
+    (``_restore_asides``).  Returns the number of partitions rewritten —
+    bounded by bands x 16 at fixture parameters."""
     new = bands_new.withColumn("bpfx", F.substring("bucket", 1, 1)).select(
         "doc_id", "bucket", "band", "bpfx"
     )
     parts = new.select("band", "bpfx").distinct().collect()  # <= bands x 16
     if not parts:
         return 0  # empty batch: nothing lands, no partition is rewritten
+    _restore_asides(path)
     # EXACT (band, bpfx) pairs — an isin(bands) & isin(prefixes) product
     # would drag untouched partitions into the rewrite (caught by the
     # mtime pin in tests/test_minhash_compact.py on first write)
@@ -1856,33 +1874,36 @@ def minhash_store_commit(spark: SparkSession, path: str,
         existing.unionByName(new).repartition("band", "bpfx").dropDuplicates()
     )
     staging = f"{path.rstrip('/')}__stage_{os.getpid()}"
-    try:
-        merged.write.mode("overwrite").partitionBy("band", "bpfx").parquet(
-            staging
-        )
-        # same-filesystem directory renames: each touched partition dir
-        # swaps in whole (a crash mid-loop is recovered by the replay —
-        # re-commit is idempotent by the DISTINCT union).  The loop is
-        # pure driver-side filesystem metadata work on <= bands x 16
-        # independent directories — threaded (r15, VERDICT item 1c: the
-        # serial loop charged one durable-volume round-trip per
-        # partition to the commit's wall).  Band-level parent dirs are
-        # pre-created serially so the workers never race makedirs.
-        for band in {r.band for r in parts}:
-            os.makedirs(os.path.join(path, f"band={band}"), exist_ok=True)
+    merged.write.mode("overwrite").partitionBy("band", "bpfx").parquet(staging)
+    # same-filesystem directory renames: each touched partition dir
+    # swaps in whole.  The loop is pure driver-side filesystem metadata
+    # work on <= bands x 16 independent directories — threaded (r15,
+    # VERDICT item 1c: the serial loop charged one durable-volume
+    # round-trip per partition to the commit's wall).  Band-level parent
+    # dirs are pre-created serially so the workers never race makedirs.
+    for band in {r.band for r in parts}:
+        os.makedirs(os.path.join(path, f"band={band}"), exist_ok=True)
+    rels = [os.path.join(f"band={r.band}", f"bpfx={r.bpfx}") for r in parts]
 
-        def _swap(r) -> None:
-            rel = os.path.join(f"band={r.band}", f"bpfx={r.bpfx}")
-            target = os.path.join(path, rel)
-            shutil.rmtree(target, ignore_errors=True)
-            shutil.move(os.path.join(staging, rel), target)
+    def _swap(rel: str) -> str | None:
+        target, old = os.path.join(path, rel), None
+        if os.path.isdir(target):
+            old = _aside(target)
+            shutil.move(target, old)
+        shutil.move(os.path.join(staging, rel), target)
+        return old
 
-        from concurrent.futures import ThreadPoolExecutor
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(max_workers=min(16, len(parts))) as pool:
-            list(pool.map(_swap, parts))
-    finally:
-        shutil.rmtree(staging, ignore_errors=True)
+    with ThreadPoolExecutor(max_workers=min(16, len(parts))) as pool:
+        try:
+            olds = [o for o in pool.map(_swap, rels) if o]
+        except BaseException:
+            pool.shutdown(wait=True)  # let in-flight swaps land first
+            _restore_asides(path, staging)
+            raise
+        list(pool.map(shutil.rmtree, olds))
+    shutil.rmtree(staging, ignore_errors=True)
     return len(parts)
 
 

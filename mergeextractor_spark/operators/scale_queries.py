@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from ..registry import register
 from ._util import t, r4, spread
-from .vector_queries import assign_nearest, cosine, cosine_pre, dot, l2norm
+from .vector_queries import assign_nearest, cosine_pre, dot, l2norm
 
 N_CENTROIDS = 4
 N_QUERIES = 10
@@ -894,8 +894,6 @@ def ann_ivf_pq_refine_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Bucketed co-located join: the zero-shuffle fact-to-fact join.
 
 DEFAULT_N_BUCKETS = 8
-# Back-compat alias for external readers; the live value is per-session conf.
-N_BUCKETS = DEFAULT_N_BUCKETS
 
 
 def _n_buckets(spark: SparkSession) -> int:

@@ -3,9 +3,8 @@ agg_vector_mean, §2.8 query_embed_build) + ANN similarity search over the
 `embeddings` fixture (engine extension for training-data pipelines).
 
 Cosine math stays in native array expressions (`zip_with` + `aggregate`,
-all JVM-side); the numpy pandas-UDF fast path for very wide vectors lives
-in functions/vectors.py. Oracle twins compute the same double-precision
-math via unnest in DuckDB; outputs rounded to 4 decimals.
+all JVM-side). Oracle twins compute the same double-precision math via
+unnest in DuckDB; outputs rounded to 4 decimals.
 """
 
 from __future__ import annotations
@@ -17,15 +16,9 @@ from ..registry import register
 from ._util import t, r4, spread, truncate_lineage, golden_path
 
 
-# The vector helpers accept Column | str (r15): a str argument is a SQL
-# fragment (usually a plain column name), and an all-str call arrives as
-# ONE parsed SQL expression instead of ~40 py4j round trips building the
-# zip_with/aggregate lambdas through the Column DSL.  Measured (guide §1
-# empirical loop): each DSL dot()/l2norm() costs ~70 ms of DRIVER-side
-# plan construction, paid per bench sample by every ANN/rank key —
-# construction was a third to half of those keys' bench medians.  The
-# parsed tree is the same arithmetic in the same order (0.0D == lit(0.0),
-# CAST(x AS DOUBLE) == x.cast("double")), so results are bit-identical.
+# The vector helpers take SQL expression strings and return ONE parsed
+# expression: the same lambdas built through the Column DSL cost ~40 py4j
+# round trips, ~70 ms of driver-side construction per dot()/l2norm() (r15).
 
 
 def _dot_sql(a: str, b: str) -> str:
@@ -42,36 +35,19 @@ def _l2norm_sql(a: str) -> str:
     )
 
 
-def dot(a: "Column | str", b: "Column | str") -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(_dot_sql(a, b))
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def dot(a: str, b: str) -> Column:
+    return F.expr(_dot_sql(a, b))
 
 
-def l2norm(a: "Column | str") -> Column:
-    if isinstance(a, str):
-        return F.expr(_l2norm_sql(a))
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double")))
+def l2norm(a: str) -> Column:
+    return F.expr(_l2norm_sql(a))
 
 
-def cosine(a: "Column | str", b: "Column | str") -> Column:
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(
-            f"{_dot_sql(a, b)} / ({_l2norm_sql(a)} * {_l2norm_sql(b)})"
-        )
-    return dot(a, b) / (l2norm(a) * l2norm(b))
+def cosine(a: str, b: str) -> Column:
+    return F.expr(f"{_dot_sql(a, b)} / ({_l2norm_sql(a)} * {_l2norm_sql(b)})")
 
 
-def cosine_pre(
-    a: "Column | str", b: "Column | str",
-    na: "Column | str", nb: "Column | str",
-) -> Column:
+def cosine_pre(a: str, b: str, na: str, nb: str) -> Column:
     """Cosine with PRE-COMPUTED per-side L2 norms: dot(a, b) / (na * nb).
 
     Pair-scoring stages (corpus x queries) recompute both norms per PAIR
@@ -82,11 +58,7 @@ def cosine_pre(
     so every result — and every oracle hash — is unchanged by construction
     (measured ~2.5x executor-CPU on the bruteforce pair stage,
     OPTIMIZATION_r14.md)."""
-    if all(isinstance(x, str) for x in (a, b, na, nb)):
-        return F.expr(f"{_dot_sql(a, b)} / ({na} * {nb})")
-    na = F.col(na) if isinstance(na, str) else na
-    nb = F.col(nb) if isinstance(nb, str) else nb
-    return dot(a, b) / (na * nb)
+    return F.expr(f"{_dot_sql(a, b)} / ({na} * {nb})")
 
 
 def assign_nearest(
@@ -935,21 +907,21 @@ MRL_DIM = 32  # truncation prefix (full fixture dim: 64)
 )
 def eval_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = spread(t(spark, sf_dir, "embeddings"))
-    trunc = lambda c: F.slice(c, 1, MRL_DIM)
+    trunc = lambda c: f"slice({c}, 1, {MRL_DIM})"
     # full and truncated norms once per side (cosine_pre): each pair pays
     # two dots instead of two dots + four norms
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"),
         F.col("embedding").alias("qe"),
         l2norm("embedding").alias("qn"),
-        l2norm(trunc(F.col("embedding"))).alias("qnt"),
+        l2norm(trunc("embedding")).alias("qnt"),
     )
     scored = (
         e.select(
             "vec_id",
             "embedding",
             l2norm("embedding").alias("an"),
-            l2norm(trunc(F.col("embedding"))).alias("ant"),
+            l2norm(trunc("embedding")).alias("ant"),
         )
         .crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("qid"))
@@ -960,8 +932,7 @@ def eval_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "embedding", "qe", "an", "qn"
             ).alias("c_full"),
             cosine_pre(
-                trunc(F.col("embedding")), trunc(F.col("qe")),
-                F.col("ant"), F.col("qnt"),
+                trunc("embedding"), trunc("qe"), "ant", "qnt"
             ).alias("c_trunc"),
         )
     )
@@ -1617,11 +1588,13 @@ def eval_ndcg_quantized(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact and quantized norms once per side (cosine_pre): each pair pays
     # two dots instead of two dots + four norms
     ev = e.select(
+        "vec_id", "embedding", q8(F.col("embedding")).alias("e8")
+    ).select(
         "vec_id",
         "embedding",
-        q8(F.col("embedding")).alias("e8"),
+        "e8",
         l2norm("embedding").alias("an"),
-        l2norm(q8(F.col("embedding"))).alias("an8"),
+        l2norm("e8").alias("an8"),
     )
     q = ev.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"),

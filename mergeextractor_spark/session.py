@@ -34,10 +34,14 @@ def _default_local_dir() -> str | None:
         free = shutil.disk_usage("/dev/shm").free
     except OSError:
         return None
-    min_gb = float(os.environ.get("SPARK_GRAFT_SCRATCH_MIN_GB", "4"))
-    if free < min_gb * (1 << 30):
-        import warnings
+    import warnings
 
+    try:
+        min_gb = float(os.environ.get("SPARK_GRAFT_SCRATCH_MIN_GB", "4"))
+    except ValueError:
+        warnings.warn("SPARK_GRAFT_SCRATCH_MIN_GB is not a number; using 4 GiB.")
+        min_gb = 4.0
+    if free < min_gb * (1 << 30):
         warnings.warn(
             f"/dev/shm has only {free / (1 << 30):.1f} GiB free "
             f"(< {min_gb} GiB floor); leaving spark.local.dir on the "
@@ -56,11 +60,10 @@ def get_spark(
     app_name: str = "mergeextractor-spark",
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """``extra_conf`` overrides builder confs (bench.py re-enables the UI
-    so the /api/v1 status endpoint serves per-stage executorCpuTime /
-    shuffle bytes — the host-steal-immune counters VERDICT r12 item 1
-    adjudicates on; everything else keeps the UI off: it is pure
-    overhead for tests and the driver gate)."""
+    """``extra_conf`` overrides builder confs (perfbench's traced runs
+    re-enable the UI so the /api/v1 status endpoint serves per-stage
+    executorCpuTime / shuffle bytes; everything else keeps the UI off:
+    it is pure overhead for tests and the driver gate)."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Shuffle/spill scratch on tmpfs (guide §2.1: local disk bandwidth can
     # be the tighter limit for shuffle files; here it is by far).  On this
@@ -115,8 +118,11 @@ def apply_session_tuning(spark: SparkSession) -> SparkSession:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
         spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
         spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        # driver-side construction overhead — see get_spark (r15)
-        spark.conf.set("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # driver-side construction overhead — see get_spark (r15).  The conf
+        # is static, so turn call-site capture off in PySpark's cache of it.
+        import pyspark.errors.utils as _errutils
+
+        _errutils._enable_debugging_cache = False
     except Exception:
         pass
     return spark

@@ -126,55 +126,6 @@ def test_no_registered_output_is_canonicalizer_hostile(spark):
     assert not offenders, offenders
 
 
-def test_bench_stdout_line_stays_parseable_and_small():
-    """BENCH_r05 failed to parse because the stdout JSON outgrew the
-    driver's tail-capture buffer. The line builder must stay under 2000
-    bytes for the real suite AND for pathological suites — and the
-    `queries` dict is the cross-round contract: a key missing from it
-    reads as a REMOVED query, so the real suite must ALWAYS emit every
-    key (the r14 rewrite sheds optional extras and decimals instead)."""
-    import json
-
-    from bench import HEADLINE, build_stdout_line
-
-    # the real suite shape, with the full r14 extras: EVERY key must be
-    # present — never an omission — and the line must fit the driver's
-    # 2000-char tail capture (it is the final stdout write).
-    timings = {k: 1.234 for k in HEADLINE}
-    extras = {
-        "cpu_s": 59.2,
-        "clean_cpu_s": 59.2,
-        "thrash_samples": 0,
-        "clean_value": 65.24,
-        "frozen_blocks": 28,
-        "trainer_profile": {"clf_rounds": 6, "bpe_rounds": 10},
-    }
-    line = build_stdout_line(timings, 60.0, 5, 0.1, extra=extras)
-    assert len(line) <= 1985, len(line)
-    d = json.loads(line)
-    assert d["metric"] == "headline_suite_seconds"
-    assert "omitted_fastest" not in d, "real suite must never drop keys"
-    assert set(d["queries"]) == set(HEADLINE)
-    # the two adjudication aggregates survive the extra-shedding valve
-    assert "cpu_s" in d and "clean_value" in d
-
-    # pathological: 300 long-named queries must trigger the valve
-    big = {f"extremely_long_query_name_number_{i:03d}": i / 7 for i in range(300)}
-    line = build_stdout_line(big, 999.9, 5, 0.1)
-    assert len(line) < 2000, len(line)
-    d = json.loads(line)
-    # omission count is a TOP-LEVEL sibling, never a fake queries entry —
-    # summing queries values must stay a pure sum of timings (ADVICE r6)
-    assert d["omitted_fastest"] > 0
-    kept = list(d["queries"])
-    assert all(isinstance(v, float) for v in d["queries"].values())
-    assert d["omitted_fastest"] == len(big) - len(kept)
-    # the kept set is the slowest ones
-    assert min(big[k] for k in kept) >= max(
-        v for k, v in big.items() if k not in kept
-    )
-
-
 def test_every_registered_key_is_in_coverage_map():
     """COVERAGE.md is the judge-facing key inventory — every registered
     key must have a row (12 had silently drifted out by r6)."""

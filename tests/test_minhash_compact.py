@@ -9,14 +9,19 @@ Proofs:
   3. the overwrite is PARTITION-SCOPED: committing one document's
      bands into a scratch store rewrites only the partitions that
      document's keys land in — every other partition's files keep
-     their mtimes.
+     their mtimes;
+  4. the partition swap is crash-safe: a rename that fails at any point
+     loses no committed row, and the replayed commit equals a clean one.
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import shutil
+import threading
 
+import pytest
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -110,3 +115,81 @@ def test_commit_rewrites_only_touched_partitions(spark, tmp_path):
         assert after[p] == before[p], f"untouched partition {p} rewritten"
     for p in touched:
         assert after[p] != before.get(p), f"touched partition {p} not rewritten"
+
+
+
+def _store_rows(spark, path):
+    from mergeextractor_spark.operators.dedup import minhash_store_read
+
+    return sorted(map(tuple, minhash_store_read(spark, path).collect()))
+
+
+def _counting_move(fail_at=None, real=shutil.move):
+    """A ``shutil.move`` that counts its calls and raises on call ``fail_at``."""
+    lock = threading.Lock()
+
+    def move(src, dst):
+        with lock:
+            move.n += 1
+            if move.n == fail_at:
+                raise OSError(f"injected failure on move {move.n}")
+        return real(src, dst)
+
+    move.n = 0
+    return move
+
+
+@pytest.fixture(scope="module")
+def commit_case(spark, tmp_path_factory):
+    """A committed-only store, the batch that closes it, and the rows and
+    ``shutil.move`` count of a clean commit of that batch."""
+    from mergeextractor_spark.operators import dedup
+    from mergeextractor_spark.operators._util import t, truncate_lineage
+
+    root = tmp_path_factory.mktemp("commit")
+    dedup.minhash_store_write(spark, SF, str(root / "base"))
+    batch = t(spark, SF, "documents").filter(F.col("doc_id") % dedup.INCR_BATCH_MOD == 0)
+    sig = dedup._spread_doc_shingles(batch).groupBy("doc_id").agg(*dedup._minhash_agg_cols())
+    bands = truncate_lineage(dedup._bands_of(sig))
+    clean = str(shutil.copytree(root / "base", root / "clean"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(shutil, "move", move := _counting_move())
+        dedup.minhash_store_commit(spark, clean, bands)
+    return root, bands, _store_rows(spark, clean), move.n
+
+
+@pytest.mark.parametrize("k", ["first", "second", "middle", "last"])
+def test_commit_survives_a_failed_move(spark, commit_case, k):
+    """A swap whose k-th ``shutil.move`` raises loses no committed row:
+    the replayed commit lands exactly the store a clean commit does."""
+    from mergeextractor_spark.operators.dedup import minhash_store_commit
+
+    root, bands, want, n_moves = commit_case
+    path = str(shutil.copytree(root / "base", root / f"faulted_{k}"))
+    fail_at = {"first": 1, "second": 2, "middle": n_moves // 2, "last": n_moves}[k]
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(shutil, "move", _counting_move(fail_at))
+        with pytest.raises(OSError, match="injected failure"):
+            minhash_store_commit(spark, path, bands)
+    minhash_store_commit(spark, path, bands)
+    assert _store_rows(spark, path) == want
+
+
+def test_commit_settles_asides_a_killed_commit_left(spark, commit_case):
+    """A process killed mid-swap leaves partitions renamed aside: one whose
+    staged copy never moved in, one whose copy landed before the aside was
+    deleted.  Readers never see an aside; the next commit settles both."""
+    from mergeextractor_spark.operators.dedup import _aside, minhash_store_commit
+
+    root, bands, want, _ = commit_case
+    path = str(shutil.copytree(root / "base", root / "killed"))
+    before = _store_rows(spark, path)
+    missing, landed = sorted(glob.glob(os.path.join(path, "band=*", "bpfx=*")))[:2]
+    os.rename(missing, _aside(missing))
+    shutil.copytree(landed, _aside(landed))
+    assert _store_rows(spark, path) == [
+        r for r in before if not missing.endswith(f"band={r[2]}/bpfx={r[3]}")
+    ]
+    minhash_store_commit(spark, path, bands)
+    assert _store_rows(spark, path) == want
+    assert not glob.glob(os.path.join(path, "band=*", ".bpfx=*"))

@@ -7,7 +7,7 @@ every ``truncate_lineage``/``partitioned_*`` construction accumulate
 until a driver GC the ContextCleaner may never get on a large heap
 (measured 12 s → 278 s between two IDENTICAL runs at derived-sf1;
 PERFORMANCE.md r11).  ``_util.drain_persistent_rdds`` is the fix, wired
-into bench.py and tools/bench_scaling.py; these pins make sure neither
+into tools/bench_scaling.py; these pins make sure neither
 half of the behavior silently rots: (a) clearCache alone really does
 leave the blocks behind (if a Spark upgrade changes that, the sweep can
 be simplified), and (b) the sweep really does drop them.
@@ -98,8 +98,28 @@ def test_scratch_default_falls_back_when_shm_is_small(monkeypatch):
     with pytest.warns(UserWarning, match="GiB free"):
         assert _default_local_dir() is None
 
+    # a malformed floor warns and falls back to 4 GiB instead of raising
+    monkeypatch.setenv("SPARK_GRAFT_SCRATCH_MIN_GB", "4GiB")
+    for free_gb, want in ((5, "/dev/shm/spark-local"), (3, None)):
+        monkeypatch.setattr(shutil, "disk_usage", lambda p, f=free_gb: usage(64 << 30, 0, f << 30))
+        with pytest.warns(UserWarning) as rec:
+            assert _default_local_dir() == want
+        assert any("not a number" in str(w.message) for w in rec)
+
     # explicit override wins regardless of headroom; empty = Spark default
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "/somewhere/nvme")
     assert _default_local_dir() == "/somewhere/nvme"
     monkeypatch.setenv("SPARK_GRAFT_LOCAL_DIR", "")
     assert _default_local_dir() is None
+
+
+def test_session_tuning_resets_cached_debugging_flag(spark, monkeypatch):
+    """PySpark caches the static dataFrameDebugging conf on the first
+    DataFrame call; tuning must turn call-site capture off anyway."""
+    import pyspark.errors.utils as errutils
+
+    from mergeextractor_spark.session import apply_session_tuning
+
+    monkeypatch.setattr(errutils, "_enable_debugging_cache", True)
+    apply_session_tuning(spark)
+    assert errutils.is_debugging_enabled() is False

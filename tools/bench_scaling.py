@@ -297,11 +297,11 @@ def main() -> None:
             ap.error(f"--keys not in the study list: {unknown}")
         QUERIES[:] = [k for k in QUERIES if k in picked]
 
-    # Fixed pre-touched heap, same rationale as bench.py (r14 thrash
-    # root cause): exponent measurements must not absorb re-fault
-    # storms from heap pages the GC gave back to a host that discards
-    # them (Firecracker free-page reporting).  16g (vs bench's 12g)
-    # because derived-sf1 probes checkpoint multi-GB frames.
+    # Fixed pre-touched heap (r14 thrash root cause, PERFORMANCE.md):
+    # exponent measurements must not absorb re-fault storms from heap
+    # pages the GC gave back to a host that discards them (Firecracker
+    # free-page reporting).  16g because derived-sf1 probes checkpoint
+    # multi-GB frames.
     spark = get_spark(
         "bench-scaling",
         extra_conf={

@@ -123,7 +123,7 @@ def main() -> None:
     probe(
         "ANN brute-force 10 queries",
         lambda: big_emb.crossJoin(F.broadcast(q))
-        .select(cosine(F.col("embedding"), F.col("qe")).alias("c"))
+        .select(cosine("embedding", "qe").alias("c"))
         .filter(F.col("c") > 0.99)
         .count(),
     )
