@@ -17,15 +17,12 @@ pushdown), which is the standard way this stays sub-quadratic.
 
 from __future__ import annotations
 
-import glob
-import os
-import shutil
-
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
 from ..registry import register
+from .. import store
 from ._util import t, r4, spread, truncate_lineage
 
 N_HASHES = 6  # fixture-default minhash signature length (production: ~128)
@@ -1577,57 +1574,15 @@ def minhash_store_write(spark: SparkSession, sf_dir: str, path: str) -> None:
 
 
 def ensure_minhash_store(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the band-bucket store once per (warehouse, sf_dir)
-    with the ensure_ivf_store discipline: a complete dir (_SUCCESS
-    present, newer than the source fixture) is reused across sessions;
-    a husk from an interrupted write — or a store older than
-    regenerated fixtures — is cleared and rewritten.
-
-    The directory suffix folds in a code-parameter fingerprint
-    (N_HASHES/BAND_SIZE/INCR_BATCH_MOD/prefix-len/shingle-n) so a store
-    written by OLDER CODE with different banding parameters is never
-    silently reused against an oracle that recomputes bands from source
-    (ADVICE r13)."""
-    import hashlib
-
-    from .scale_queries import _source_mtime
-
+    """The band-bucket probe store, built once per (warehouse, sf_dir).
+    Its params fold in N_HASHES/BAND_SIZE/INCR_BATCH_MOD/prefix-len/
+    shingle-n, so a store written with other banding parameters is never
+    reused against an oracle that recomputes bands from source."""
     params = f"{sf_dir}|n{N_HASHES}r{BAND_SIZE}m{INCR_BATCH_MOD}p1s3"
-    suffix = hashlib.md5(params.encode()).hexdigest()[:8]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = os.path.join(wh, f"minhash_band_store_{suffix}")
-    success = os.path.join(path, "_SUCCESS")
-    fresh = os.path.isfile(success) and os.path.getmtime(
-        success
-    ) >= _source_mtime(sf_dir, ("documents",))
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        minhash_store_write(spark, sf_dir, path)
-    return path
-
-
-def _aside(target: str) -> str:
-    """Where a commit parks a partition dir while its replacement moves in;
-    the leading dot hides it from Spark's file listing."""
-    head, name = os.path.split(target)
-    return os.path.join(head, f".{name}.old")
-
-
-def _restore_asides(path: str, staging: str | None = None) -> None:
-    """Settle the partitions of the store at ``path`` left renamed aside.
-    A commit that raised passes its ``staging``: the staged copy goes back
-    there and the aside is restored.  After a killed process, a copy
-    already in place holds every aside row, so only missing ones return."""
-    for old in glob.glob(os.path.join(path, "band=*", ".bpfx=*.old")):
-        head, name = os.path.split(old)
-        target = os.path.join(head, name[1 : -len(".old")])
-        if not os.path.isdir(target):
-            os.rename(old, target)
-        elif staging:
-            os.rename(target, os.path.join(staging, os.path.relpath(target, path)))
-            os.rename(old, target)
-        else:
-            shutil.rmtree(old)
+    return store.ensure(
+        spark, "minhash_band_store_", params, sf_dir, ("documents",),
+        lambda path: minhash_store_write(spark, sf_dir, path),
+    )
 
 
 def minhash_store_read(spark: SparkSession, path: str) -> DataFrame:
@@ -1739,11 +1694,11 @@ def dedup_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh_b = _cache_shingles(_spread_doc_shingles(batch))
     bands_b = _bands_of(sh_b.groupBy("doc_id").agg(*_minhash_agg_cols()))
     bands_hit, pfx_hit = _batch_band_parts(bands_b)
-    store = minhash_store_read(spark, path).filter(
+    probed = minhash_store_read(spark, path).filter(
         F.col("band").isin(bands_hit) & F.col("bpfx").isin(pfx_hit)
     )
     committed = spread(d.filter(F.col("doc_id") % INCR_BATCH_MOD != 0))
-    return minhash_verify_pairs(committed, sh_b, bands_b, store)
+    return minhash_verify_pairs(committed, sh_b, bands_b, probed)
 
 
 def minhash_verify_pairs(
@@ -1809,22 +1764,11 @@ def ensure_minhash_commit_store(spark: SparkSession, sf_dir: str,
     so the incremental key's committed-only contract is never violated
     by a commit.  Each commit-writing key passes its own tag so their
     stores never cross-contaminate either."""
-    import hashlib
-
-    from .scale_queries import _source_mtime
-
     params = f"{sf_dir}|n{N_HASHES}r{BAND_SIZE}m{INCR_BATCH_MOD}p1s3|{tag}"
-    suffix = hashlib.md5(params.encode()).hexdigest()[:8]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = os.path.join(wh, f"minhash_commit_store_{suffix}")
-    success = os.path.join(path, "_SUCCESS")
-    fresh = os.path.isfile(success) and os.path.getmtime(
-        success
-    ) >= _source_mtime(sf_dir, ("documents",))
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        minhash_store_write(spark, sf_dir, path)
-    return path
+    return store.ensure(
+        spark, "minhash_commit_store_", params, sf_dir, ("documents",),
+        lambda path: minhash_store_write(spark, sf_dir, path),
+    )
 
 
 def minhash_store_commit(spark: SparkSession, path: str,
@@ -1834,20 +1778,19 @@ def minhash_store_commit(spark: SparkSession, path: str,
     index-maintenance write production runs per ingest cycle.  One write
     job puts the merged frame (touched-partition existing rows ∪ new
     rows, DISTINCT so re-commits are idempotent) under a sibling staging
-    prefix; the touched partition dirs are then swapped in driver-side,
-    so no task reads a file the commit replaces.  Each is renamed aside
-    first and the asides are deleted only after every swap; a raising
-    swap restores every aside and keeps the staging prefix, so a
-    replayed commit lands the same store as a clean one
-    (``_restore_asides``).  Returns the number of partitions rewritten —
-    bounded by bands x 16 at fixture parameters."""
+    prefix; ``store.swap`` then moves the touched partition dirs in
+    driver-side, so no task reads a file the commit replaces.  A raising
+    swap leaves the store as it read before the call, and asides a
+    killed commit left are settled first, so a replayed commit lands the
+    same store as a clean one.  Returns the number of partitions
+    rewritten — bounded by bands x 16 at fixture parameters."""
     new = bands_new.withColumn("bpfx", F.substring("bucket", 1, 1)).select(
         "doc_id", "bucket", "band", "bpfx"
     )
     parts = new.select("band", "bpfx").distinct().collect()  # <= bands x 16
     if not parts:
         return 0  # empty batch: nothing lands, no partition is rewritten
-    _restore_asides(path)
+    store.settle(path)
     # EXACT (band, bpfx) pairs — an isin(bands) & isin(prefixes) product
     # would drag untouched partitions into the rewrite (caught by the
     # mtime pin in tests/test_minhash_compact.py on first write)
@@ -1873,37 +1816,11 @@ def minhash_store_commit(spark: SparkSession, path: str,
     merged = (
         existing.unionByName(new).repartition("band", "bpfx").dropDuplicates()
     )
-    staging = f"{path.rstrip('/')}__stage_{os.getpid()}"
+    staging = f"{path.rstrip('/')}__stage"
     merged.write.mode("overwrite").partitionBy("band", "bpfx").parquet(staging)
-    # same-filesystem directory renames: each touched partition dir
-    # swaps in whole.  The loop is pure driver-side filesystem metadata
-    # work on <= bands x 16 independent directories — threaded (r15,
-    # VERDICT item 1c: the serial loop charged one durable-volume
-    # round-trip per partition to the commit's wall).  Band-level parent
-    # dirs are pre-created serially so the workers never race makedirs.
-    for band in {r.band for r in parts}:
-        os.makedirs(os.path.join(path, f"band={band}"), exist_ok=True)
-    rels = [os.path.join(f"band={r.band}", f"bpfx={r.bpfx}") for r in parts]
-
-    def _swap(rel: str) -> str | None:
-        target, old = os.path.join(path, rel), None
-        if os.path.isdir(target):
-            old = _aside(target)
-            shutil.move(target, old)
-        shutil.move(os.path.join(staging, rel), target)
-        return old
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(16, len(parts))) as pool:
-        try:
-            olds = [o for o in pool.map(_swap, rels) if o]
-        except BaseException:
-            pool.shutdown(wait=True)  # let in-flight swaps land first
-            _restore_asides(path, staging)
-            raise
-        list(pool.map(shutil.rmtree, olds))
-    shutil.rmtree(staging, ignore_errors=True)
+    store.swap(
+        path, staging, [f"band={r.band}/bpfx={r.bpfx}" for r in parts]
+    )
     return len(parts)
 
 

@@ -5,9 +5,12 @@ must produce the exact answer of its naive twin.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from .. import store
 from ..registry import register
 from ._util import t, r4, spread
 from .vector_queries import assign_nearest, cosine_pre, dot, l2norm
@@ -796,52 +799,14 @@ def ivf_store_probe(
     return reader.parquet(path).filter(F.col("cid").isin(cids))
 
 
-def _source_mtime(sf_dir: str, names: tuple[str, ...]) -> float:
-    """Newest mtime across the given fixture parquet files/dirs — the
-    freshness stamp for derived on-disk artifacts (bucketed tables, IVF
-    stores). Round-5 review: a path-only guard
-    silently served STALE derived data after fixtures were regenerated
-    in place (e.g. bench_scaling --rebuild)."""
-    import os
-
-    newest = 0.0
-    for n in names:
-        p = os.path.join(sf_dir, f"{n}.parquet")
-        if os.path.isfile(p):
-            newest = max(newest, os.path.getmtime(p))
-        elif os.path.isdir(p):
-            for root, _dirs, files in os.walk(p):
-                for f in files:
-                    newest = max(newest, os.path.getmtime(os.path.join(root, f)))
-    return newest
-
-
 def ensure_ivf_store(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the cid-partitioned IVF store once per (warehouse,
-    sf_dir) with the same location-aware discipline as
-    write_bucketed_tables: a complete dir (_SUCCESS present, newer than
-    the source fixtures) is reused as-is across sessions; a husk from an
-    interrupted write — or a store older than regenerated fixtures — is
-    cleared and rewritten.  The suffix folds in the clustering
-    parameter (N_CENTROIDS) so a store written by older code with a
-    different cell count is never silently reused (ADVICE r13 — the
-    ensure_minhash_store fix, applied to the store it was copied
-    from)."""
-    import hashlib
-    import os
-    import shutil
-
-    suffix = hashlib.md5(f"{sf_dir}|c{N_CENTROIDS}".encode()).hexdigest()[:8]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = os.path.join(wh, f"ivf_store_{suffix}")
-    success = os.path.join(path, "_SUCCESS")
-    fresh = os.path.isfile(success) and os.path.getmtime(success) >= _source_mtime(
-        sf_dir, ("embeddings",)
+    """The cid-partitioned IVF store, built once per (warehouse, sf_dir).
+    Its params fold in the cell count (N_CENTROIDS), so a store written
+    with another cell count is never reused."""
+    return store.ensure(
+        spark, "ivf_store_", f"{sf_dir}|c{N_CENTROIDS}", sf_dir, ("embeddings",),
+        lambda path: ivf_store_write(spark, sf_dir, path),
     )
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        ivf_store_write(spark, sf_dir, path)
-    return path
 
 
 def _probed_cids(e: DataFrame) -> list[int]:
@@ -920,57 +885,37 @@ def write_bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     with NO Exchange at all — the shuffle is paid once at ingest, not
     per query (tests/test_plans.py pins the shuffle-free plan).
 
-    Session-restart safe: the in-memory catalog forgets the tables between
-    sessions while the managed location persists on disk, so the guard is
-    location-aware, not catalog-only —
-      * catalog has the table          -> reuse as-is;
-      * location complete AND fresh    -> register an EXTERNAL bucketed
-        table over it (bucket ids live in the file names, so the catalog
-        entry restores the zero-Exchange plan without rewriting a byte);
-      * location missing / incomplete / OLDER than the source fixtures
-        (regenerated in place, e.g. bench_scaling --rebuild)
-                                       -> clear and rewrite.
-    An interrupted write therefore self-heals on the next call instead of
-    raising LOCATION_ALREADY_EXISTS forever, and stale clusterings can
-    never serve a regenerated fixture's query (round-5 review).
+    Session-restart safe: the in-memory catalog forgets the tables
+    between sessions while the managed location persists, so the
+    location is a ``store.ensure`` store (a stale or incomplete one is
+    rewritten), and a location reused from an earlier session is
+    registered as an EXTERNAL bucketed table (bucket ids live in the file
+    names, so the catalog entry restores the zero-Exchange plan without
+    rewriting a byte).
     """
-    import hashlib
-    import os
-    import shutil
-
     n = _n_buckets(spark)
-    suffix = hashlib.md5(f"{sf_dir}@{n}".encode()).hexdigest()[:8]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     names = []
     for name, src, key in (
-        (f"bkt_orders_{suffix}", "orders", "o_orderkey"),
-        (f"bkt_lineitem_{suffix}", "lineitem", "l_orderkey"),
+        ("bkt_orders_", "orders", "o_orderkey"),
+        ("bkt_lineitem_", "lineitem", "l_orderkey"),
     ):
-        names.append(name)
-        if spark.catalog.tableExists(name):
-            continue
-        loc = os.path.join(wh, name)
-        success = os.path.join(loc, "_SUCCESS")
-        complete = (
-            os.path.isdir(loc)
-            and os.path.isfile(success)
-            and any(f.endswith(".parquet") for f in os.listdir(loc))
-            and os.path.getmtime(success) >= _source_mtime(sf_dir, (src,))
-        )
-        if complete:
+        def write(loc):
+            (
+                t(spark, sf_dir, src)
+                .write.bucketBy(n, key).sortBy(key)
+                .mode("overwrite").format("parquet")
+                .saveAsTable(os.path.basename(loc))
+            )
+
+        loc = store.ensure(spark, name, f"{sf_dir}@{n}", sf_dir, (src,), write)
+        names.append(os.path.basename(loc))
+        if not spark.catalog.tableExists(names[-1]):
             ddl = _bucket_ddl(spark.read.parquet(loc).schema)
             spark.sql(
-                f"CREATE TABLE {name} ({ddl}) USING PARQUET "
+                f"CREATE TABLE {names[-1]} ({ddl}) USING PARQUET "
                 f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {n} BUCKETS "
                 f"LOCATION '{loc}'"
             )
-            continue
-        shutil.rmtree(loc, ignore_errors=True)
-        (
-            t(spark, sf_dir, src)
-            .write.bucketBy(n, key).sortBy(key)
-            .mode("overwrite").format("parquet").saveAsTable(name)
-        )
     return names[0], names[1]
 
 
@@ -1042,24 +987,15 @@ def pq_codes_write(spark: SparkSession, sf_dir: str, path: str) -> None:
 
 
 def ensure_pq_store(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize the cid-partitioned PQ codes store once per
-    (warehouse, sf_dir), with the same complete-and-fresh guard as
-    ensure_ivf_store."""
-    import hashlib
-    import os
-    import shutil
-
-    suffix = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = os.path.join(wh, f"pq_codes_{suffix}")
-    success = os.path.join(path, "_SUCCESS")
-    fresh = os.path.isfile(success) and os.path.getmtime(success) >= _source_mtime(
-        sf_dir, ("embeddings",)
+    """The cid-partitioned PQ codes store, built once per (warehouse,
+    sf_dir).  Its params fold in the cell count, the subspace count and
+    the codebook size that pq_codes_write builds from, so a store
+    written with other values is never reused."""
+    params = f"{sf_dir}|c{N_CENTROIDS}s{PQ_SUBS}k{PQ_CODES}"
+    return store.ensure(
+        spark, "pq_codes_", params, sf_dir, ("embeddings",),
+        lambda path: pq_codes_write(spark, sf_dir, path),
     )
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        pq_codes_write(spark, sf_dir, path)
-    return path
 
 
 @register(

@@ -51,6 +51,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators._util import t, truncate_lineage
 from ..registry import register
 
@@ -267,29 +268,14 @@ def bpe_store_write(spark: SparkSession, sf_dir: str, path: str,
 
 def ensure_bpe_store(spark: SparkSession, sf_dir: str,
                      rounds: int = BPE_TRAIN_ROUNDS) -> str:
-    """Materialize the merge store once per (warehouse, sf_dir, training
-    parameters) — the ensure_clf_store discipline: _SUCCESS-freshness vs
-    the documents fixture plus a code-parameter fingerprint in the
-    directory suffix (rounds + representation version), so a store
-    trained by older code or a reduced-round bench profile is never
-    served to an oracle that trains full counts."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..operators.scale_queries import _source_mtime
-
-    suffix = hashlib.md5(f"{sf_dir}|r{rounds}v1".encode()).hexdigest()[:8]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = os.path.join(wh, f"bpe_merge_store_{suffix}")
-    success = os.path.join(path, "_SUCCESS")
-    fresh = os.path.isfile(success) and os.path.getmtime(
-        success
-    ) >= _source_mtime(sf_dir, ("documents",))
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        bpe_store_write(spark, sf_dir, path, rounds=rounds)
-    return path
+    """The merge store, trained once per (warehouse, sf_dir, training
+    parameters).  Its params fold in the round count and the
+    representation version, so a store trained with other values is
+    never served to an oracle that trains the full count."""
+    return store.ensure(
+        spark, "bpe_merge_store_", f"{sf_dir}|r{rounds}v1", sf_dir, ("documents",),
+        lambda path: bpe_store_write(spark, sf_dir, path, rounds=rounds),
+    )
 
 
 def bpe_store_read(spark: SparkSession, path: str) -> DataFrame:

@@ -57,6 +57,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import store
 from ..operators._util import t, truncate_lineage
 from ..operators.text_queries import _STOP_SQL, EN_STOPWORDS
 from ..registry import register
@@ -319,33 +320,15 @@ def clf_store_write(spark: SparkSession, sf_dir: str, path: str,
 
 def ensure_clf_store(spark: SparkSession, sf_dir: str,
                      rounds: int = CLF_ROUNDS) -> str:
-    """Materialize the trained weight store once per (warehouse, sf_dir,
-    training parameters) — the ensure_minhash_store discipline: a
-    complete dir (_SUCCESS present, newer than the documents fixture)
-    is reused across sessions; a husk from an interrupted write, or a
-    store older than regenerated fixtures, is cleared and retrained.
-    The suffix folds in a code-parameter fingerprint (buckets / scale /
-    rounds / step schedule) so a store trained by older code or a
-    reduced-round bench profile is never silently reused against an
-    oracle that retrains from source (the ADVICE-r13 store rule)."""
-    import hashlib
-    import os
-    import shutil
-
-    from ..operators.scale_queries import _source_mtime
-
+    """The trained weight store, built once per (warehouse, sf_dir,
+    training parameters).  Its params fold in buckets / scale / rounds /
+    step schedule, so a store trained with other values is never reused
+    against an oracle that retrains from source."""
     params = f"{sf_dir}|b{CLF_BUCKETS}s{CLF_SCALE}r{rounds}h3"
-    suffix = hashlib.md5(params.encode()).hexdigest()[:8]
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-    path = os.path.join(wh, f"clf_weight_store_{suffix}")
-    success = os.path.join(path, "_SUCCESS")
-    fresh = os.path.isfile(success) and os.path.getmtime(
-        success
-    ) >= _source_mtime(sf_dir, ("documents",))
-    if not fresh:
-        shutil.rmtree(path, ignore_errors=True)
-        clf_store_write(spark, sf_dir, path, rounds=rounds)
-    return path
+    return store.ensure(
+        spark, "clf_weight_store_", params, sf_dir, ("documents",),
+        lambda path: clf_store_write(spark, sf_dir, path, rounds=rounds),
+    )
 
 
 def clf_store_read(spark: SparkSession, path: str) -> DataFrame:

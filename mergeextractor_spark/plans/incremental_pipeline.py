@@ -20,11 +20,12 @@ Plan shape per batch:
 3. **Quality gate**: the Gopher word-count bounds (50..100000 tokens)
    on the surviving new rows — same family as text_gopher_rules, one
    map stage.
-4. **Atomic append**: survivors land in a staging directory that is
-   RENAMED into the store only after a `_BATCH_<id>` marker commits; a
-   marker that already exists short-circuits the whole batch
-   (idempotent replay). A crash before the rename leaves the store
-   untouched (same discipline as sources/sinks.py merge_kv_store).
+4. **Atomic append**: survivors land in a `_stage_<id>` directory inside
+   the store, which Spark's listing skips. Once that write has committed
+   its `_SUCCESS`, the files move into the store and a `_BATCH_<id>`
+   marker commits the batch. A marker short-circuits the whole batch
+   (idempotent replay); a complete stage without a marker is published
+   by the replay, so a crash at any move ends as a clean run does.
 
 Registered as ``pipeline_incremental_ingest`` with a FULL exact oracle
 (r11): the bloom is the md5-sliced one, so DuckDB recomputes every
@@ -62,9 +63,12 @@ def ingest_batch(
 ) -> dict:
     """Ingest ``batch`` into the parquet corpus at ``store``; returns the
     per-stage counts. Idempotent per ``batch_id``: a committed marker
-    short-circuits the replay with zero writes."""
+    short-circuits the replay with zero writes, and a replay that finds
+    the batch fully staged only finishes its publish."""
     marker = os.path.join(store, f"_BATCH_{batch_id}")
-    if os.path.exists(marker):
+    stage = os.path.join(store, f"_stage_{batch_id}")
+    if os.path.exists(marker) or os.path.isfile(os.path.join(stage, "_SUCCESS")):
+        _publish(store, stage, batch_id)
         return {"batch_id": batch_id, "replayed": True, "appended": 0}
 
     from ..operators.curation_queries import bloom_build, bloom_probe
@@ -85,23 +89,10 @@ def ingest_batch(
     survivors = _gate(fresh.unionByName(verified_new)).drop("h")
     n_appended = survivors.count()
 
-    # stage → atomic publish: parquet files land in a scratch dir and are
-    # renamed into the store one file at a time AFTER a full write, then
-    # the marker commits the batch. A crash mid-stage leaves the store
-    # bit-identical; a crash mid-rename is recovered by the replay (the
-    # marker is absent, and re-ingest dedups the half-renamed rows
-    # against the store content itself).
-    stage = scratch_dir(f"ingest_{batch_id}_")
+    # the stage sits inside the store under a name Spark's listing skips;
+    # an unfinished stage (no _SUCCESS) is overwritten by this write
     survivors.write.mode("overwrite").parquet(stage)
-    for f in os.listdir(stage):
-        if f.endswith(".parquet"):
-            shutil.move(
-                os.path.join(stage, f),
-                os.path.join(store, f"batch_{batch_id}_{f}"),
-            )
-    with open(marker, "w") as fh:
-        fh.write(batch_id)
-    shutil.rmtree(stage, ignore_errors=True)
+    _publish(store, stage, batch_id)
     return {
         "batch_id": batch_id,
         "replayed": False,
@@ -109,6 +100,26 @@ def ingest_batch(
         "bloom_candidates": n_candidates,
         "appended": n_appended,
     }
+
+
+def _publish(store: str, stage: str, batch_id: str) -> None:
+    """Move the staged parquet files of a batch into the store, then
+    commit its marker. Each file moves whole, and a replay moves the
+    ones a crash left behind, so the store ends as a clean publish
+    leaves it — a re-run of the batch would instead dedup the rows still
+    staged against copies of their texts already moved in."""
+    if os.path.isdir(stage):
+        for f in os.listdir(stage):
+            if f.endswith(".parquet"):
+                shutil.move(
+                    os.path.join(stage, f),
+                    os.path.join(store, f"batch_{batch_id}_{f}"),
+                )
+        shutil.rmtree(stage)
+    marker = os.path.join(store, f"_BATCH_{batch_id}")
+    if not os.path.exists(marker):
+        with open(marker, "w") as fh:
+            fh.write(batch_id)
 
 
 @register(

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
 import os
+import shutil
 import sys
+import threading
 
 import pytest
 
@@ -60,3 +62,25 @@ def deals_df(spark):
     from mergeextractor_spark.sources.csv_deals import scan_csv_deals
 
     return scan_csv_deals(spark, os.path.join(REPO, "tests", "fixtures", "deals.csv"))
+
+
+@pytest.fixture(scope="session")
+def counting_move():
+    """Factory of ``shutil.move`` stand-ins for fault injection: each one
+    counts its calls and raises ``OSError`` on call ``fail_at``."""
+    real = shutil.move
+
+    def make(fail_at=None):
+        lock = threading.Lock()
+
+        def move(src, dst):
+            with lock:
+                move.n += 1
+                if move.n == fail_at:
+                    raise OSError(f"injected failure on move {move.n}")
+            return real(src, dst)
+
+        move.n = 0
+        return move
+
+    return make

@@ -117,3 +117,15 @@ def test_semdedup_marks_exactly_the_clones(spark):
     # everything else keeps itself
     keep = df.filter("NOT is_dup")
     assert keep.filter("vec_id <> rep_id").count() == 0
+
+
+def test_pq_store_path_tracks_codebook_parameters(spark, monkeypatch):
+    """pq_codes_write builds the codes store from N_CENTROIDS, PQ_SUBS and
+    PQ_CODES, so a store written with another codebook size must live at
+    another path instead of being reused."""
+    from mergeextractor_spark.operators import scale_queries as sq
+
+    monkeypatch.setattr(sq, "pq_codes_write", lambda spark, sf_dir, path: None)
+    path = sq.ensure_pq_store(spark, SF)
+    monkeypatch.setattr(sq, "PQ_CODES", sq.PQ_CODES * 2)
+    assert sq.ensure_pq_store(spark, SF) != path

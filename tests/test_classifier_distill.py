@@ -68,8 +68,8 @@ def test_store_is_persisted_and_reused(spark):
 def test_store_fingerprint_tracks_parameters(spark):
     from mergeextractor_spark.plans.classifier_pipeline import ensure_clf_store
 
-    # a reduced-round profile (the bench override) gets its OWN store —
-    # a 6-round table can never be served to the 12-round oracle
+    # another round count gets its OWN store — a 6-round table can
+    # never be served to the 12-round oracle
     assert ensure_clf_store(spark, SF, rounds=6) != ensure_clf_store(spark, SF)
 
 

@@ -147,3 +147,21 @@ def test_sql_escape_roundtrips_backslashes_and_quotes(spark):
     for v in hostile:
         got = spark.sql(f"SELECT '{_sql_escape(v)}' AS v").collect()[0].v
         assert got == v, (v, got)
+
+
+def test_store_decisions_live_in_store_module():
+    """Where a derived store lives and when it is reused are decided in
+    mergeextractor_spark/store.py alone: no other package module reads
+    the warehouse dir or compares mtimes."""
+    import pathlib
+
+    import mergeextractor_spark
+
+    pkg = pathlib.Path(mergeextractor_spark.__file__).parent
+    offenders = sorted(
+        str(p.relative_to(pkg))
+        for p in pkg.rglob("*.py")
+        if p != pkg / "store.py"
+        and any(s in p.read_text() for s in ("spark.sql.warehouse.dir", "getmtime("))
+    )
+    assert offenders == []

@@ -2,7 +2,9 @@
 changes the answer), idempotent replay, and crash recovery."""
 
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from mergeextractor_spark.plans.incremental_pipeline import (
@@ -88,3 +90,46 @@ def test_crash_before_marker_recovers_without_duplicates(spark, tmp_path):
         r.h for r in spark.read.parquet(store).select(F.md5("text").alias("h")).collect()
     )
     assert after == snap  # store content bit-identical across the recovery
+
+
+@pytest.fixture(scope="module")
+def twin_case(spark, tmp_path_factory, counting_move):
+    """A store, a batch that carries one new text twice — once re-keyed,
+    so the two copies are staged in different files — and the rows and
+    ``shutil.move`` count of a clean ingest of that batch."""
+    from mergeextractor_spark.plans.incremental_pipeline import _gate
+
+    docs = table(spark, SF, "documents")
+    root = tmp_path_factory.mktemp("publish")
+    base = str(root / "base")
+    docs.filter(F.col("doc_id") % 10 < 8).write.parquet(base)
+    new = docs.filter(F.col("doc_id") % 10 >= 8)
+    twin = _gate(new).orderBy("doc_id").limit(1).withColumn("doc_id", F.col("doc_id") + 100000)
+    batch = new.unionByName(twin).cache()
+    clean = str(shutil.copytree(base, root / "clean"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(shutil, "move", move := counting_move())
+        ingest_batch(spark, clean, batch, "b1")
+    assert move.n == 2, "the twin and the rest of the batch stage one file each"
+    return root, base, batch, _rows(spark, clean)
+
+
+def _rows(spark, store):
+    return sorted(map(tuple, spark.read.parquet(store).collect()), key=repr)
+
+
+@pytest.mark.parametrize("k", [1, 2])
+def test_publish_replay_after_a_failed_move_equals_a_clean_ingest(
+    spark, twin_case, counting_move, k
+):
+    """The publish dies on its k-th file move; the replay of the batch
+    must leave the store a clean ingest leaves — both copies of the twin
+    text included, not deduplicated against the copy already moved in."""
+    root, base, batch, want = twin_case
+    store = str(shutil.copytree(base, root / f"faulted_{k}"))
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(shutil, "move", counting_move(k))
+        with pytest.raises(OSError, match="injected failure"):
+            ingest_batch(spark, store, batch, "b1")
+    ingest_batch(spark, store, batch, "b1")
+    assert _rows(spark, store) == want

@@ -10,8 +10,11 @@ Proofs:
      bands into a scratch store rewrites only the partitions that
      document's keys land in — every other partition's files keep
      their mtimes;
-  4. the partition swap is crash-safe: a rename that fails at any point
-     loses no committed row, and the replayed commit equals a clean one.
+  4. the partition swap is crash-safe, for this store and for the KV
+     MERGE (sources/sinks.py) alike: a move that fails at any point
+     leaves the store as it read before the commit, a killed commit's
+     asides are settled by the next one, and the replayed commit equals
+     a clean one.
 """
 
 from __future__ import annotations
@@ -19,7 +22,8 @@ from __future__ import annotations
 import glob
 import os
 import shutil
-import threading
+from dataclasses import dataclass, field
+from typing import Callable
 
 import pytest
 from pyspark.sql import functions as F
@@ -117,79 +121,110 @@ def test_commit_rewrites_only_touched_partitions(spark, tmp_path):
         assert after[p] != before.get(p), f"touched partition {p} not rewritten"
 
 
+@dataclass
+class SwapCase:
+    """A store whose commit swaps partitions in, and one commit into it."""
 
-def _store_rows(spark, path):
-    from mergeextractor_spark.operators.dedup import minhash_store_read
-
-    return sorted(map(tuple, minhash_store_read(spark, path).collect()))
-
-
-def _counting_move(fail_at=None, real=shutil.move):
-    """A ``shutil.move`` that counts its calls and raises on call ``fail_at``."""
-    lock = threading.Lock()
-
-    def move(src, dst):
-        with lock:
-            move.n += 1
-            if move.n == fail_at:
-                raise OSError(f"injected failure on move {move.n}")
-        return real(src, dst)
-
-    move.n = 0
-    return move
+    base: str  # the store before the commit; each check copies it
+    parts: str  # glob of its partition dirs
+    commit: Callable[[str], object]
+    rows: Callable[[str], list]
+    want: list = field(default_factory=list)  # rows after a clean commit
+    n_moves: int = 0  # ``shutil.move`` calls of a clean commit
 
 
-@pytest.fixture(scope="module")
-def commit_case(spark, tmp_path_factory):
-    """A committed-only store, the batch that closes it, and the rows and
-    ``shutil.move`` count of a clean commit of that batch."""
+def _band_store_case(spark, root) -> SwapCase:
+    """The band store and the batch that closes it."""
     from mergeextractor_spark.operators import dedup
     from mergeextractor_spark.operators._util import t, truncate_lineage
 
-    root = tmp_path_factory.mktemp("commit")
-    dedup.minhash_store_write(spark, SF, str(root / "base"))
+    base = str(root / "band_base")
+    dedup.minhash_store_write(spark, SF, base)
     batch = t(spark, SF, "documents").filter(F.col("doc_id") % dedup.INCR_BATCH_MOD == 0)
     sig = dedup._spread_doc_shingles(batch).groupBy("doc_id").agg(*dedup._minhash_agg_cols())
     bands = truncate_lineage(dedup._bands_of(sig))
-    clean = str(shutil.copytree(root / "base", root / "clean"))
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(shutil, "move", move := _counting_move())
-        dedup.minhash_store_commit(spark, clean, bands)
-    return root, bands, _store_rows(spark, clean), move.n
+    return SwapCase(
+        base, "band=*/bpfx=*",
+        lambda path: dedup.minhash_store_commit(spark, path, bands),
+        lambda path: sorted(map(tuple, dedup.minhash_store_read(spark, path).collect())),
+    )
+
+
+def _kv_store_case(spark, filings_df, root) -> SwapCase:
+    """The bucketed KV store (buckets 0-2) and a MERGE that replaces a row
+    in each bucket and inserts one into a new bucket."""
+    from mergeextractor_spark.sources.sinks import merge_kv_store, sink_kv_store
+
+    base = str(root / "kv_base")
+    rows = filings_df.withColumn("main_index", F.col("main_index") * 50)
+    sink_kv_store(rows, base, mode="overwrite")
+    updates = (
+        rows.filter(F.col("main_index").isin(0, 100, 250))
+        .withColumn("content", F.lit("merged-row"))
+        .unionByName(rows.filter(F.col("main_index") == 50).withColumn("main_index", F.lit(777)))
+        .cache()
+    )
+    return SwapCase(
+        base, "bucket=*",
+        lambda path: merge_kv_store(spark, updates, path),
+        lambda path: sorted(map(tuple, spark.read.parquet(path).collect()), key=repr),
+    )
+
+
+@pytest.fixture(scope="module")
+def swap_cases(spark, filings_df, tmp_path_factory, counting_move):
+    """Both partition-swapping commits, each with the rows and the
+    ``shutil.move`` count of a clean commit."""
+    root = tmp_path_factory.mktemp("swap")
+    cases = {
+        "band store": _band_store_case(spark, root),
+        "kv store": _kv_store_case(spark, filings_df, root),
+    }
+    for name, case in cases.items():
+        clean = str(shutil.copytree(case.base, root / f"{name} clean"))
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(shutil, "move", move := counting_move())
+            case.commit(clean)
+        case.want, case.n_moves = case.rows(clean), move.n
+        assert case.want != case.rows(case.base), name
+    return root, cases
 
 
 @pytest.mark.parametrize("k", ["first", "second", "middle", "last"])
-def test_commit_survives_a_failed_move(spark, commit_case, k):
-    """A swap whose k-th ``shutil.move`` raises loses no committed row:
-    the replayed commit lands exactly the store a clean commit does."""
-    from mergeextractor_spark.operators.dedup import minhash_store_commit
+def test_commit_survives_a_failed_move(spark, swap_cases, counting_move, k):
+    """A swap whose k-th ``shutil.move`` raises leaves the store reading as
+    it did before the call, and the replayed commit lands exactly the
+    store a clean commit does — for the band store and the KV MERGE."""
+    root, cases = swap_cases
+    for name, case in cases.items():
+        path = str(shutil.copytree(case.base, root / f"{name} faulted {k}"))
+        before = case.rows(path)
+        fail_at = {"first": 1, "second": 2, "middle": case.n_moves // 2, "last": case.n_moves}[k]
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(shutil, "move", counting_move(fail_at))
+            with pytest.raises(OSError, match="injected failure"):
+                case.commit(path)
+        assert case.rows(path) == before, name
+        case.commit(path)
+        assert case.rows(path) == case.want, name
 
-    root, bands, want, n_moves = commit_case
-    path = str(shutil.copytree(root / "base", root / f"faulted_{k}"))
-    fail_at = {"first": 1, "second": 2, "middle": n_moves // 2, "last": n_moves}[k]
-    with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(shutil, "move", _counting_move(fail_at))
-        with pytest.raises(OSError, match="injected failure"):
-            minhash_store_commit(spark, path, bands)
-    minhash_store_commit(spark, path, bands)
-    assert _store_rows(spark, path) == want
 
-
-def test_commit_settles_asides_a_killed_commit_left(spark, commit_case):
+def test_commit_settles_asides_a_killed_commit_left(spark, swap_cases):
     """A process killed mid-swap leaves partitions renamed aside: one whose
     staged copy never moved in, one whose copy landed before the aside was
-    deleted.  Readers never see an aside; the next commit settles both."""
-    from mergeextractor_spark.operators.dedup import _aside, minhash_store_commit
+    deleted.  Readers never see an aside; the next commit settles both and
+    lands the store a clean commit does."""
+    from mergeextractor_spark.store import _aside
 
-    root, bands, want, _ = commit_case
-    path = str(shutil.copytree(root / "base", root / "killed"))
-    before = _store_rows(spark, path)
-    missing, landed = sorted(glob.glob(os.path.join(path, "band=*", "bpfx=*")))[:2]
-    os.rename(missing, _aside(missing))
-    shutil.copytree(landed, _aside(landed))
-    assert _store_rows(spark, path) == [
-        r for r in before if not missing.endswith(f"band={r[2]}/bpfx={r[3]}")
-    ]
-    minhash_store_commit(spark, path, bands)
-    assert _store_rows(spark, path) == want
-    assert not glob.glob(os.path.join(path, "band=*", ".bpfx=*"))
+    root, cases = swap_cases
+    for name, case in cases.items():
+        path = str(shutil.copytree(case.base, root / f"{name} killed"))
+        hidden = str(shutil.copytree(case.base, root / f"{name} hidden"))
+        missing, landed = sorted(glob.glob(os.path.join(path, case.parts)))[:2]
+        os.rename(missing, _aside(missing))
+        shutil.copytree(landed, _aside(landed))
+        shutil.rmtree(os.path.join(hidden, os.path.relpath(missing, path)))
+        assert case.rows(path) == case.rows(hidden), name
+        case.commit(path)
+        assert case.rows(path) == case.want, name
+        assert not glob.glob(os.path.join(path, "**", ".*.old"), recursive=True), name

@@ -98,12 +98,15 @@ def test_with_bucket_values(filings_df):
 
 
 def test_kv_merge_kill_mid_swap_recovers(spark, filings_df, tmp_path, monkeypatch):
-    """VERDICT r3 item 7: a merge killed mid-swap must leave the store
-    recoverable — every bucket at its old or new version except at most
-    one parked in the backup dir, and the next merge call restores it and
-    converges to the exact merged state (idempotent re-apply)."""
+    """A merge killed mid-swap leaves the store recoverable: every bucket
+    at its old or new version except one parked aside, and the next merge
+    call settles it and converges to the exact merged state."""
+    import os
+    import shutil
+
     import pytest
 
+    from mergeextractor_spark import store
     from mergeextractor_spark.sources import sinks
 
     path = str(tmp_path / "kv5")
@@ -114,35 +117,35 @@ def test_kv_merge_kill_mid_swap_recovers(spark, filings_df, tmp_path, monkeypatc
         "content", F.lit("merged-row")
     )
 
-    real = sinks._swap_bucket
-    calls = []
+    def killed(root, staging, rels):
+        # the process dies with no rollback: the first bucket's copy has
+        # landed but its aside is not yet deleted, the second bucket is
+        # parked aside and its copy never moved in
+        first, second = (os.path.join(root, r) for r in rels[:2])
+        shutil.move(first, store._aside(first))
+        shutil.move(os.path.join(staging, rels[0]), first)
+        shutil.move(second, store._aside(second))
+        raise RuntimeError("simulated death mid-swap")
 
-    def flaky(fs, P, store, tmp, backup, bucket):
-        calls.append(bucket)
-        if len(calls) == 2:
-            # die in the nastiest window: old bucket parked, new not placed
-            assert fs.rename(P(f"{store}/bucket={bucket}"), P(f"{backup}/bucket={bucket}"))
-            raise RuntimeError("simulated death mid-swap")
-        real(fs, P, store, tmp, backup, bucket)
-
-    monkeypatch.setattr(sinks, "_swap_bucket", flaky)
+    monkeypatch.setattr(sinks.store, "swap", killed)
     with pytest.raises(RuntimeError, match="mid-swap"):
         merge_kv_store(spark, updates, path)
     monkeypatch.undo()
 
-    # store is damaged (one bucket missing) but nothing is destroyed:
-    # the parked bucket survives in the backup dir
-    leftovers = list(tmp_path.glob("kv5__merge_old_*"))
-    assert leftovers and any(leftovers[0].iterdir())
+    # one bucket is missing from the store but nothing is destroyed: the
+    # parked bucket survives in its aside
+    asides = list(tmp_path.glob("kv5/.bucket=*.old"))
+    assert len(asides) == 2 and all(any(a.iterdir()) for a in asides)
 
-    # kill-and-rerun: same merge again — recovery restores the parked
-    # bucket, then the merge re-applies and commits fully
+    # kill-and-rerun: the same merge settles the asides, re-applies and
+    # commits fully
     merge_kv_store(spark, updates, path)
     back = {r.main_index: r.content for r in spark.read.parquet(path).collect()}
     assert set(back) == {0, 50, 100, 150, 200, 250}
     assert {k for k, v in back.items() if v == "merged-row"} == {0, 100, 250}
-    # all temp/backup leftovers cleared
-    assert not list(tmp_path.glob("kv5__merge_*"))
+    # no aside or staging leftovers
+    assert not list(tmp_path.glob("kv5/.*.old"))
+    assert not list(tmp_path.glob("kv5__*"))
 
 
 def test_orc_roundtrip_matches_parquet_source(spark):
