@@ -83,7 +83,14 @@ def locate_chunk_header(
     sentence_splitter: Callable[[str], list[str]] = regex_sentences,
 ) -> str | None:
     """Stage (a). Returns the matched phrase / header line, or None.
-    Ref ChunkProcessor.py:34-73."""
+    Ref ChunkProcessor.py:34-73.
+
+    The line-level match is ``(phrase in line or fuzz_ratio > 85) and
+    "background" in line``. The reference scores every phrase before the
+    "background" test; here a line without "background" is skipped first,
+    since no phrase can return it. Both tests are pure, so the result is
+    the same on every chunk, and the pure-Python ``fuzz_ratio`` (most of
+    the cascade's cost) runs only on lines that can match."""
     phrases_lower = [p.lower() for p in start_phrases]
     background_only = len(start_phrases) == 1 and phrases_lower[0] == "background"
 
@@ -104,11 +111,10 @@ def locate_chunk_header(
             if background_only:
                 if line_lower == "background":
                     return line
-            else:
+            elif "background" in line_lower:
                 for phrase in phrases_lower:
                     if phrase in line_lower or fuzz_ratio(line_lower, phrase) > 85:
-                        if "background" in line_lower:
-                            return line
+                        return line
     return None
 
 

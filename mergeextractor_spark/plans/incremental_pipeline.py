@@ -12,6 +12,9 @@ Plan shape per batch:
    map-side into definitely-new rows (bit miss — skip the verify join
    entirely) and maybe-dup candidates (bit hit). Only candidates — a
    small fraction of the batch at production FP rates — reach the join.
+   The probe runs once: its output is cut (``truncate_lineage``, lazy),
+   and ``incoming`` and ``bloom_candidates`` come from one aggregate
+   over that cut, which also materializes it for the two branches below.
 2. **Exact verify**: candidates anti-join the store ON THE CONTENT HASH
    (32-byte keys, never text). Bloom false positives survive here, so
    the final content is exactly what a full anti-join would produce —
@@ -21,11 +24,13 @@ Plan shape per batch:
    on the surviving new rows — same family as text_gopher_rules, one
    map stage.
 4. **Atomic append**: survivors land in a `_stage_<id>` directory inside
-   the store, which Spark's listing skips. Once that write has committed
-   its `_SUCCESS`, the files move into the store and a `_BATCH_<id>`
-   marker commits the batch. A marker short-circuits the whole batch
-   (idempotent replay); a complete stage without a marker is published
-   by the replay, so a crash at any move ends as a clean run does.
+   the store, which Spark's listing skips; ``appended`` is an
+   ``Observation`` on that write, not a count of its own. Once the write
+   has committed its `_SUCCESS`, the files move into the store and a
+   `_BATCH_<id>` marker commits the batch. A marker short-circuits the
+   whole batch (idempotent replay); a complete stage without a marker is
+   published by the replay, so a crash at any move ends as a clean run
+   does.
 
 Registered as ``pipeline_incremental_ingest`` with a FULL exact oracle
 (r11): the bloom is the md5-sliced one, so DuckDB recomputes every
@@ -38,11 +43,11 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register
-from ..operators._util import scratch_dir, t
+from ..operators._util import scratch_dir, t, truncate_lineage
 from ..operators.curation_queries import BLOOM_K, BLOOM_M_BITS
 
 GATE_MIN_TOKENS = 50
@@ -73,32 +78,37 @@ def ingest_batch(
 
     from ..operators.curation_queries import bloom_build, bloom_probe
 
-    incoming = _hashed(batch)
-    n_incoming = incoming.count()
-
     existing = _hashed(spark.read.parquet(store).select("text"))
     bitmap = bloom_build(existing.select(F.col("h")))
-    maybe = bloom_probe(incoming, bitmap, "h")
+    # the probe's pandas UDF runs once: the counts, the definitely-new
+    # rows and the verify candidates all read this cut
+    probed = truncate_lineage(bloom_probe(_hashed(batch), bitmap, "h"), eager=False)
+    counts = probed.agg(
+        F.count(F.lit(1)).alias("incoming"),
+        F.count_if("maybe_dup").alias("bloom_candidates"),
+    ).first()
     # definitely-new rows skip the verify join entirely (zero-FN pinned)
-    fresh = maybe.filter(~F.col("maybe_dup")).drop("maybe_dup")
-    candidates = maybe.filter(F.col("maybe_dup")).drop("maybe_dup")
-    n_candidates = candidates.count()
+    fresh = probed.filter(~F.col("maybe_dup")).drop("maybe_dup")
+    candidates = probed.filter(F.col("maybe_dup")).drop("maybe_dup")
     verified_new = candidates.join(
         existing.select("h").distinct(), "h", "left_anti"
     )
     survivors = _gate(fresh.unionByName(verified_new)).drop("h")
-    n_appended = survivors.count()
 
     # the stage sits inside the store under a name Spark's listing skips;
-    # an unfinished stage (no _SUCCESS) is overwritten by this write
-    survivors.write.mode("overwrite").parquet(stage)
+    # an unfinished stage (no _SUCCESS) is overwritten by this write, and
+    # the appended count is observed on it rather than counted apart
+    appended = Observation("appended")
+    survivors.observe(appended, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(stage)
     _publish(store, stage, batch_id)
     return {
         "batch_id": batch_id,
         "replayed": False,
-        "incoming": n_incoming,
-        "bloom_candidates": n_candidates,
-        "appended": n_appended,
+        "incoming": counts["incoming"],
+        "bloom_candidates": counts["bloom_candidates"],
+        "appended": appended.get["n"],
     }
 
 

@@ -1,6 +1,7 @@
 """SparkSession factory.
 
-Local testing runs on local[$SPARK_GRAFT_CPUS] (single JVM); the configs
+Local testing runs on local[$SPARK_GRAFT_CPUS] (single JVM), where
+SPARK_GRAFT_CPUS defaults to the CPUs this process may run on; the configs
 below are chosen so the same logical plans survive a 1000-executor cluster:
 AQE on (runtime coalesce + skew-join), shuffle partitions sized to cores
 locally (on a real cluster AQE re-coalesces), Arrow enabled for the few
@@ -56,6 +57,29 @@ def _default_local_dir() -> str | None:
     return d
 
 
+def _cpus() -> int:
+    """Local cores and shuffle partitions: SPARK_GRAFT_CPUS, else the CPUs
+    this process may run on. A value that is not a positive integer warns
+    and falls back to that default instead of failing session start."""
+    default = len(os.sched_getaffinity(0))
+    raw = os.environ.get("SPARK_GRAFT_CPUS")
+    if raw is None:
+        return default
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        import warnings
+
+        warnings.warn(
+            f"SPARK_GRAFT_CPUS={raw!r} is not a positive integer; using {default}.",
+            stacklevel=2,
+        )
+        return default
+    return n
+
+
 def get_spark(
     app_name: str = "mergeextractor-spark",
     extra_conf: dict[str, str] | None = None,
@@ -64,7 +88,7 @@ def get_spark(
     re-enable the UI so the /api/v1 status endpoint serves per-stage
     executorCpuTime / shuffle bytes; everything else keeps the UI off:
     it is pure overhead for tests and the driver gate)."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = _cpus()
     # Shuffle/spill scratch on tmpfs (guide §2.1: local disk bandwidth can
     # be the tighter limit for shuffle files; here it is by far).  On this
     # sandbox the root disk is a Firecracker virtio volume whose page-cache

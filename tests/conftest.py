@@ -37,6 +37,17 @@ def pytest_configure(config):
     )
 
 
+def pytest_terminal_summary(terminalreporter):
+    """The golden cascade tests skip when their reference file is absent;
+    say so in the summary instead of leaving it to the skip count."""
+    golden = sys.modules.get("test_golden_cascade")
+    if golden is not None and not os.path.exists(golden._REF_FILE):
+        terminalreporter.write_line(
+            f"golden cascade coverage is off: {golden._REF_FILE} is missing",
+            yellow=True,
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from mergeextractor_spark.session import get_spark

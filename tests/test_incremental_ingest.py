@@ -92,6 +92,18 @@ def test_crash_before_marker_recovers_without_duplicates(spark, tmp_path):
     assert after == snap  # store content bit-identical across the recovery
 
 
+def test_ingest_batch_runs_its_bloom_probe_once(spark, tmp_path):
+    """The probe is cut once and read by every consumer: the counts come
+    from one aggregate over it and ``appended`` is observed on the stage
+    write, so one batch stays within eight Spark jobs (17 when each count
+    was its own action over the uncut probe)."""
+    _, store, batch = _setup(spark, tmp_path)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job = scheduler.nextJobId()
+    ingest_batch(spark, store, batch, "b1")
+    assert scheduler.nextJobId() - first_job <= 8
+
+
 @pytest.fixture(scope="module")
 def twin_case(spark, tmp_path_factory, counting_move):
     """A store, a batch that carries one new text twice — once re-keyed,

@@ -123,3 +123,24 @@ def test_session_tuning_resets_cached_debugging_flag(spark, monkeypatch):
     monkeypatch.setattr(errutils, "_enable_debugging_cache", True)
     apply_session_tuning(spark)
     assert errutils.is_debugging_enabled() is False
+
+
+def test_cpu_default_fits_the_host(monkeypatch):
+    """Local cores default to the CPUs this process may run on, and a
+    SPARK_GRAFT_CPUS that is not a positive integer warns and falls back
+    to that default instead of failing session start."""
+    import os
+
+    from mergeextractor_spark.session import _cpus
+
+    host = len(os.sched_getaffinity(0))
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert _cpus() == host
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert _cpus() == 3
+
+    for bad in ("", "four", "2.5", "0", "-4"):
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
+        with pytest.warns(UserWarning, match="not a positive integer"):
+            assert _cpus() == host
