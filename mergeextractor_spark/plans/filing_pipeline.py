@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..functions.dates import date_window_lb, date_window_ub
 from ..functions.strings import strip_parens, word_boundary_pattern
+from ..operators._util import truncate_lineage
 from ..operators.cascade import chunk_and_cascade
 from ..operators.enrich import (
     FOLLOW_CHUNKS,
@@ -249,14 +250,20 @@ def separator_pipeline(documents: DataFrame, done: DataFrame | None = None) -> D
     if done is not None:
         documents = documents.join(done.select("main_index"), "main_index", "left_anti")
 
-    # fused chunk+cascade, cached once: the chunk set (follow-join, abbrev
-    # definitions) and the cascade hits both read this single UDF output
-    fused = chunk_and_cascade(
-        documents.select("main_index", "content"),
-        text_col="content",
-        id_cols=["main_index"],
-        passage_fn=separator_passage,
-    ).cache()
+    # fused chunk+cascade, computed once: the chunk set (follow-join, abbrev
+    # definitions) and the cascade hits both read this single UDF output.
+    # A lazy lineage cut, not .cache(): the ContextCleaner frees its blocks
+    # once the frame is dropped, where a cache would stay pinned in the
+    # CacheManager for the life of the session (one more per call).
+    fused = truncate_lineage(
+        chunk_and_cascade(
+            documents.select("main_index", "content"),
+            text_col="content",
+            id_cols=["main_index"],
+            passage_fn=separator_passage,
+        ),
+        eager=False,
+    )
     chunks = fused.select("main_index", "chunk_idx", "chunk")
     hits = fused.filter(F.col("passage").isNotNull())
 

@@ -6,6 +6,18 @@ below are chosen so the same logical plans survive a 1000-executor cluster:
 AQE on (runtime coalesce + skew-join), shuffle partitions sized to cores
 locally (on a real cluster AQE re-coalesces), Arrow enabled for the few
 pandas-UDF stages, UTC session timezone for oracle parity.
+
+Generated code is compiled once per session: the whole-stage and
+projection class cache (``spark.sql.codegen.cache.maxEntries``) holds 4096
+classes instead of Spark's 100. The plans here run the same shapes round
+after round, and one round needs more classes than 100: about 280 for a
+``lifecycle`` round and about 225 for a ``query`` round (perfbench), so at
+the default the LRU evicts every class before the next round asks for it
+again and each round pays Janino compiles plus C2 JIT of the fresh
+bytecode. A whole perfbench process compiles ~300 classes with the cache
+sized (Metaspace 160-180 MB); 4096 also about covers the largest working
+set measured, a full ``tools/selfcheck.py`` pass at sf0.001 (4,074
+compiles in one process, Metaspace 248 MB).
 """
 
 from __future__ import annotations
@@ -124,6 +136,12 @@ def get_spark(
         # results and plans are unchanged.  Flip it back on when
         # debugging a failing query.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # Generated-class cache sized to the session's working set (static
+        # conf: builder only; see the module docstring).  A ``lifecycle``
+        # process compiles ~300 classes (Metaspace ~180 MB), a full
+        # selfcheck pass ~4,070 (Metaspace 248 MB): 4096 holds both, where
+        # Spark's 100 is less than one perfbench round.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
@@ -136,7 +154,11 @@ def get_spark(
 
 def apply_session_tuning(spark: SparkSession) -> SparkSession:
     """Idempotent runtime tuning for a session we did not create (the driver
-    hands us one in ``__spark_entry__``). Only runtime-settable confs."""
+    hands us one in ``__spark_entry__``). Only runtime-settable confs.
+
+    Such a session keeps Spark's 100-entry generated-class cache:
+    ``spark.sql.codegen.cache.maxEntries`` is static, so only ``get_spark``
+    can size it (see there)."""
     try:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.adaptive.enabled", "true")

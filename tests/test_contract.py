@@ -103,6 +103,18 @@ def test_profiler_reports_hot_nodes(spark, capsys):
     assert "nodes >= 0.0 ms shown" in out
 
 
+def test_profiler_header_reports_compiles(spark, capsys):
+    """The profile header says how many classes the key compiled and how
+    long the compiles took, so a cold key shows its compile cost."""
+    import re
+
+    import tools.profile_query as pq
+
+    pq.profile("agg_org_topk", "/root/testdata/sf0.001", min_ms=1e9)
+    header = capsys.readouterr().out.splitlines()[0]
+    assert re.search(r"compiled \d+ classes in \d+\.\d{3}s$", header), header
+
+
 def test_no_registered_output_is_canonicalizer_hostile(spark):
     """The driver canonicalizes results with a pandas sort; array/map/
     struct output columns raise 'unhashable type' there (the r5

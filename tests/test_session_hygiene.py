@@ -144,3 +144,61 @@ def test_cpu_default_fits_the_host(monkeypatch):
         monkeypatch.setenv("SPARK_GRAFT_CPUS", bad)
         with pytest.warns(UserWarning, match="not a positive integer"):
             assert _cpus() == host
+
+
+def _compiles(spark) -> int:
+    """Janino compiles so far in this JVM (one count per generated class
+    that missed the codegen class cache)."""
+    jvm = spark._jvm
+    return jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_lifecycle_pass_reuses_its_generated_classes(spark, deals_df, filings_df):
+    """The session's codegen class cache holds a lifecycle pass's working
+    set (~150 classes here, more than Spark's default of 100 entries), so
+    a second identical pass compiles nothing new."""
+    from mergeextractor_spark.plans.filing_pipeline import (
+        crawler_audit,
+        identifier_pipeline,
+        separator_pipeline,
+    )
+
+    def one_pass():
+        crawler_audit(deals_df, filings_df).collect()
+        identifier_pipeline(separator_pipeline(filings_df)).collect()
+
+    one_pass()
+    before = _compiles(spark)
+    one_pass()
+    assert _compiles(spark) - before <= 5
+
+
+def test_separator_leaves_no_cached_relation(spark, filings_df):
+    """Repeated separator runs in one long-lived session pin nothing in
+    the SQL CacheManager: its fused chunk+cascade output is a lineage cut
+    the ContextCleaner frees, not a cache nobody unpersists."""
+    from mergeextractor_spark.plans.filing_pipeline import separator_pipeline
+
+    spark.catalog.clearCache()
+    for _ in range(3):
+        assert separator_pipeline(filings_df).count() > 0
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_pretouch_heap_fits_half_of_ram(tmp_path):
+    """tools/bench_scaling.py pre-touches at most half of MemTotal, warns
+    when it caps, and keeps the request on a host that fits it."""
+    import warnings
+
+    from tools.bench_scaling import pretouch_heap_gb
+
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       16479424 kB\nMemFree:         1000000 kB\n")
+    with pytest.warns(UserWarning, match="pre-touching 7 GiB"):
+        assert pretouch_heap_gb(str(meminfo)) == 7
+
+    meminfo.write_text("MemTotal:       131072000 kB\n")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        assert pretouch_heap_gb(str(meminfo)) == 16
+        assert pretouch_heap_gb(str(tmp_path / "absent")) == 16

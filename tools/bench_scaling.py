@@ -284,6 +284,31 @@ def bench_at(spark, sf_dir: str, runs: int) -> dict[str, float]:
     return out
 
 
+def pretouch_heap_gb(meminfo: str = "/proc/meminfo") -> int:
+    """Driver heap (GiB) to pre-touch: 16, because derived-sf1 probes
+    checkpoint multi-GB frames, capped at half of the host's ``MemTotal``
+    so the pre-touched heap leaves RAM for the Python workers and the
+    tmpfs shuffle scratch.  Warns when it caps; a host without a
+    readable ``MemTotal`` gets 16."""
+    want_gb = 16
+    try:
+        with open(meminfo) as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, IndexError, ValueError):
+        return want_gb
+    cap = max(1, kb // (2 << 20))
+    if want_gb <= cap:
+        return want_gb
+    import warnings
+
+    warnings.warn(
+        f"{want_gb} GiB heap does not fit half of this host's "
+        f"{kb / (1 << 20):.1f} GiB RAM; pre-touching {cap} GiB.",
+        stacklevel=2,
+    )
+    return cap
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--runs", type=int, default=3)
@@ -300,13 +325,13 @@ def main() -> None:
     # Fixed pre-touched heap (r14 thrash root cause, PERFORMANCE.md):
     # exponent measurements must not absorb re-fault storms from heap
     # pages the GC gave back to a host that discards them (Firecracker
-    # free-page reporting).  16g because derived-sf1 probes checkpoint
-    # multi-GB frames.
+    # free-page reporting).  Sized by pretouch_heap_gb.
+    heap = pretouch_heap_gb()
     spark = get_spark(
         "bench-scaling",
         extra_conf={
-            "spark.driver.memory": "16g",
-            "spark.driver.extraJavaOptions": "-Xms16g -XX:+AlwaysPreTouch",
+            "spark.driver.memory": f"{heap}g",
+            "spark.driver.extraJavaOptions": f"-Xms{heap}g -XX:+AlwaysPreTouch",
         },
     )
     spark.range(1).count()

@@ -8,7 +8,9 @@ process shows only py4j waits. After executing the query once with the
 noop sink, every node of the executed plan is printed with its metrics
 (rows, time, spill, shuffle bytes), filtered to nodes above a floor —
 same "show me where the time went, hide the noise" contract as the
-reference tool.
+reference tool. The header line also gives the classes the key compiled
+(construction and execution) and their compile time, so a cold key shows
+its compile cost next to its node times.
 
 Usage:
     python tools/profile_query.py KEY [--sf /root/testdata/sf0.1] [--min-ms 10]
@@ -52,6 +54,9 @@ def profile(key: str, sf_dir: str, min_ms: float) -> None:
     spark = get_spark("profile")
     q = reg[key]
 
+    codegen = spark._jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    n0, ns0 = compiles.getCount(), codegen.compileTime()
     df = q.spark(spark, sf_dir)
     # execute through the DataFrame's OWN QueryExecution (a noop write
     # builds a separate one and this plan's metrics would stay empty);
@@ -61,6 +66,8 @@ def profile(key: str, sf_dir: str, min_ms: float) -> None:
     t0 = time.time()
     jqe.toRdd().count()
     wall = time.time() - t0
+    n_compiled = compiles.getCount() - n0
+    compile_s = (codegen.compileTime() - ns0) / 1e9
 
     # walk the executed plan (post-AQE final plan) and pull node metrics
     jplan = jqe.executedPlan()
@@ -99,7 +106,10 @@ def profile(key: str, sf_dir: str, min_ms: float) -> None:
 
     walk(jplan, 0)
 
-    print(f"== {key} at {sf_dir}: wall {wall:.3f}s (JVM-side execution, cold plan)")
+    print(
+        f"== {key} at {sf_dir}: wall {wall:.3f}s (JVM-side execution, cold plan); "
+        f"compiled {n_compiled} classes in {compile_s:.3f}s"
+    )
     shown = 0
     for best_time, label, detail in rows:
         if best_time >= min_ms:
