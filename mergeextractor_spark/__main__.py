@@ -20,7 +20,7 @@ def main() -> None:
     ap = argparse.ArgumentParser(prog="mergeextractor_spark")
     sub = ap.add_subparsers(dest="cmd", required=True)
 
-    sub.add_parser("list", help="list registered operator keys")
+    sub.add_parser("list", help="list registered keys: key, defining module, doc")
 
     run = sub.add_parser("run", help="run one operator")
     run.add_argument("key")
@@ -46,7 +46,7 @@ def main() -> None:
 
     if args.cmd == "list":
         for key, q in reg.items():
-            print(f"{key:32s} {q.doc.splitlines()[0][:80] if q.doc else ''}")
+            print(f"{key:28s} {q.spark.__module__:48s} {q.doc.strip().splitlines()[0][:80]}")
         return
 
     from .session import get_spark

@@ -87,10 +87,5 @@ def fuzz_partial_ratio(a: str, b: str) -> float:
 
 
 @F.pandas_udf(T.DoubleType())
-def fuzz_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
-    return pd.Series([fuzz_ratio(x or "", y or "") for x, y in zip(a, b)])
-
-
-@F.pandas_udf(T.DoubleType())
 def fuzz_partial_ratio_udf(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series([fuzz_partial_ratio(x or "", y or "") for x, y in zip(a, b)])

@@ -133,11 +133,6 @@ def date_str(c: Column) -> Column:
     return F.date_format(c, "yyyy-MM-dd")
 
 
-def ts_str(c: Column) -> Column:
-    """Emit timestamps as 'yyyy-MM-dd HH:mm:ss' strings on both sides."""
-    return F.date_format(c, "yyyy-MM-dd HH:mm:ss")
-
-
 def drain_persistent_rdds(spark, sql_cache: bool = True, gc_sweep: bool = False) -> int:
     """Unpersist EVERY persistent RDD in the session (localCheckpoint
     blocks included), optionally plus the SQL CacheManager — the
@@ -153,7 +148,7 @@ def drain_persistent_rdds(spark, sql_cache: bool = True, gc_sweep: bool = False)
     checkpoint tips unified memory into storage-eviction thrash:
     measured 12 s → 278 s between two IDENTICAL consecutive runs of
     agg_percentile_approx, flat 11-14 s across four runs once the sweep
-    runs in between (PERFORMANCE.md r11).
+    runs in between.
 
     ``sql_cache=False`` sweeps ONLY the RDD blocks: superseded
     checkpoints are never reused across constructions (each construct
@@ -174,7 +169,7 @@ def drain_persistent_rdds(spark, sql_cache: bool = True, gc_sweep: bool = False)
     may not GC for a whole multi-sf benchmark session — the r11
     measurement showed the SAME sf1 run reading 15-20 s with a GC nudge
     vs 115-330 s without one after earlier sf phases filled the heap
-    with uncollected session garbage (PERFORMANCE.md r11). Costs ~1-2 s;
+    with uncollected session garbage. Costs ~1-2 s;
     use at pass/key boundaries, not in hot loops."""
     jsc = spark.sparkContext._jsc.sc()
     rdds = jsc.getPersistentRDDs()

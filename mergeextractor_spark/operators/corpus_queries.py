@@ -321,8 +321,8 @@ def agg_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # codegen'd projection: transform()'s per-element lambda is evaluated
     # through the interpreted HigherOrderFunction path, measured 2-7x the
     # executor CPU of the identical slice/concat_ws/md5 chain compiled by
-    # whole-stage codegen after the Generate (OPTIMIZATION_r14.md). Same
-    # gram text, same md5, same multiset of rows — map-side either way.
+    # whole-stage codegen after the Generate. Same gram text, same md5,
+    # same multiset of rows — map-side either way.
     #
     # Source sets ride a LONG BITMASK (r14): `source` is a bounded
     # dimension (20 fixture values; subcorpora stay in the dozens at
@@ -331,13 +331,12 @@ def agg_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partial aggregation — instead of sort_array(collect_set(...)),
     # whose ObjectHashAggregate buffers fell back to sort-based
     # aggregation in EVERY map task (numTasksFallBacked=32, 37.4 s of
-    # summed task time at sf0.1 — the plan-profile evidence in
-    # OPTIMIZATION_r14.md).  The mask is bijective with the sorted set
-    # (bit i == sorted-source i), so pair expansion over the tiny
-    # mask-count frame yields the identical counts.  The gram key
-    # shuffles as the 8-byte unhex of the 16-hex md5 prefix — bijective
-    # with the hex string, so collision behavior is byte-identical to
-    # the oracle's substr(md5, 1, 16).
+    # summed task time at sf0.1 in the plan profile).  The mask is
+    # bijective with the sorted set (bit i == sorted-source i), so pair
+    # expansion over the tiny mask-count frame yields the identical
+    # counts.  The gram key shuffles as the 8-byte unhex of the 16-hex
+    # md5 prefix — bijective with the hex string, so collision behavior
+    # is byte-identical to the oracle's substr(md5, 1, 16).
     srcs = _overlap_sources(spark, sf_dir)
     if not srcs:
         # empty corpus: no sources → no pairs (a zero-entry map/array

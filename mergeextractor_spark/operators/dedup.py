@@ -364,8 +364,7 @@ def minhash_pairs_df(
     threshold: float = 0.2,
 ) -> DataFrame:
     """``minhash_pairs`` over an arbitrary (doc_id, text, ...) DataFrame —
-    the form a pipeline composes (e.g. over exact-dedup survivors) and the
-    one tools/stress.py drives at K× replication."""
+    the form a pipeline composes (e.g. over exact-dedup survivors)."""
     sh = _cache_shingles(_spread_doc_shingles(d))
     sig = sh.groupBy("doc_id").agg(*_minhash_agg_cols(n_hashes))
     # single-pass banding (r14, _bands_of): the inline b-way union this
@@ -973,7 +972,8 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = F.filter(F.split("text", r"\s+"), lambda x: x != "")
     tok = d.select("doc_id", w.alias("w")).filter(F.size("w") >= SPAN_W)
     # explode the window-start range, hash in a codegen'd projection (not a
-    # transform() lambda — interpreted HOF path, see OPTIMIZATION_r14.md);
+    # transform() lambda — the interpreted HOF path cost 2-7x the executor
+    # CPU on agg_source_overlap's identical shingle stage);
     # the sequence value IS start_pos, so no posexplode arithmetic either
     # gh as the 16-byte unhex'd md5 (bijective with the hex string; it
     # never reaches the output) and shared-window detection as a single
@@ -1126,8 +1126,8 @@ def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(t(spark, sf_dir, "documents"))
     tok = d.select("doc_id", words(F.col("text")).alias("ws"))
     # explode the block-index range, build each block in a codegen'd
-    # projection (not a transform() lambda — interpreted HOF path, see
-    # OPTIMIZATION_r14.md); the sequence value IS pos
+    # projection (not a transform() lambda — interpreted HOF path, 2-7x the
+    # executor CPU on agg_source_overlap's shingles); the sequence value IS pos
     paras = tok.select(
         "doc_id",
         "ws",

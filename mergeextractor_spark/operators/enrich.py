@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from ..functions.strings import first_token
+
 FOLLOW_CHUNKS = 11  # winner + next 11 chunks, ref ChunkProcessor.py:407
 
 # Regex-NER stand-in: 2+ capitalized words (allowing Inc/Corp/& tokens).
@@ -83,11 +85,6 @@ def merger_header(company_a: Column, company_b: Column) -> Column:
         company_b,
         F.lit(":\n"),
     )
-
-
-def first_token(name: Column) -> Column:
-    """Company token = first word minus domain suffix (ref ChunkProcessor.py:414)."""
-    return F.element_at(F.split(F.element_at(F.split(F.lower(F.trim(name)), r"\s+"), 1), r"\."), 1)
 
 
 def company_tokens_present(passage: Column, company_a: Column, company_b: Column) -> Column:

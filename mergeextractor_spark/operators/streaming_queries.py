@@ -214,7 +214,6 @@ def agg_hll_daily_union(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 SLIDE_SEC = 300
-SLIDE_WINDOW_SEC = 600
 
 
 @register(

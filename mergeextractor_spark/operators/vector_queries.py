@@ -56,8 +56,7 @@ def cosine_pre(a: str, b: str, na: str, nb: str) -> Column:
     only the dot per pair. The division consumes the identical IEEE-754
     operand bits (a vector's norm does not depend on which pair it is in),
     so every result — and every oracle hash — is unchanged by construction
-    (measured ~2.5x executor-CPU on the bruteforce pair stage,
-    OPTIMIZATION_r14.md)."""
+    (measured ~2.5x less executor CPU on the bruteforce pair stage)."""
     return F.expr(f"{_dot_sql(a, b)} / ({na} * {nb})")
 
 

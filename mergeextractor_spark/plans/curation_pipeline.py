@@ -12,8 +12,9 @@ value-checked end-to-end against a DuckDB oracle:
 Scale shape: scrub + tokenize + stats are one codegen'd scan stage; the
 exact dedup is one shuffle on (md5, doc_id); near-dup runs ONLY on the
 exact-dedup survivors (the canonical ordering — identical copies never
-reach the banded join, see PERFORMANCE.md stress study); every shuffle
-after the scan carries hashes and ids, never text.
+reach the banded join, where a cluster of c identical signatures would
+yield c² candidate pairs); every shuffle after the scan carries hashes
+and ids, never text.
 """
 
 from __future__ import annotations

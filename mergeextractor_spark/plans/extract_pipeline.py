@@ -49,8 +49,8 @@ def score_chunks(chunks: DataFrame) -> DataFrame:
     # 5-word query array — so the empty-token filter() (an interpreted
     # higher-order function) and the array_distinct are provably
     # value-neutral here and are dropped: the whole score is now a plain
-    # codegen'd chain (OPTIMIZATION_r14.md; oracle keeps list_distinct +
-    # list_filter and hashes identically).
+    # codegen'd chain (the oracle keeps list_distinct + list_filter and
+    # hashes identically).
     toks = F.split(F.lower("chunk"), r"\s+")
     score = F.size(F.array_intersect(toks, F.array(*[F.lit(w) for w in QUERY_TOKENS])))
     return chunks.withColumn("score", score.cast("long"))

@@ -121,10 +121,11 @@ def pipeline_pretrain_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # stage barrier: the LM stage has three consumers (vocab, total, the
     # frequency join back); without it each one re-scans the parquet and
-    # re-runs the whole gate battery (4 FileScans measured — the exact
-    # multi-consumer lineage-replay shape behind the r4 bench
-    # regression, PERFORMANCE.md). Materialize the survivors once; the
-    # funnel's selectivity makes the checkpoint smaller than the input.
+    # re-runs the whole gate battery (4 FileScans measured — the
+    # multi-consumer lineage-replay shape that once grew a curation
+    # flagship to 9 parquet scans and 2x its wall). Materialize the
+    # survivors once; the funnel's selectivity makes the checkpoint
+    # smaller than the input.
     kept = truncate_lineage(
         gated.filter(
             (F.col("en_ratio") > EN_RATIO_MIN)

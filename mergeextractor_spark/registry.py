@@ -39,14 +39,19 @@ REGISTRY: dict[str, Query] = {}
 
 
 def register(key: str, oracle: str, doc: str = "", eager: bool = False):
-    """Decorator: register a (spark_fn, oracle_sql) pair under ``key``."""
+    """Decorator: register a (spark_fn, oracle_sql) pair under ``key``.
+
+    Every key carries a doc (``doc=`` or the function's docstring): the
+    registry is the key inventory that ``python -m mergeextractor_spark
+    list`` prints."""
 
     def wrap(fn: Callable[[SparkSession, str], DataFrame]):
         if key in REGISTRY:
             raise KeyError(f"duplicate query key {key!r}")
-        REGISTRY[key] = Query(
-            key=key, spark=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""), eager=eager
-        )
+        text = doc or fn.__doc__ or ""
+        if not text.strip():
+            raise ValueError(f"query key {key!r} has neither doc nor a docstring")
+        REGISTRY[key] = Query(key=key, spark=fn, oracle=oracle, doc=text, eager=eager)
         return fn
 
     return wrap

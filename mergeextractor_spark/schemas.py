@@ -2,35 +2,14 @@
 
 The reference never declares schemas (headerless CSV read positionally at
 config.py:22-27; ad-hoc Mongo docs at Processor.py:290-296,
-SeperatorHandler.py:82-88, InitiatorIdentifier.py:37). Here every dataset
-is typed once.
+SeperatorHandler.py:82-88, InitiatorIdentifier.py:37). Here the filing
+document store is typed once; the other datasets are typed where they are
+produced (e.g. ``operators/llm.py`` for the identifier's output).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# truncatedData.csv usage — only columns 1-3 are ever read; row position is
-# the key, made explicit as main_index (SURVEY §1.1).
-DEALS = T.StructType(
-    [
-        T.StructField("main_index", T.LongType(), False),
-        T.StructField("announcement_date", T.StringType()),  # M/d/yyyy
-        T.StructField("company_a", T.StringType()),
-        T.StructField("company_b", T.StringType()),
-    ]
-)
-
-# EDGAR full-text-search hits (CrawlerSupport.py:133-141,336-346).
-FILINGS_HITS = T.StructType(
-    [
-        T.StructField("main_index", T.LongType(), False),
-        T.StructField("total_value", T.LongType()),
-        T.StructField("entities", T.ArrayType(T.StringType())),
-        T.StructField("ciks", T.ArrayType(T.StringType())),
-        T.StructField("adsh", T.StringType()),
-    ]
-)
 
 # The "DataSet" store: one accepted filing per deal (Processor.py:290-296).
 FILING_DOCUMENTS = T.StructType(
@@ -40,37 +19,5 @@ FILING_DOCUMENTS = T.StructType(
         T.StructField("company_b", T.StringType()),
         T.StructField("url", T.StringType()),
         T.StructField("content", T.StringType()),
-    ]
-)
-
-# The "ExtractedSections" store (SeperatorHandler.py:82-88).
-EXTRACTED_SECTIONS = T.StructType(
-    [
-        T.StructField("main_index", T.LongType(), False),
-        T.StructField("company_a", T.StringType()),
-        T.StructField("company_b", T.StringType()),
-        T.StructField("content", T.StringType()),
-    ]
-)
-
-# outputUnion.csv row (InitiatorIdentifier.py:37, schema config.py:167-208).
-INITIATOR_RESULTS = T.StructType(
-    [
-        T.StructField("main_index", T.LongType(), False),
-        T.StructField("initiator", T.StringType()),
-        T.StructField("date_of_initiation", T.StringType()),
-        T.StructField("type_of_initiation", T.StringType()),
-        T.StructField("stated_reasons", T.StringType()),
-    ]
-)
-
-# output.csv row (CrawlerHandler.py:34).
-CRAWLER_OUTPUT = T.StructType(
-    [
-        T.StructField("main_index", T.LongType(), False),
-        T.StructField("announcement_date", T.StringType()),
-        T.StructField("tmanames", T.StringType()),
-        T.StructField("amanames", T.StringType()),
-        T.StructField("url", T.StringType()),
     ]
 )

@@ -104,11 +104,10 @@ def get_spark(
     # Shuffle/spill scratch on tmpfs (guide §2.1: local disk bandwidth can
     # be the tighter limit for shuffle files; here it is by far).  On this
     # sandbox the root disk is a Firecracker virtio volume whose page-cache
-    # pages are reclaimed host-side (free-page reporting — the r14 thrash
-    # root cause, PERFORMANCE.md r14), so every shuffle write/read re-faults
-    # pages at fault-storm rates charged to task threads as SYSTEM time:
-    # a bare 5000-row repartition measured 5.5-7.1 s executor-CPU on the
-    # default /tmp vs 0.6-0.8 s on /dev/shm (OPTIMIZATION_r14.md, ~10x).
+    # pages are reclaimed host-side (free-page reporting), so every shuffle
+    # write/read re-faults pages at fault-storm rates charged to task
+    # threads as SYSTEM time: a bare 5000-row repartition measured 5.5-7.1 s
+    # executor-CPU on the default /tmp vs 0.6-0.8 s on /dev/shm (~10x).
     # RAM-backed scratch is the sandbox analogue of the fast local NVMe a
     # real cluster mounts for spark.local.dir; SPARK_GRAFT_LOCAL_DIR
     # overrides (set it to the NVMe array in production; spills larger

@@ -37,9 +37,7 @@ TABLE_NAMES = [
 # plain logical plans (no pinned executor memory). NOTE (ADVICE r3): the
 # cached DataFrames strongly reference their SparkSession, so the weak key
 # can never be collected while its entry lives — entries are pinned for the
-# life of the process by design (a handful of logical plans per session;
-# call evict_session_caches(spark) from anything that stops sessions in a
-# long-lived process).
+# life of the process by design (a handful of logical plans per session).
 _DF_MEMO: "weakref.WeakKeyDictionary[SparkSession, dict[tuple[str, str], DataFrame]]" = (
     weakref.WeakKeyDictionary()
 )
@@ -68,20 +66,6 @@ def normalize_ns_or_us_ts(col: str):
         f"THEN {col} DIV 1000 ELSE {col} END AS LONG))"
     )
 
-
-def evict_session_caches(spark: SparkSession) -> None:
-    """Drop every session-keyed memo for ``spark``.
-
-    The WeakKeyDictionary memos here and in operators/multimodal.py hold
-    DataFrames whose values reference their session key, so GC alone never
-    evicts them (ADVICE r3); call this before ``spark.stop()`` in
-    processes that cycle many sessions.
-    """
-    _DF_MEMO.pop(spark, None)
-    _TUNED.pop(spark, None)
-    from ..operators import multimodal
-
-    multimodal._MEDIA_CACHE.pop(spark, None)
 
 # Below this many bytes of parquet in sf_dir, size the shuffle to the
 # session's own parallelism: the driver hands queries an untuned session

@@ -4,7 +4,7 @@ expressions let hypothesis hammer the math over arbitrary mass vectors
 without spinning Spark per example; a handful of fixed vectors then
 cross-check the Spark frames against the mirrors.
 
-The load-bearing waterfill claim (docstring + PERFORMANCE.md): ONE
+The load-bearing waterfill claim (the operator's docstring): ONE
 redistribution round conserves the budget exactly whenever the budget is
 feasible. Proof sketch the test exercises: leftover = Σ_capped(target -
 cap_i) and headroom_sum = Σ_uncapped(cap_i - target), so leftover ≤

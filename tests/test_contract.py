@@ -1,6 +1,9 @@
 """Driver-contract regression guards."""
 
 import importlib.util
+import os
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _load_entry():
@@ -138,13 +141,74 @@ def test_no_registered_output_is_canonicalizer_hostile(spark):
     assert not offenders, offenders
 
 
-def test_every_registered_key_is_in_coverage_map():
-    """COVERAGE.md is the judge-facing key inventory — every registered
-    key must have a row (12 had silently drifted out by r6)."""
+def test_list_names_every_key_with_its_module_and_doc():
+    """The registry is the key inventory: ``python -m mergeextractor_spark
+    list`` prints one line per registered key, in registration order,
+    with its defining module and the first line of its doc. Module import
+    order in this process depends on which tests ran first, so the order
+    is compared within each module."""
+    import subprocess
+    import sys
+
     from mergeextractor_spark.registry import load_all
 
-    cov = open("/root/repo/COVERAGE.md").read()
-    missing = [k for k in load_all() if k not in cov]
+    out = subprocess.run(
+        [sys.executable, "-m", "mergeextractor_spark", "list"],
+        cwd=REPO, capture_output=True, text=True, check=True,
+    ).stdout
+    rows = [line.split(None, 2) for line in out.splitlines()]
+    reg = load_all()
+    keys = [r[0] for r in rows]
+    assert sorted(keys) == sorted(reg)
+    for row in rows:
+        assert len(row) == 3, row
+        key, module, doc = row
+        assert module == reg[key].spark.__module__, row
+        assert doc.strip(), row
+    for module in {q.spark.__module__ for q in reg.values()}:
+        in_module = [k for k in reg if reg[k].spark.__module__ == module]
+        assert [k for k in keys if reg[k].spark.__module__ == module] == in_module
+
+
+def test_register_rejects_a_key_without_doc():
+    """A key without ``doc`` or a docstring has no inventory line, so
+    ``register()`` refuses it before touching the registry."""
+    import pytest
+
+    from mergeextractor_spark import registry
+
+    before = dict(registry.REGISTRY)
+
+    def undocumented(spark, sf_dir):
+        return spark.range(1)
+
+    for doc in ("", "  \n "):
+        with pytest.raises(ValueError):
+            registry.register("undocumented_key", oracle="SELECT 1", doc=doc)(undocumented)
+    assert registry.REGISTRY == before
+
+
+def test_cited_repo_files_exist():
+    """Every repo-root document that code, README or the verify notes cite
+    by name exists, so no comment points at a deleted diary."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(REPO)
+    cite = re.compile(
+        r"\b([A-Z][A-Z0-9_]*(_r[0-9]+)?|[a-z][a-z0-9_]*_r[0-9]+[a-z0-9_]*)\.(md|json|txt)\b"
+    )
+    sources = [root / "README.md", *(root / ".claude/skills/verify").glob("*.md")]
+    for d in ("mergeextractor_spark", "tools", "tests", "plugins"):
+        sources += sorted((root / d).rglob("*.py"))
+    missing = sorted(
+        {
+            f"{src.relative_to(root)}: {m.group(0)}"
+            for src in sources
+            for m in cite.finditer(src.read_text())
+            if not (root / m.group(0)).exists()
+        }
+    )
     assert not missing, missing
 
 

@@ -370,7 +370,7 @@ def test_banded_dedup_candidate_join_is_shuffled_hash(spark):
     # rows — corpus-sized by construction. Catalyst's size estimate does
     # not propagate through Generate, so without the pinned shuffle_hash
     # hint it builds a multi-million-row broadcast hash table (measured
-    # 86.7 s vs 9.9 s at 200k signatures, PERFORMANCE.md r7). Pin the
+    # 86.7 s vs 9.9 s at 200k signatures). Pin the
     # ShuffledHashJoin on the oracle key that exercises the shared stage.
     plan = plan_of(spark, "dedup_signature_banded")
     assert "ShuffledHashJoin" in plan, plan[:500]
@@ -403,7 +403,7 @@ def test_governance_keys_single_scan(spark):
     """The r8 governance/recipe keys must read their fact table exactly
     once: global totals come from result-sized windows, never from
     broadcast-total cross joins that re-execute the upstream scan
-    (PERFORMANCE.md 'r8 late additions')."""
+    (measured on the first drafts: 4 FileScans for the waterfill)."""
     for key in (
         "sample_token_budget",
         "agg_source_gini",

@@ -5,8 +5,7 @@ blocks survive ``spark.catalog.clearCache()`` — the catalog call only
 clears the SQL CacheManager, while the RDD storage blocks pinned by
 every ``truncate_lineage``/``partitioned_*`` construction accumulate
 until a driver GC the ContextCleaner may never get on a large heap
-(measured 12 s → 278 s between two IDENTICAL runs at derived-sf1;
-PERFORMANCE.md r11).  ``_util.drain_persistent_rdds`` is the fix, wired
+(measured 12 s → 278 s between two IDENTICAL runs at derived-sf1).  ``_util.drain_persistent_rdds`` is the fix, wired
 into tools/bench_scaling.py; these pins make sure neither
 half of the behavior silently rots: (a) clearCache alone really does
 leave the blocks behind (if a Spark upgrade changes that, the sweep can

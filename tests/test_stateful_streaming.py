@@ -27,58 +27,3 @@ def test_stateful_dedup_matches_batch_distinct(spark):
     }
     assert got == expect
 
-
-def test_transform_with_state_running_totals(spark):
-    """Spark 4 transformWithState (typed ValueState on RocksDB): the final
-    per-user running totals must equal the batch groupBy aggregate.
-
-    Skipped in the sandbox: the transformWithState Python protocol needs
-    `protobuf`, which cannot be installed here (no pip, no network) —
-    the same documented blocker class as sentence-transformers. The
-    always-on stateful path is covered by test_stateful_dedup above."""
-    import pytest
-
-    from mergeextractor_spark.streaming.stateful_v2 import (
-        HAS_TWS_DEPS,
-        require_rocksdb,
-        running_totals,
-    )
-
-    if not HAS_TWS_DEPS:
-        pytest.skip("protobuf unavailable (documented no-pip sandbox blocker)")
-
-    require_rocksdb(spark)
-    try:
-        events = read_events_stream(spark, SF)
-        out = running_totals(events.select("user_id", "value"))
-        q = (
-            out.writeStream.format("memory")
-            .queryName("tws_out")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    # update mode re-emits per batch; the LAST row per user is the final total
-    import pyspark.sql.functions as F
-
-    got = {
-        (r.user_id, r.n_events, round(r.total_value, 4))
-        for r in spark.sql(
-            """SELECT user_id, n_events, total_value FROM (
-                 SELECT *, row_number() OVER (PARTITION BY user_id ORDER BY n_events DESC) rn
-                 FROM tws_out) WHERE rn = 1"""
-        ).collect()
-    }
-    from mergeextractor_spark.sources.fixtures import table
-
-    expect = {
-        (r.user_id, r.n, round(r.tv, 4))
-        for r in table(spark, SF, "events")
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("tv"))
-        .collect()
-    }
-    assert got == expect

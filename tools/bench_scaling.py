@@ -9,8 +9,8 @@ universe and joins/groupBys see genuinely distinct keys. Document text
 is perturbed per copy (`" cp<j>"` suffix) so duplicate-CLUSTER SIZES
 stay constant while cluster count scales 10× — the realistic growth
 model for a crawl corpus (identical text across copies would instead
-grow every cluster 10×, quadratically inflating the LSH verify join;
-tools/stress.py covers that adversarial case separately).
+grow every cluster 10×, quadratically inflating the LSH verify join, so
+the exponent would measure output growth rather than the plan).
 
 Exponent: e = log(t_hi/t_lo) / log(10) per decade of data. e≈1 is
 linear, e<1 means fixed overheads still dominate, e>1.2 flags
@@ -20,7 +20,7 @@ scan as the suspects).
 
 Usage:
     python tools/bench_scaling.py [--runs 3] [--rebuild]
-Prints a markdown table + one JSON line for PERFORMANCE.md.
+Prints a markdown table + one JSON line.
 """
 
 from __future__ import annotations
@@ -211,8 +211,7 @@ def replicate(df: DataFrame, pk: str, stride: int, fks: dict[str, int], k: int) 
         # the text identical so per-row work stays comparable.  Natural
         # near-dup pairs WITHIN a copy get the same tags on both sides, so
         # each copy reproduces the original clustering — exactly the
-        # cluster-count-x-k growth model.  The all-copies-near-dup
-        # adversarial case is tools/stress.py's job.
+        # cluster-count-x-k growth model.
         out = out.withColumn(
             "text",
             F.when(F.col("_copy") == 0, F.col("text")).otherwise(
@@ -322,7 +321,8 @@ def main() -> None:
             ap.error(f"--keys not in the study list: {unknown}")
         QUERIES[:] = [k for k in QUERIES if k in picked]
 
-    # Fixed pre-touched heap (r14 thrash root cause, PERFORMANCE.md):
+    # Fixed pre-touched heap (host page-fault servicing was the r14
+    # thrash root cause):
     # exponent measurements must not absorb re-fault storms from heap
     # pages the GC gave back to a host that discards them (Firecracker
     # free-page reporting).  Sized by pretouch_heap_gb.

@@ -22,10 +22,9 @@ guide names:
     pinned in tests/test_plans.py.
   - ObjectHashAggregate (sort-fallback risk class; report count)
 
-Prints one line per flagged key -> plans_audit_<round>.txt.
+Prints one line per flagged key, then the totals, to stdout.
 
 Usage: python tools/plan_audit.py [--sf /root/testdata/sf0.001]
-                                  [--out plans_audit_r15.txt]
 """
 
 from __future__ import annotations
@@ -156,7 +155,6 @@ def main() -> None:
 
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument("--out", default="plans_audit_r15.txt")
     args = ap.parse_args()
     spark = get_spark("plan-audit")
     reg = load_all()
@@ -190,10 +188,7 @@ def main() -> None:
     out.append(
         f"== SinglePartition UNEXPLAINED keys: {unexplained_sp or 'none'} =="
     )
-    txt = "\n".join(out)
-    print(txt)
-    with open(os.path.join(_REPO, args.out), "w") as f:
-        f.write(txt + "\n")
+    print("\n".join(out))
 
 
 if __name__ == "__main__":
