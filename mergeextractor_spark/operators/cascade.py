@@ -15,7 +15,8 @@ header line must avoid title stop-terms        (ChunkProcessor.py:142-169).
 The reference gates (a) on spaCy sentence segmentation; per SURVEY §7.4
 we use a deterministic regex sentence splitter (spaCy optional behind the
 ``sentence_splitter`` argument — never on the test path). Pure-Python
-core functions (unit-testable) wrapped in one Arrow-batched pandas UDF.
+core functions (unit-testable) run inside Arrow-batched ``mapInPandas``
+chunk passes (``chunk_and_cascade``, ``locate_hits``).
 """
 
 from __future__ import annotations
@@ -25,10 +26,10 @@ from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.fuzzy import fuzz_ratio
+from .chunking import split_text
 
 # Ref config.py:32-62 — the 29-phrase catalog; bare "Background" is the
 # two-pass fallback (Processor.py:266-269).
@@ -218,64 +219,20 @@ def separator_passage(chunk: str) -> str | None:
     return extract_passage(chunk, SEPARATOR_PHRASES)
 
 
-_PASSAGE_TYPE = T.StringType()
-
-
-@F.pandas_udf(_PASSAGE_TYPE)
-def cascade_passage_udf(chunks: pd.Series) -> pd.Series:
-    """chunk text → extracted passage (NULL when the cascade rejects)."""
-    return pd.Series([two_pass_passage(c or "") for c in chunks])
-
-
-def filter_background_chunks(chunks: DataFrame, chunk_col: str = "chunk") -> DataFrame:
-    """Apply the cascade as a filter stage: keeps rows whose chunk yields a
-    passage, adding the ``passage`` column. Cheap-to-expensive order is
-    preserved by running a native prefilter first (any catalog phrase OR
-    the word 'background' present, case-insensitive) so the Python UDF
-    only sees plausible chunks — the O5 cascade posture from SURVEY §4."""
-    prefilter = F.lower(F.col(chunk_col)).contains("background")
-    return (
-        chunks.filter(prefilter)
-        .withColumn("passage", cascade_passage_udf(F.col(chunk_col)))
-        .filter(F.col("passage").isNotNull())
-    )
-
-
-def chunk_and_cascade(
+def _chunk_pass(
     docs: DataFrame,
-    text_col: str = "text",
-    id_cols: list[str] | None = None,
-    chunk_size: int | None = None,
-    chunk_overlap: int | None = None,
-    passage_fn: Callable[[str], str | None] | None = None,
+    text_col: str,
+    id_cols: list[str],
+    fields: list[T.StructField],
+    per_chunk: Callable[[str], tuple | None],
 ) -> DataFrame:
-    """Fused chunk + cascade: ONE ``mapInPandas`` pass emitting every chunk
-    of every document together with its cascade passage (NULL when the
-    cascade rejects).
-
-    Equivalent to ``chunk_documents`` followed by the cascade UDF, minus a
-    full Arrow round-trip of the chunk text (chunks serialized out of the
-    chunker UDF and back into the cascade UDF — VERDICT r2 item 6). The
-    native 'background' prefilter runs as the same cheap substring test in
-    Python, so the cascade still only executes on plausible chunks.
-    Pipelines that need both the chunk set and the cascade hits (crawler /
-    separator, plans/filing_pipeline.py) read both from this single output:
-    ``passage IS NOT NULL`` selects the hits.
-    """
-    from .chunking import CHUNK_OVERLAP, CHUNK_SIZE, split_text
-
-    id_cols = id_cols or ["doc_id"]
-    size = chunk_size or CHUNK_SIZE
-    overlap = chunk_overlap or CHUNK_OVERLAP
-    # crawler two-pass by default; separator callers pass separator_passage
-    locate = passage_fn or two_pass_passage
+    """ONE ``mapInPandas`` pass over every chunk of every document. Each
+    chunk gives a row (id_cols, chunk_idx, *per_chunk(chunk)) typed by
+    ``fields``, or no row when ``per_chunk`` returns None."""
     out_schema = T.StructType(
         [docs.schema[c] for c in id_cols]
-        + [
-            T.StructField("chunk_idx", T.IntegerType()),
-            T.StructField("chunk", T.StringType()),
-            T.StructField("passage", T.StringType()),
-        ]
+        + [T.StructField("chunk_idx", T.IntegerType())]
+        + fields
     )
     cols = [f.name for f in out_schema.fields]
 
@@ -283,17 +240,69 @@ def chunk_and_cascade(
         for pdf in batches:
             out: dict[str, list] = {c: [] for c in cols}
             for row in pdf.to_dict("records"):
-                text = row[text_col] or ""
-                for i, c in enumerate(split_text(text, size, overlap)):
-                    passage = (
-                        locate(c) if "background" in c.lower() else None
-                    )
+                for i, c in enumerate(split_text(row[text_col] or "")):
+                    vals = per_chunk(c)
+                    if vals is None:
+                        continue
                     for ic in id_cols:
                         out[ic].append(row[ic])
                     out["chunk_idx"].append(i)
-                    out["chunk"].append(c)
-                    out["passage"].append(passage)
-            if out["chunk"]:
+                    for f, v in zip(fields, vals):
+                        out[f.name].append(v)
+            if out["chunk_idx"]:
                 yield pd.DataFrame(out)
 
     return docs.select(*id_cols, text_col).mapInPandas(gen, schema=out_schema)
+
+
+def chunk_and_cascade(
+    docs: DataFrame,
+    text_col: str = "text",
+    id_cols: list[str] | None = None,
+    passage_fn: Callable[[str], str | None] | None = None,
+) -> DataFrame:
+    """Fused chunk + cascade: ONE ``mapInPandas`` pass emitting every chunk
+    of every document together with its cascade passage (NULL when the
+    cascade rejects).
+
+    The 'background' prefilter is a cheap substring test inside the same
+    pass, so the cascade only executes on plausible chunks. The separator
+    (plans/filing_pipeline.py) reads both the chunk set and the hits from
+    this single output; ``passage IS NOT NULL`` selects the hits.
+    """
+    # crawler two-pass by default; separator callers pass separator_passage
+    locate = passage_fn or two_pass_passage
+
+    def per_chunk(c: str) -> tuple:
+        return c, (locate(c) if "background" in c.lower() else None)
+
+    return _chunk_pass(
+        docs,
+        text_col,
+        id_cols or ["doc_id"],
+        [T.StructField("chunk", T.StringType()), T.StructField("passage", T.StringType())],
+        per_chunk,
+    )
+
+
+def locate_hits(docs: DataFrame, text_col: str, id_cols: list[str]) -> DataFrame:
+    """Both locates in ONE chunk pass: each chunk that contains
+    'background' runs the crawler's ``two_pass_passage`` and the
+    separator's ``separator_passage``. Emits only hit keys — (id_cols,
+    chunk_idx, crawl_hit, sep_hit) for chunks where either locate finds a
+    passage — so no chunk or passage text crosses back over Arrow."""
+
+    def per_chunk(c: str) -> tuple | None:
+        if "background" not in c.lower():
+            return None
+        crawl = two_pass_passage(c) is not None
+        sep = separator_passage(c) is not None
+        return (crawl, sep) if crawl or sep else None
+
+    return _chunk_pass(
+        docs,
+        text_col,
+        id_cols,
+        [T.StructField("crawl_hit", T.BooleanType()), T.StructField("sep_hit", T.BooleanType())],
+        per_chunk,
+    )

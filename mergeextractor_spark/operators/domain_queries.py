@@ -132,18 +132,17 @@ def chunk_split_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM read_parquet('{golden_path("header_cascade")}')
     """,
     doc="3-stage header cascade over the filing fixtures (ref "
-    "ChunkProcessor.py:34-169): chunk → native 'background' prefilter → "
-    "cascade UDF → passage rows.",
+    "ChunkProcessor.py:34-169): one chunk pass with an in-pass "
+    "'background' substring prefilter before the cascade → passage rows.",
 )
 def header_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .cascade import filter_background_chunks
-    from .chunking import chunk_documents
+    from .cascade import chunk_and_cascade
 
-    filings = _filings_df(spark)
-    chunks = chunk_documents(
-        filings.select("main_index", "content"), text_col="content", id_cols=["main_index"]
-    )
-    hits = filter_background_chunks(chunks)
+    hits = chunk_and_cascade(
+        _filings_df(spark).select("main_index", "content"),
+        text_col="content",
+        id_cols=["main_index"],
+    ).filter(F.col("passage").isNotNull())
     return hits.select(
         "main_index", "chunk_idx", F.length("passage").cast("long").alias("passage_len")
     )

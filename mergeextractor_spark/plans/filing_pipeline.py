@@ -2,8 +2,10 @@
 lifecycles (SURVEY §3) over local fixtures — no network, no ML models.
 
 crawler  (§3.1): deals → anti-join done → date window → join candidate
-                 filings → company-presence filter → chunk → cascade →
-                 deterministic first-match → crawler output rows
+                 filings → company-presence filter → ONE chunk pass running
+                 the crawler's and the separator's locates → deterministic
+                 first-match → per-deal audit status; the crawler output
+                 rows are its accepted projection
 separator(§3.2): documents → chunk → cascade → hybrid rank (deterministic
                  stand-ins) → winner + 11 following chunks → line dedup →
                  company-token check → abbreviation enrichment → sections
@@ -21,7 +23,7 @@ from pyspark.sql import functions as F
 from ..functions.dates import date_window_lb, date_window_ub
 from ..functions.strings import strip_parens, word_boundary_pattern
 from ..operators._util import truncate_lineage
-from ..operators.cascade import chunk_and_cascade
+from ..operators.cascade import chunk_and_cascade, locate_hits, separator_passage
 from ..operators.enrich import (
     FOLLOW_CHUNKS,
     company_tokens_present,
@@ -53,11 +55,7 @@ def _window_candidates(windowed: DataFrame, filings: DataFrame) -> DataFrame:
 
     The reference's FTS search is date-bounded SERVER-side
     (CrawlerSupport.py:385-401 passes LB/UB into the query); locally the
-    optional ``filing_date`` column reproduces that bound.  Factored so
-    the production pipeline and the audit apply the SAME bound and agree
-    on identical inputs (ADVICE r6: crawler_pipeline previously skipped
-    it, so a dated corpus could be accepted by the pipeline but
-    classified no_document by the audit)."""
+    optional ``filing_date`` column reproduces that bound."""
     cols = ["main_index", "url", "content"]
     if "filing_date" in filings.columns:
         cols.append("filing_date")
@@ -94,33 +92,14 @@ def crawler_pipeline(deals: DataFrame, filings: DataFrame, done: DataFrame | Non
     (output.csv semantics, CrawlerHandler.py:21-49).
 
     ``filings``: (main_index, url, content) candidate documents per deal.
+    The crawler-accepted rows of ``crawler_audit`` (accepted AND flagged:
+    the flag is a separator-stage outcome on a stored document) with the
+    deal's announcement date and names.
     """
-    todo = deals
-    if done is not None:
-        todo = deals.join(done.select("main_index"), "main_index", "left_anti")
-
-    windowed = _windowed_deals(todo)
-    cand = _window_candidates(windowed, filings)
-    present = cand.filter(_company_present())
-
-    # fused chunk+cascade: one mapInPandas pass, no second Arrow round-trip
-    # of chunk text (VERDICT r2 item 6)
-    fused = chunk_and_cascade(
-        present.select("main_index", "url", "content"),
-        text_col="content",
-        id_cols=["main_index", "url"],
-    )
-    hits = fused.filter(F.col("passage").isNotNull())
-
-    # Deterministic first-match: smallest (url, chunk_idx) per deal replaces
-    # the reference's shared-flag race (Processor.py:277-281 → SURVEY §4 O6).
-    # min_by aggregate: map-side combinable, no partition sort.
-    winners = hits.groupBy("main_index").agg(
-        F.expr("min_by(url, struct(url, chunk_idx))").alias("url")
-    )
-
     return (
-        winners.join(deals, "main_index")
+        crawler_audit(deals, filings, done)
+        .filter(F.col("url").isNotNull())
+        .join(deals, "main_index")
         .select(
             "main_index",
             "announcement_date",
@@ -162,12 +141,10 @@ def crawler_audit(deals: DataFrame, filings: DataFrame, done: DataFrame | None =
     Returns (main_index, status, url) — url is the deterministic
     first-match winner for crawler-accepted deals (accepted AND flagged
     — the flag is a separator-stage QA outcome on a stored document),
-    NULL otherwise. One presence aggregation + two cascade passes (the
-    separator re-check runs over winner documents only); all shuffles
-    are on main_index.
+    NULL otherwise. One presence aggregation + ONE chunk pass that runs
+    both locates on every present candidate and returns only hit keys;
+    all shuffles are on main_index.
     """
-    from ..operators.cascade import separator_passage
-
     todo = deals
     if done is not None:
         todo = deals.join(done.select("main_index"), "main_index", "left_anti")
@@ -181,45 +158,29 @@ def crawler_audit(deals: DataFrame, filings: DataFrame, done: DataFrame | None =
         F.max(F.col("present").cast("int")).alias("any_present"),
     )
 
-    fused = chunk_and_cascade(
+    hits = locate_hits(
         flagged.filter("present").select("main_index", "url", "content"),
         text_col="content",
         id_cols=["main_index", "url"],
     )
-    winners = (
-        fused.filter(F.col("passage").isNotNull())
-        .groupBy("main_index")
-        .agg(F.expr("min_by(url, struct(url, chunk_idx))").alias("url"))
-    )
-
-    # Separator-stage re-check over the STORED winner documents only
-    # (SeperatorHandler.py:63 "Use the stored unprocessed content"): the
-    # single-pass locate with the full catalog, which can fail where the
-    # crawler's two-pass succeeded → flagged_manual_inspection.
-    winner_docs = winners.join(
-        cand.select("main_index", "url", "content"), ["main_index", "url"]
-    )
-    sep_ok = (
-        chunk_and_cascade(
-            winner_docs,
-            text_col="content",
-            id_cols=["main_index"],
-            passage_fn=separator_passage,
-        )
-        .filter(F.col("passage").isNotNull())
-        .select("main_index")
-        .distinct()
-        .withColumn("sep_ok", F.lit(True))
+    # Deterministic first-match: smallest (url, chunk_idx) crawler hit per
+    # deal replaces the reference's shared-flag race (Processor.py:277-281
+    # → SURVEY §4 O6). The separator re-check reads the STORED winner only
+    # (SeperatorHandler.py:63): sep_ok needs a separator hit on the
+    # winner's own url, not on any candidate's. One map-side combinable
+    # aggregate, so the chunk pass is planned once.
+    winners = hits.groupBy("main_index").agg(
+        F.expr("min_by(url, struct(url, chunk_idx)) FILTER (WHERE crawl_hit)").alias("url"),
+        F.expr("collect_set(url) FILTER (WHERE sep_hit)").alias("sep_urls"),
     )
 
     return (
         todo.select("main_index")
         .join(per_deal, "main_index", "left")
         .join(winners, "main_index", "left")
-        .join(sep_ok, "main_index", "left")
         .select(
             "main_index",
-            F.when(F.col("sep_ok"), F.lit("accepted"))
+            F.when(F.array_contains("sep_urls", F.col("url")), F.lit("accepted"))
             .when(F.col("url").isNotNull(), F.lit("flagged_manual_inspection"))
             .when(F.coalesce(F.col("n_cand"), F.lit(0)) == 0, F.lit("no_document"))
             .when(F.col("any_present") == 0, F.lit("no_relevant_document"))
@@ -245,8 +206,6 @@ def separator_pipeline(documents: DataFrame, done: DataFrame | None = None) -> D
     Inspection' outcome (SeperatorHandler.py:69-77; crawler_audit above
     classifies them explicitly).
     """
-    from ..operators.cascade import separator_passage
-
     if done is not None:
         documents = documents.join(done.select("main_index"), "main_index", "left_anti")
 

@@ -90,18 +90,20 @@ def merge_kv_store(
         return
     up = up.cache()  # read twice (anti-join + union); tiny vs the table
     staging = f"{path.rstrip('/')}__stage"
-    if not os.path.isdir(path):
-        # first write: build in staging, one rename publishes the store
-        up.write.mode("overwrite").partitionBy("bucket").parquet(staging)
-        os.rename(staging, path)
+    try:
+        if not os.path.isdir(path):
+            # first write: build in staging, one rename publishes the store
+            up.write.mode("overwrite").partitionBy("bucket").parquet(staging)
+            os.rename(staging, path)
+            return
+        store.settle(path)
+        target = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
+        kept = target.join(up.select(key), on=key, how="left_anti")
+        kept.unionByName(up).write.mode("overwrite").partitionBy("bucket").parquet(staging)
+        store.swap(path, staging, [f"bucket={b}" for b in buckets])
+    finally:
+        # a raising write or swap must not pin one cached relation per call
         up.unpersist()
-        return
-    store.settle(path)
-    target = spark.read.parquet(path).filter(F.col("bucket").isin(buckets))
-    kept = target.join(up.select(key), on=key, how="left_anti")
-    kept.unionByName(up).write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    store.swap(path, staging, [f"bucket={b}" for b in buckets])
-    up.unpersist()
 
 
 def sink_csv_ordered(df: DataFrame, path: str, order_col: str = "main_index") -> None:

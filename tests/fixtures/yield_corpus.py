@@ -62,6 +62,31 @@ def _iso_from_mdy(mdy: str) -> str:
     return f"{y}-{int(m):02d}-{int(d):02d}"
 
 
+def flagged_filing(a: str, b: str) -> str:
+    """A filing the crawler's two-pass locate accepts and the separator's
+    single-pass locate rejects (see the flagged_manual_inspection block of
+    ``build_yield_corpus``)."""
+    passage = (
+        "On January 12, representatives of both parties met with their financial "
+        "advisors to review strategic alternatives and the proposed exchange ratio in detail.\n"
+        "The board then instructed management to proceed with confirmatory diligence "
+        "and to negotiate definitive documentation with outside counsel present.\n"
+        "Following further negotiation of the termination provisions, the board "
+        "unanimously approved the agreement and recommended it to shareholders.\n"
+    )
+    return (
+        f"SECURITIES AND EXCHANGE COMMISSION\n\nS-4\n\nRegistration "
+        f"statement of {a} and {b}.\n\n"
+        "Certain background information concerning the companies is provided herein.\n\n"
+        "TABLE OF CONTENTS\n\n"
+        "Summary of the Transaction....3\n\n"
+        "Opinion of the Financial Advisor....24\n\n"
+        "Interests of Directors....31\n\n"
+        "Selected Financial Data....44\n\n"
+        "Background of the Merger\n\n" + passage
+    )
+
+
 def build_yield_corpus() -> tuple[list[tuple], list[dict], dict[int, str]]:
     """Returns (deals, filings, expected) where deals are
     (main_index, announcement_date, company_a, company_b) tuples, filings
@@ -131,26 +156,7 @@ def build_yield_corpus() -> tuple[list[tuple], list[dict], dict[int, str]]:
     for _ in range(N_FLAGGED):
         a, b = _name(idx, "a"), _name(idx, "b")
         i, date = add_deal(a, b, "flagged_manual_inspection")
-        passage = (
-            "On January 12, representatives of both parties met with their financial "
-            "advisors to review strategic alternatives and the proposed exchange ratio in detail.\n"
-            "The board then instructed management to proceed with confirmatory diligence "
-            "and to negotiate definitive documentation with outside counsel present.\n"
-            "Following further negotiation of the termination provisions, the board "
-            "unanimously approved the agreement and recommended it to shareholders.\n"
-        )
-        body = (
-            f"SECURITIES AND EXCHANGE COMMISSION\n\nS-4\n\nRegistration "
-            f"statement of {a} and {b}.\n\n"
-            "Certain background information concerning the companies is provided herein.\n\n"
-            "TABLE OF CONTENTS\n\n"
-            "Summary of the Transaction....3\n\n"
-            "Opinion of the Financial Advisor....24\n\n"
-            "Interests of Directors....31\n\n"
-            "Selected Financial Data....44\n\n"
-            "Background of the Merger\n\n" + passage
-        )
-        add_filing(i, a, b, body, date)
+        add_filing(i, a, b, flagged_filing(a, b), date)
 
     # -- no_relevant_document: candidates exist, company_b never appears
     for _ in range(N_NO_RELEVANT):

@@ -108,13 +108,19 @@ def test_query_embedding_separates_pos_from_neg(corpus):
 
 
 def test_cascade_udf_matches_pure_python(corpus, spark):
-    """The Spark plumbing (prefilter + pandas UDF) must agree with the
-    pure-python cascade on the full corpus."""
-    from mergeextractor_spark.operators.cascade import filter_background_chunks
+    """The Spark plumbing (the fused chunk + cascade pass with its in-pass
+    'background' prefilter) must agree with the pure-python cascade on the
+    full corpus."""
+    from mergeextractor_spark.operators.cascade import chunk_and_cascade
+    from mergeextractor_spark.operators.chunking import split_text
 
     pos, neg = corpus
     rows = [{"name": n, "chunk": s} for n, s in {**pos, **neg}.items()]
     df = spark.createDataFrame(rows).coalesce(1)
-    accepted = {r["name"] for r in filter_background_chunks(df).select("name").collect()}
-    expected = {n for n, s in {**pos, **neg}.items() if two_pass_passage(s)}
+    hits = chunk_and_cascade(df, text_col="chunk", id_cols=["name"]).filter("passage IS NOT NULL")
+    accepted = {r["name"] for r in hits.select("name").collect()}
+    # the fused pass chunks its input; a snippet under one chunk is one chunk
+    expected = {
+        n for n, s in {**pos, **neg}.items() if any(map(two_pass_passage, split_text(s)))
+    }
     assert accepted == expected

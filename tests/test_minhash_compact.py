@@ -162,7 +162,6 @@ def _kv_store_case(spark, filings_df, root) -> SwapCase:
         rows.filter(F.col("main_index").isin(0, 100, 250))
         .withColumn("content", F.lit("merged-row"))
         .unionByName(rows.filter(F.col("main_index") == 50).withColumn("main_index", F.lit(777)))
-        .cache()
     )
     return SwapCase(
         base, "bucket=*",
@@ -200,10 +199,17 @@ def test_commit_survives_a_failed_move(spark, swap_cases, counting_move, k):
         path = str(shutil.copytree(case.base, root / f"{name} faulted {k}"))
         before = case.rows(path)
         fail_at = {"first": 1, "second": 2, "middle": case.n_moves // 2, "last": case.n_moves}[k]
+        if name == "kv store":
+            spark.catalog.clearCache()
+            pinned = set(spark.sparkContext._jsc.getPersistentRDDs())
         with pytest.MonkeyPatch.context() as mp:
             mp.setattr(shutil, "move", counting_move(fail_at))
             with pytest.raises(OSError, match="injected failure"):
                 case.commit(path)
+        if name == "kv store":
+            # the failed MERGE pins no cached relation
+            assert set(spark.sparkContext._jsc.getPersistentRDDs()) <= pinned
+            assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
         assert case.rows(path) == before, name
         case.commit(path)
         assert case.rows(path) == case.want, name

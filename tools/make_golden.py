@@ -128,7 +128,8 @@ def company_present(content: str, ca: str, cb: str) -> bool:
 
 
 def chunk_cascade(content: str, locate) -> list[tuple[int, str, str | None]]:
-    """operators/cascade.chunk_and_cascade over one document."""
+    """operators/cascade.chunk_and_cascade over one document (per locate,
+    the chunk pass of operators/cascade.locate_hits)."""
     from mergeextractor_spark.operators.chunking import split_text
 
     return [
