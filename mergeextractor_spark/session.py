@@ -18,6 +18,20 @@ bytecode. A whole perfbench process compiles ~300 classes with the cache
 sized (Metaspace 160-180 MB); 4096 also about covers the largest working
 set measured, a full ``tools/selfcheck.py`` pass at sf0.001 (4,074
 compiles in one process, Metaspace 248 MB).
+
+Python UDF tasks start through ``worker_daemon`` instead of pyspark's own
+daemon. pyspark calls ``importlib.invalidate_caches()`` at the start of
+every task, and on Python 3.11 and 3.12 that re-reads the central
+directory of every zip on the worker path: 14-16 ``zipimporter``s over
+the 1,328-entry ``pyspark.zip``, about 0.27 s of worker CPU per task
+before it reads a row (0.625 of a warm task's 0.709 s under cProfile).
+The daemon re-reads an archive only when its stat stamp changed. On 4
+vCPU a 1-task ``mapInPandas`` over 10 rows went from 0.27 s of worker CPU
+to under one 10 ms tick, and a traced ``lifecycle`` round's
+``udf.python_cpu_s`` from 5.67 to 0.75 s (perfbench seed 1). The
+conf is static, so only ``get_spark`` sets it; the package root goes on
+the workers' ``PYTHONPATH`` so the daemon starts from any working
+directory.
 """
 
 from __future__ import annotations
@@ -25,6 +39,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the directory that holds the package: Python workers import the daemon
+# and the package's UDF modules from it, whatever the driver's cwd
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_local_dir() -> str | None:
@@ -114,6 +132,10 @@ def get_spark(
     # than RAM need a disk-backed dir), and a free-space floor guards the
     # tmpfs default (_default_local_dir).
     local_dir = _default_local_dir()
+    extra = dict(extra_conf or {})
+    pythonpath = os.pathsep.join(
+        p for p in (_PACKAGE_ROOT, extra.pop("spark.executorEnv.PYTHONPATH", "")) if p
+    )
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -141,10 +163,17 @@ def get_spark(
         # selfcheck pass ~4,070 (Metaspace 248 MB): 4096 holds both, where
         # Spark's 100 is less than one perfbench round.
         .config("spark.sql.codegen.cache.maxEntries", "4096")
+        # Python workers fork from worker_daemon, which skips pyspark's
+        # per-task re-read of unchanged zip archives (about 0.27 s of
+        # worker CPU per task; module docstring). Static conf: builder
+        # only. A daemon that fails to import breaks every Python UDF, so
+        # the package root is on the workers' path.
+        .config("spark.python.daemon.module", "mergeextractor_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", pythonpath)
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -157,7 +186,10 @@ def apply_session_tuning(spark: SparkSession) -> SparkSession:
 
     Such a session keeps Spark's 100-entry generated-class cache:
     ``spark.sql.codegen.cache.maxEntries`` is static, so only ``get_spark``
-    can size it (see there)."""
+    can size it (see there). It also keeps pyspark's own Python worker
+    daemon (``spark.python.daemon.module`` is static too), so each of its
+    Python UDF tasks still re-reads ``pyspark.zip``: about 0.27 s of worker
+    CPU per task on Python 3.11."""
     try:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.adaptive.enabled", "true")

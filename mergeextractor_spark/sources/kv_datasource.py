@@ -74,8 +74,15 @@ class KvJsonWriter(DataSourceWriter):
             dst = os.path.join(self.path, m.filename)
             os.replace(src, dst)
             committed.append({"file": m.filename, "rows": m.rows})
-        with open(os.path.join(self.path, "_SUCCESS"), "w") as f:
+        # a fault inside json.dump must leave the old manifest whole: write
+        # it aside and swap it in. A re-run after a fault at any step lands
+        # the same files, since part names are pure functions of the
+        # partition id and os.replace overwrites.
+        os.makedirs(staging, exist_ok=True)
+        tmp = os.path.join(staging, "_SUCCESS")
+        with open(tmp, "w") as f:
             json.dump({"files": committed}, f)
+        os.replace(tmp, os.path.join(self.path, "_SUCCESS"))
         shutil.rmtree(staging, ignore_errors=True)
 
     def abort(self, messages):

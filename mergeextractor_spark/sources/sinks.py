@@ -108,10 +108,15 @@ def merge_kv_store(
 
 def sink_csv_ordered(df: DataFrame, path: str, order_col: str = "main_index") -> None:
     """Ordered CSV sink with header (ref CrawlerHandler.py:21-49 sort at
-    139; InitiatorIdentifier.py:26-50 sort at 166). coalesce(1) gives the
+    139; InitiatorIdentifier.py:26-50 sort at 166). One partition gives the
     reference's single-file layout — callers that don't need one file
-    should drop it and keep the parallel write."""
-    df.orderBy(order_col).coalesce(1).write.mode("overwrite").option("header", True).csv(path)
+    should keep the parallel write. It is a repartition plus a local sort,
+    not ``orderBy(...).coalesce(1)``: the range partitioner behind
+    ``orderBy`` samples its input in a job of its own, which ran the
+    upstream plan (an LLM UDF, say) twice."""
+    df.repartition(1).sortWithinPartitions(order_col).write.mode("overwrite").option(
+        "header", True
+    ).csv(path)
 
 
 def sink_fs_dump(df: DataFrame, path: str) -> None:

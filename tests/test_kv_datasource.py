@@ -65,3 +65,72 @@ def test_rewrite_is_idempotent_per_partition(spark, tmp_path):
     assert len([f for f in os.listdir(path) if f.startswith("part-")]) == 4
     back = spark.read.json([os.path.join(path, f) for f in files])
     assert back.count() == 500
+
+
+def _stage(path, batch):
+    """Write ``batch`` ({partition id: rows}) the way ``write`` stages it."""
+    from mergeextractor_spark.sources.kv_datasource import KvCommit
+
+    staging = os.path.join(path, "_staging")
+    os.makedirs(staging, exist_ok=True)
+    messages = []
+    for pid, rows in batch.items():
+        name = f"part-{pid:05d}.jsonl"
+        with open(os.path.join(staging, name), "w") as f:
+            f.writelines(json.dumps(r) + "\n" for r in rows)
+        messages.append(KvCommit(name, len(rows)))
+    return messages
+
+
+def _tree(path):
+    out = {}
+    for d, _, files in os.walk(path):
+        for f in files:
+            p = os.path.join(d, f)
+            out[os.path.relpath(p, path)] = open(p, "rb").read()
+    return out
+
+
+_OLD = {pid: [{"k": pid * 10 + i, "v": "old"} for i in range(3)] for pid in range(3)}
+_NEW = {pid: [{"k": pid * 10 + i, "v": "new"} for i in range(2 + pid)] for pid in range(3)}
+
+
+@pytest.mark.parametrize("fault", ["move-0", "move-1", "move-2", "manifest"])
+def test_commit_fault_then_rerun_matches_clean_commit(tmp_path, monkeypatch, fault):
+    """A commit that fails at any step leaves the previous manifest whole,
+    and re-running the write lands exactly what a clean commit lands."""
+    from mergeextractor_spark.sources.kv_datasource import KvJsonWriter
+
+    def commit(path, batch):
+        KvJsonWriter({"path": path}, overwrite=False).commit(_stage(path, batch))
+
+    clean = str(tmp_path / "clean")
+    commit(clean, _OLD)
+    commit(clean, _NEW)
+
+    path = str(tmp_path / "faulted")
+    commit(path, _OLD)
+    old_manifest = json.load(open(os.path.join(path, "_SUCCESS")))
+    with monkeypatch.context() as m:
+        if fault == "manifest":
+            def dump(obj, f):  # a fault part way through the manifest
+                f.write(json.dumps(obj)[:10])
+                raise OSError("injected fault in the manifest write")
+
+            m.setattr(json, "dump", dump)
+        else:
+            real, calls, at = os.replace, [], int(fault.split("-")[1])
+
+            def replace(src, dst):
+                calls.append(src)
+                if len(calls) == at + 1:
+                    raise OSError(f"injected fault at move {at}")
+                real(src, dst)
+
+            m.setattr(os, "replace", replace)
+        with pytest.raises(OSError, match="injected"):
+            commit(path, _NEW)
+    assert json.load(open(os.path.join(path, "_SUCCESS"))) == old_manifest
+
+    commit(path, _NEW)  # the re-run re-stages every partition, then commits
+    assert _tree(path) == _tree(clean)

@@ -1,3 +1,5 @@
+import os
+
 from pyspark.sql import functions as F
 
 from mergeextractor_spark.sources.sinks import (
@@ -246,3 +248,35 @@ def test_sink_log_appends_and_counts_per_class(spark, tmp_path):
         .collect()
     }
     assert counts == {"[+]": 2, "[-]": 2}
+
+
+def test_csv_ordered_sink_evaluates_input_once(spark, tmp_path):
+    """The sink runs its upstream plan once: ``orderBy`` samples its input
+    for the range partitioner in a job of its own, which ran an upstream
+    UDF (the identifier's LLM call, say) twice. The file it writes is the
+    same as ``orderBy(...).coalesce(1)`` writes."""
+    import glob
+
+    import pandas as pd
+
+    rows = spark.sparkContext.accumulator(0)
+
+    def counted(batches):
+        for b in batches:
+            rows.add(len(b))
+            yield pd.DataFrame(
+                {"main_index": (b["id"] * 37) % 200, "name": "deal-" + b["id"].astype(str)}
+            )
+
+    df = spark.range(0, 200, numPartitions=4).mapInPandas(
+        counted, "main_index long, name string"
+    )
+    path = str(tmp_path / "once")
+    sink_csv_ordered(df, path)
+    assert rows.value == 200
+
+    ref = str(tmp_path / "range_sorted")
+    df.orderBy("main_index").coalesce(1).write.option("header", True).csv(ref)
+    (got,) = glob.glob(os.path.join(path, "part-*.csv"))
+    (want,) = glob.glob(os.path.join(ref, "part-*.csv"))
+    assert open(got, "rb").read() == open(want, "rb").read()

@@ -1,0 +1,125 @@
+"""The Python worker daemon re-reads a zip archive only when it changed.
+
+pyspark calls ``importlib.invalidate_caches()`` at the start of every
+task, which on Python 3.11/3.12 re-reads every zip on the worker path.
+These tests pin the semantics of ``worker_daemon.install()`` without
+Spark, inside a real worker, and the daemon's start-up from any cwd."""
+
+import importlib
+import os
+import subprocess
+import sys
+import textwrap
+import zipfile
+import zipimport
+
+from mergeextractor_spark import worker_daemon
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _make_zip(path, modules):
+    tmp = path + ".tmp"
+    with zipfile.ZipFile(tmp, "w") as z:
+        for name, body in modules.items():
+            z.writestr(f"{name}.py", body)
+    os.replace(tmp, path)
+
+
+def test_install_rereads_an_archive_only_when_it_changes(tmp_path, monkeypatch):
+    archive = str(tmp_path / "graft_probe.zip")
+    _make_zip(archive, {"graft_probe_a": "VALUE = 'a'\n"})
+    monkeypatch.syspath_prepend(archive)
+    for name in ("graft_probe_a", "graft_probe_b"):
+        monkeypatch.delitem(sys.modules, name, raising=False)
+    # teardown puts the original method back
+    monkeypatch.setattr(
+        zipimport.zipimporter, "invalidate_caches", zipimport.zipimporter.invalidate_caches
+    )
+    assert importlib.import_module("graft_probe_a").VALUE == "a"
+
+    reads = []
+    real_read = zipimport._read_directory
+
+    def counted(path):
+        reads.append(path)
+        return real_read(path)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counted)
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 1  # without install: every call re-reads
+
+    worker_daemon.install()
+    worker_daemon.install()  # idempotent
+    importlib.invalidate_caches()  # the first call records the archive
+    reads.clear()
+    for _ in range(3):
+        importlib.invalidate_caches()
+    assert reads.count(archive) == 0
+
+    _make_zip(archive, {"graft_probe_a": "VALUE = 'a'\n", "graft_probe_b": "VALUE = 'b'\n"})
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 1
+    assert importlib.import_module("graft_probe_b").VALUE == "b"
+    importlib.invalidate_caches()
+    assert reads.count(archive) == 1
+
+    os.remove(archive)
+    importlib.invalidate_caches()  # drops the archive without raising
+    assert archive not in zipimport._zip_directory_cache
+
+
+def test_worker_tasks_skip_the_archive_reread(spark):
+    """Every task of a session from ``get_spark`` runs pyspark's per-task
+    ``invalidate_caches`` without re-reading an archive; pyspark's own
+    daemon re-reads pyspark.zip 14-16 times per call."""
+    import pandas as pd
+
+    def probe(batches):
+        import importlib
+        import zipimport
+
+        real, n = zipimport._read_directory, [0]
+
+        def counted(path):
+            n[0] += 1
+            return real(path)
+
+        zipimport._read_directory = counted
+        try:
+            importlib.invalidate_caches()
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = real
+        for _ in batches:
+            pass
+        yield pd.DataFrame({"reads": [n[0]]})
+
+    rows = spark.range(0, 40, numPartitions=4).mapInPandas(probe, "reads long").collect()
+    assert [r.reads for r in rows] == [0, 0, 0, 0]
+
+
+def test_python_udf_runs_from_any_cwd(tmp_path):
+    """Workers start the daemon by module name, so a driver outside the
+    repository with no PYTHONPATH must still run a Python UDF."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        from pyspark.sql import functions as F
+
+        from mergeextractor_spark.session import get_spark
+
+        spark = get_spark("daemon-cwd")
+        double = F.udf(lambda x: x * 2, "long")
+        print("ROWS", [r[0] for r in spark.range(3).select(double("id")).collect()])
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "1"
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "ROWS [0, 2, 4]" in out.stdout, out.stderr[-3000:]
