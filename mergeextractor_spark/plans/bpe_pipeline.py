@@ -1,8 +1,8 @@
 """Flagship #8: iterative BPE tokenizer TRAINING (`pipeline_bpe_train`)
-— the end-to-end merge LOOP the single-round keys only sample
-(VERDICT r12 item 4): `text_bpe_merge_candidates` ranks one round of
-merge candidates and `text_bpe_encode` applies a FIXED merge table;
-this plan runs the actual trainer — k rounds of
+— the end-to-end merge loop the single-round keys only sample:
+`text_bpe_merge_candidates` ranks one round of merge candidates and
+`text_bpe_encode` applies a FIXED merge table; this plan runs the
+actual trainer, whose result is that of k sequential rounds of
 
     count adjacent symbol pairs over the vocabulary
     →  pick the argmax pair (freq desc, (lhs, rhs) asc tiebreak)
@@ -27,16 +27,18 @@ bit-identically: pytest-pinned in tests/test_bpe_train.py).
 Scale shape (100 TB): the ONLY corpus-sized work is the seed pass —
 one tokenize + groupBy(word) building the (word, freq) vocabulary,
 the classic BPE trick (pair statistics are frequency-weighted sums
-over DISTINCT words, so every training round touches |vocab| short
+over DISTINCT words, so every training job touches |vocab| short
 strings regardless of corpus token count; at 100 TB that is ~1e7-1e8
-rows vs ~1e13 tokens). Each round is one vocab-sized pair-count
+rows vs ~1e13 tokens). Each job is one vocab-sized pair-count
 aggregate (map-side partial sums; shuffles carry (lhs, rhs, freq)
-only, never text) plus a 1-ROW argmax collect — bounded by the round
-count, the same boundedness class as global_cumsum's per-partition
-offsets — and a narrow map applying two literal replaces. Lineage is
-truncated every second round exactly like graph_pagerank
-(graph_queries.py pagerank), so the composed plan never exceeds two
-rounds of depth.
+only, never text) with a top-M collect (M = ``TOP_PAIRS`` rows), from
+which the driver certifies a batch of merges — as many as the list's
+bounds prove the sequential rounds would pick (``certified_merges``).
+The batch applies in one narrow map of two literal replaces per merge,
+and the lineage is cut after every batch, so the composed plan never
+exceeds one batch of depth. The 20-merge table of the fixture and
+perfbench corpora takes 10-12 jobs instead of 20; a vocabulary small
+enough for one partition runs each of them as a single Spark job.
 
 The DuckDB oracle unrolls the IDENTICAL rounds as chained CTEs
 (the _pagerank_oracle pattern), so the iterative trainer is
@@ -48,6 +50,7 @@ round (2^k blowup).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -58,6 +61,11 @@ from ..registry import register
 # Merge rounds; the oracle string is generated at import from the same
 # constant.
 BPE_TRAIN_ROUNDS = 20
+# Pairs each pair-count job collects, in (freq desc, lhs, rhs) order.
+# On the fixture and perfbench corpora the 20 merges take 10-12 jobs at
+# M = 8, 64 or 256; a larger vocabulary has a flatter head, where a
+# short list's last count (tau) would end batches early.
+TOP_PAIRS = 256
 
 
 def _bpe_cte_prefix(rounds: int = BPE_TRAIN_ROUNDS) -> str:
@@ -164,70 +172,127 @@ def seed_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wc.select("w", "freq", s.alias("s"))
 
 
+def certified_merges(
+    top: list[tuple[str, str, int]], tau: int | None, made: set[str]
+) -> list[tuple[str, str, int]]:
+    """The batch of merges one pair-count job settles: the prefix of
+    ``top`` that sequential rounds would pick one by one.
+
+    ``top`` holds one job's pairs as ``(lhs, rhs, freq)`` in (freq desc,
+    lhs, rhs) order; ``tau`` is its last count when the job cut the list
+    (every unlisted pair counts ≤ tau), else None (every pair is
+    listed). ``made`` holds every symbol earlier merges made; the seed
+    is one symbol per character, so those are all the longer symbols.
+
+    The head is the argmax. Merging (a, b) rewrites only the positions
+    where a is followed by b: (a, b) falls to zero, pairs (x, a) and
+    (b, y) can only fall, every other pair of existing symbols keeps
+    its count, and the new symbol ab forms new pairs.
+    Each new (x, ab) comes from an (x, a) followed by b, and each
+    (ab, y) from a (b, y), so none counts more than min(freq(a, b),
+    max(tau, the largest listed count of a pair (·, a) or (b, ·))), or
+    than an earlier merge's bound when x or y is its new symbol. A later
+    listed pair is therefore still the argmax after the merges before
+    it when its count is strictly above tau and above every such bound,
+    and the symbol it makes is new: no merge made it before, so it too
+    starts with no pairs. A listed pair (x, a) or (b, y) counts no more
+    than its merge's bound and so never passes; every other listed pair
+    keeps its count, and those behind it stay behind it. The
+    comparisons are strict because a tie is decided by (lhs, rhs), which
+    the list knows for listed pairs only. The batch ends at the first
+    pair that fails (so after a self-pair (a, a), whose bound is its
+    own count) and after a head whose symbol already exists.
+    """
+    made = set(made)
+    floor = tau or 0
+    batch: list[tuple[str, str, int]] = []
+    grown = 0  # with floor, bounds every pair holding a batch symbol
+    for a, b, f in top:
+        ab = a + b
+        if batch and (ab in made or f <= max(floor, grown)):
+            break
+        batch.append((a, b, f))
+        if ab in made:
+            break
+        made.add(ab)
+        near = max((g for x, y, g in top if y == a or x == b), default=0)
+        grown = max(grown, min(f, near))
+    return batch
+
+
 def bpe_train(
     vocab: DataFrame, rounds: int = BPE_TRAIN_ROUNDS
 ) -> tuple[list[tuple[int, str, str, str, int]], DataFrame]:
-    """Run ``rounds`` BPE merge rounds over a ``(w, freq, s)`` vocabulary
-    frame; returns (merge table rows, final segmented vocabulary).
+    """Learn ``rounds`` BPE merges over a ``(w, freq, s)`` vocabulary
+    frame seeded by ``seed_vocab``; returns (merge table rows, final
+    segmented vocabulary), both identical to ``rounds`` sequential
+    argmax rounds.
 
-    Per round: pair-count aggregate (vocab-sized), 1-ROW argmax collect
-    (driver traffic bounded by the round count), two literal replaces.
-    Lineage truncated every second round (and after the last merge) —
-    LAZILY (r14, the graph_pagerank policy): the round's argmax collect
-    is already a mandatory blocking job, so a lazy cut materializes
-    inside it instead of as a second driver job, and a two-round plan
-    (1 aggregate + 2 narrow maps per round) is trivially small for
-    Catalyst."""
+    Per job: a pair-count aggregate (vocab-sized) and a top-M collect
+    (M = ``TOP_PAIRS`` rows), from which ``certified_merges`` settles a
+    batch of merges; the batch applies in one narrow projection, two
+    literal replaces per merge in rank order. The lineage is cut before
+    each job — lazily, so the cut materializes inside the job's collect
+    instead of as a job of its own. The ``rounds`` cap trims the last
+    batch; an empty aggregate (no pairs left) ends training."""
     vocab = truncate_lineage(vocab, eager=False)
+    # A vocabulary in one partition (AQE coalesces a small seed's
+    # shuffle to one) is declared single, so the pair aggregate needs no
+    # exchange and each job is one Spark job instead of a map-stage job
+    # plus a result job; a partitioned vocabulary keeps the shuffle.
+    single = vocab.rdd.getNumPartitions() == 1
+    # Each word's adjacent pairs: zip the symbol array without its last
+    # element with the array without its first, then inline the structs
+    # (codegen'd; a single-symbol word zips two empty arrays and emits
+    # nothing). The columns are built once: each costs driver round
+    # trips, and every job uses the same ones.
+    syms = F.split(F.trim("s"), " ").alias("__sym")
+    pair_rows = F.inline(
+        F.arrays_zip(
+            F.slice("__sym", 1, F.size("__sym") - 1).alias("lhs"),
+            F.slice("__sym", 2, F.size("__sym")).alias("rhs"),
+        )
+    )
+    pfreq = F.sum("freq").alias("pfreq")
+    order = (F.desc("pfreq"), F.asc("lhs"), F.asc("rhs"))
     merges: list[tuple[int, str, str, str, int]] = []
-    for k in range(1, rounds + 1):
-        sym = F.split(F.trim("s"), " ")
-        # Filter BEFORE building the pair expression so correctness never
-        # depends on Catalyst pushing the predicate below the Generate:
-        # on a single-symbol word sequence(1, size-1) = sequence(1, 0)
-        # yields the DESCENDING [1, 0] and element_at(sym, 0) throws
-        # "SQL array indices start at 1" (ADVICE r13 medium).
-        # Explode the POSITION RANGE, then build the pair in a plain
-        # codegen'd projection (r14 §2: the transform() lambda runs
-        # through the interpreted HigherOrderFunction path) — same
-        # (lhs, rhs, freq) multiset by construction.
-        pairs = (
-            vocab.filter(F.size(sym) >= 2)
-            .select("freq", sym.alias("__sym"))
-            .select(
-                "freq",
-                "__sym",
-                F.explode(
-                    F.sequence(F.lit(1), F.size("__sym") - 1)
-                ).alias("__i"),
-            )
-            .select(
-                "freq",
-                F.struct(
-                    F.element_at("__sym", F.col("__i")).alias("lhs"),
-                    F.element_at("__sym", F.col("__i") + 1).alias("rhs"),
-                ).alias("pr"),
-            )
-        )
-        best = (
-            pairs.groupBy("pr.lhs", "pr.rhs")
-            .agg(F.sum("freq").alias("pfreq"))
-            .orderBy(F.desc("pfreq"), F.asc("lhs"), F.asc("rhs"))
-            .limit(1)
-            .collect()
-        )
-        if not best:
-            break  # vocabulary exhausted — matches the oracle's
-            # empty-CROSS-JOIN cascade (zero rows from round k on)
-        a, b, pf = best[0].lhs, best[0].rhs, int(best[0].pfreq)
-        merges.append((k, a, b, a + b, pf))
-        s = F.col("s")
-        for _ in range(2):
-            s = F.replace(s, F.lit(f" {a} {b} "), F.lit(f" {a}{b} "))
-        vocab = vocab.select("w", "freq", s.alias("s"))
-        if k % 2 == 0 or k == rounds:
+    while len(merges) < rounds:
+        if merges:
             vocab = truncate_lineage(vocab, eager=False)
+        top = [
+            (r.lhs, r.rhs, int(r.pfreq))
+            for r in (vocab.coalesce(1) if single else vocab)
+            .select("freq", syms)
+            .select("freq", pair_rows)
+            .groupBy("lhs", "rhs")
+            .agg(pfreq)
+            .orderBy(*order)
+            .limit(TOP_PAIRS)
+            .collect()
+        ]
+        if not top:
+            break  # vocabulary exhausted — matches the oracle's
+            # empty-CROSS-JOIN cascade (zero rows from then on)
+        tau = top[-1][2] if len(top) == TOP_PAIRS else None
+        batch = certified_merges(top, tau, {m[3] for m in merges})
+        s = F.col("s")
+        for a, b, pf in batch[: rounds - len(merges)]:
+            merges.append((len(merges) + 1, a, b, a + b, pf))
+            for _ in range(2):
+                s = F.replace(s, F.lit(f" {a} {b} "), F.lit(f" {a}{b} "))
+        vocab = vocab.select("w", "freq", s.alias("s"))
     return merges, vocab
+
+
+def _merge_table(spark: SparkSession, merges: list[tuple]) -> DataFrame:
+    """The merge table as a frame, built from pandas: with Arrow on (as
+    ``get_spark`` sets it), building it and its ``toPandas()`` take
+    about 80 ms instead of 160 ms from a list of tuples (4 vCPU)."""
+    columns = ["merge_rank", "lhs", "rhs", "merged", "freq"]
+    return spark.createDataFrame(
+        pd.DataFrame(merges, columns=columns),
+        "merge_rank int, lhs string, rhs string, merged string, freq bigint",
+    )
 
 
 @register(
@@ -241,17 +306,16 @@ def bpe_train(
     "Oracle unrolls the identical rounds as MATERIALIZED CTEs (the "
     "graph_pagerank pattern), so the loop is value-checked end-to-end. "
     "Corpus-sized work is ONE tokenize+groupBy(word) seed pass; each "
-    "round is a |vocab|-row pair aggregate plus a 1-row argmax collect "
-    "(driver traffic bounded by the round count) and lineage truncates "
-    "every second round. Round-trip through the encoder is "
+    "job is a |vocab|-row pair aggregate plus a top-M collect, from "
+    "which the driver certifies a batch of merges the sequential "
+    "rounds would pick; the batch applies in one projection and the "
+    "lineage is cut per batch. Round-trip through the encoder is "
     "pytest-pinned (tests/test_bpe_train.py).",
-    eager=True,  # construction runs the merge loop (argmax collects)
+    eager=True,  # construction runs the merge loop (top-M collects)
 )
 def pipeline_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     merges, _final = bpe_train(seed_vocab(spark, sf_dir))
-    return spark.createDataFrame(
-        merges, "merge_rank int, lhs string, rhs string, merged string, freq bigint"
-    )
+    return _merge_table(spark, merges)
 
 
 def bpe_store_write(spark: SparkSession, sf_dir: str, path: str,
@@ -261,9 +325,7 @@ def bpe_store_write(spark: SparkSession, sf_dir: str, path: str,
     rounds-sized parquet read once per executor, never retrained in the
     apply path."""
     merges, _final = bpe_train(seed_vocab(spark, sf_dir), rounds=rounds)
-    spark.createDataFrame(
-        merges, "merge_rank int, lhs string, rhs string, merged string, freq bigint"
-    ).coalesce(1).write.mode("overwrite").parquet(path)
+    _merge_table(spark, merges).coalesce(1).write.mode("overwrite").parquet(path)
 
 
 def ensure_bpe_store(spark: SparkSession, sf_dir: str,

@@ -31,7 +31,9 @@ to under one 10 ms tick, and a traced ``lifecycle`` round's
 ``udf.python_cpu_s`` from 5.67 to 0.75 s (perfbench seed 1). The
 conf is static, so only ``get_spark`` sets it; the package root goes on
 the workers' ``PYTHONPATH`` so the daemon starts from any working
-directory.
+directory. In a session built elsewhere a worker installs the same
+patch when it first imports the package (``mergeextractor_spark``'s
+``__init__``), so only its first task re-reads the archive.
 """
 
 from __future__ import annotations
@@ -187,9 +189,10 @@ def apply_session_tuning(spark: SparkSession) -> SparkSession:
     Such a session keeps Spark's 100-entry generated-class cache:
     ``spark.sql.codegen.cache.maxEntries`` is static, so only ``get_spark``
     can size it (see there). It also keeps pyspark's own Python worker
-    daemon (``spark.python.daemon.module`` is static too), so each of its
-    Python UDF tasks still re-reads ``pyspark.zip``: about 0.27 s of worker
-    CPU per task on Python 3.11."""
+    daemon (``spark.python.daemon.module`` is static too), so a worker's
+    first task re-reads ``pyspark.zip`` (about 0.27 s of worker CPU on
+    Python 3.11); the package's UDFs patch the worker, and its later
+    tasks skip the re-read."""
     try:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.conf.set("spark.sql.adaptive.enabled", "true")

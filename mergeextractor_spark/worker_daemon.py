@@ -9,7 +9,9 @@ the task reads a row. ``install()`` keeps the re-read but skips it while
 the archive's ``(st_mtime_ns, st_size, st_ino)`` equals that of the last
 read in this process. ``get_spark`` starts Spark's daemon through this
 module (``spark.python.daemon.module``); its forked workers inherit the
-patch. Importing the module patches nothing.
+patch. Under pyspark's own daemon the package's ``__init__`` calls
+``install()`` in each worker that imports it. Importing this module
+patches nothing.
 """
 
 from __future__ import annotations

@@ -1,22 +1,46 @@
-"""pipeline_bpe_train pins (VERDICT r12 item 4).
+"""pipeline_bpe_train pins: the trainer the single-round BPE keys only
+sample, checked end to end.
 
-Three independent proofs of the iterative trainer:
+Four independent proofs of the iterative trainer:
   1. a pure-Python sequential mirror (dict + str.replace — a different
      engine with the same spec) reproduces the learned merge table AND
      the final segmentation on a hand-built corpus that exercises ties,
      overlapping pairs (runs like "aaaa"), and merged-symbol collisions;
-  2. the learned merge table ROUND-TRIPS through the text_bpe_encode
+  2. the merge batches the trainer certifies from one top-M pair list
+     (``certified_merges``) are exactly the merges the sequential mirror
+     makes one round at a time — a Hypothesis property, no Spark;
+  3. the learned merge table ROUND-TRIPS through the text_bpe_encode
      apply semantics: replaying the table (two literal replaces per
      merge, in rank order) over the seed segmentation reproduces the
      trainer's final vocabulary exactly — table out == tokenizer in;
-  3. determinism: two runs over the fixture corpus agree row-for-row.
+  4. determinism: two runs over the fixture corpus agree row-for-row.
 """
 
 from __future__ import annotations
 
+import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from mergeextractor_spark.plans.bpe_pipeline import certified_merges
+
 SF = "/root/testdata/sf0.001"
+
+
+def _pair_counts(word_freq: dict[str, int], seg: dict[str, str]):
+    pc: dict[tuple[str, str], int] = {}
+    for w, f in word_freq.items():
+        sy = seg[w].split()
+        for i in range(len(sy) - 1):
+            pc[(sy[i], sy[i + 1])] = pc.get((sy[i], sy[i + 1]), 0) + f
+    return pc
+
+
+def _apply(seg: dict[str, str], a: str, b: str) -> None:
+    pat, rep = f" {a} {b} ", f" {a}{b} "
+    for w in seg:
+        seg[w] = seg[w].replace(pat, rep).replace(pat, rep)
 
 
 def mirror_train(word_freq: dict[str, int], rounds: int):
@@ -26,19 +50,35 @@ def mirror_train(word_freq: dict[str, int], rounds: int):
     seg = {w: " " + " ".join(w) + " " for w in word_freq}
     merges = []
     for k in range(1, rounds + 1):
-        pc: dict[tuple[str, str], int] = {}
-        for w, f in word_freq.items():
-            sy = seg[w].split()
-            for i in range(len(sy) - 1):
-                pc[(sy[i], sy[i + 1])] = pc.get((sy[i], sy[i + 1]), 0) + f
+        pc = _pair_counts(word_freq, seg)
         if not pc:
             break
         (a, b), pf = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
         merges.append((k, a, b, a + b, pf))
-        pat, rep = f" {a} {b} ", f" {a}{b} "
-        for w in seg:
-            seg[w] = seg[w].replace(pat, rep).replace(pat, rep)
+        _apply(seg, a, b)
     return merges, seg
+
+
+def batched_mirror(word_freq: dict[str, int], rounds: int, top_pairs: int):
+    """bpe_train's loop in pure Python: each pass lists the top
+    ``top_pairs`` pairs and merges the batch ``certified_merges``
+    settles from that list. Returns (merges, segmentation, passes)."""
+    seg = {w: " " + " ".join(w) + " " for w in word_freq}
+    merges, passes = [], 0
+    while len(merges) < rounds:
+        pc = _pair_counts(word_freq, seg)
+        passes += 1
+        if not pc:
+            break
+        top = sorted((a, b, f) for (a, b), f in pc.items())
+        top = sorted(top, key=lambda p: -p[2])[:top_pairs]
+        tau = top[-1][2] if len(top) == top_pairs else None
+        batch = certified_merges(top, tau, {m[3] for m in merges})
+        assert batch and batch[0] == top[0]  # the head is always merged
+        for a, b, pf in batch[: rounds - len(merges)]:
+            merges.append((len(merges) + 1, a, b, a + b, pf))
+            _apply(seg, a, b)
+    return merges, seg, passes
 
 
 def _train_on(spark, rows: list[tuple[str, int]], rounds: int):
@@ -80,6 +120,85 @@ def test_trainer_matches_sequential_mirror(spark):
     assert got_merges == want_merges
     got_seg = {r.w: r.s for r in got_final.collect()}
     assert got_seg == want_seg
+
+
+@pytest.mark.parametrize("top_pairs", [2, 3])
+def test_trainer_matches_mirror_on_cut_pair_lists(spark, monkeypatch, top_pairs):
+    """With M = 2 or 3 every list is cut, so its last count (tau) bounds
+    the unlisted pairs: at 2 no second pair can beat it and each job
+    settles one merge; at 3 the jobs settle batches of two."""
+    from mergeextractor_spark.plans import bpe_pipeline
+
+    monkeypatch.setattr(bpe_pipeline, "TOP_PAIRS", top_pairs)
+    batches = []
+    certify = bpe_pipeline.certified_merges
+
+    def recorded(top, tau, made):
+        assert tau is not None
+        batches.append(certify(top, tau, made))
+        return batches[-1]
+
+    monkeypatch.setattr(bpe_pipeline, "certified_merges", recorded)
+    rounds = 8
+    got_merges, got_final = _train_on(spark, list(CORPUS.items()), rounds)
+    want_merges, want_seg = mirror_train(CORPUS, rounds)
+    assert got_merges == want_merges
+    assert {r.w: r.s for r in got_final.collect()} == want_seg
+    assert max(map(len, batches)) == top_pairs - 1
+
+
+_WORDS = st.dictionaries(
+    st.text(alphabet="abc", min_size=1, max_size=9),
+    st.sampled_from([1, 1, 2, 3, 5, 8]),  # few values: counts tie often
+    min_size=1,
+    max_size=8,
+)
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    word_freq=_WORDS,
+    rounds=st.integers(1, 25),
+    top_pairs=st.sampled_from([1, 2, 3, 4, 5, 6, 7, 8, 256]),
+)
+# ties and overlapping runs under the two-replace rule
+@example(word_freq=CORPUS, rounds=12, top_pairs=256)
+@example(word_freq={"aaaaaa": 3, "aaaaa": 3, "aaa": 2}, rounds=6, top_pairs=256)
+# aaab made twice, by a+aab and by aa+ab
+@example(word_freq={"bab": 5, "aaabab": 4, "aab": 7, "aaaaab": 7}, rounds=10, top_pairs=256)
+# a candidate that makes a symbol (aaab) an earlier merge of the batch made
+@example(word_freq={"aaba": 5, "aaaaab": 5, "aaab": 9, "ab": 8}, rounds=10, top_pairs=256)
+# a candidate that makes a symbol (aaa) that an earlier batch made
+@example(word_freq={"baaaaa": 9, "aaa": 2, "abb": 5, "bbaab": 8}, rounds=10, top_pairs=256)
+# exhausted vocabularies: no pair at all, and none after one merge
+@example(word_freq={"a": 3, "b": 2}, rounds=5, top_pairs=256)
+@example(word_freq={"ab": 1, "c": 4}, rounds=5, top_pairs=1)
+def test_certified_batches_match_the_sequential_mirror(word_freq, rounds, top_pairs):
+    """Merging each certified batch gives the merge table and the final
+    segmentation of one merge per round, for any list length M."""
+    merges, seg, passes = batched_mirror(word_freq, rounds, top_pairs)
+    assert (merges, seg) == mirror_train(word_freq, rounds)
+    assert passes <= len(merges) + 1
+
+
+def test_trainer_runs_fewer_jobs_than_rounds(spark):
+    """The key plus its toPandas() on sf0.001 stays within 16 Spark jobs
+    (13 with one single-job pair count per batch; 43 with a map-stage
+    job and a result job per merge), and a second pass compiles no
+    generated class: the batch projections vary in length, and the
+    session's class cache must still hold them all."""
+    from mergeextractor_spark.registry import load_all
+
+    q = load_all()["pipeline_bpe_train"]
+    jvm = spark._jvm
+    compiles = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job = scheduler.nextJobId()
+    q.spark(spark, SF).toPandas()
+    assert scheduler.nextJobId() - first_job <= 16
+    before = compiles.getCount()
+    q.spark(spark, SF).toPandas()
+    assert compiles.getCount() == before
 
 
 def test_merge_table_roundtrips_through_encoder_apply(spark):

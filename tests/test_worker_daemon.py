@@ -99,6 +99,74 @@ def test_worker_tasks_skip_the_archive_reread(spark):
     assert [r.reads for r in rows] == [0, 0, 0, 0]
 
 
+def test_package_udf_workers_skip_the_archive_reread_in_any_session():
+    """A session built without ``spark.python.daemon.module`` (as a
+    driver builds its own) keeps pyspark's daemon, whose tasks re-read
+    pyspark.zip 14-16 times per ``invalidate_caches()``. Once a worker
+    has run a package UDF, its later tasks re-read no archive; the
+    driver process keeps the stock import system."""
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {REPO!r})
+        import zipimport
+
+        import pandas as pd
+        from pyspark.sql import SparkSession
+
+        from mergeextractor_spark.functions.fuzzy import fuzz_partial_ratio_udf
+        from mergeextractor_spark.session import apply_session_tuning
+
+        spark = apply_session_tuning(
+            SparkSession.builder.master("local[1]").appName("stock-daemon").getOrCreate()
+        )
+        assert spark.sparkContext.getConf().get("spark.python.daemon.module") is None
+        pairs = spark.createDataFrame([("ab", "abc")], "a string, b string")
+        pairs.select(fuzz_partial_ratio_udf("a", "b")).collect()
+
+        def count_reads(batches):
+            import os
+            import zipimport
+
+            real, reads = zipimport._read_directory, []
+
+            def counted(path):
+                reads.append(path)
+                return real(path)
+
+            zipimport._read_directory, zipimport.graft_reads = counted, reads
+            patched = hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__")
+            for _ in batches:
+                pass
+            yield pd.DataFrame({{"pid": [os.getpid()], "n": [int(patched)]}})
+
+        def reads_since(batches):
+            import importlib
+            import os
+            import zipimport
+
+            importlib.invalidate_caches()
+            for _ in batches:
+                pass
+            yield pd.DataFrame({{"pid": [os.getpid()], "n": [len(zipimport.graft_reads)]}})
+
+        one = spark.range(0, 1, numPartitions=1)
+        first = one.mapInPandas(count_reads, "pid long, n long").collect()[0]
+        later = one.mapInPandas(reads_since, "pid long, n long").collect()[0]
+        print("SAME_WORKER", first.pid == later.pid, "PATCHED", first.n, "READS", later.n)
+        print("DRIVER_PATCHED", hasattr(zipimport.zipimporter.invalidate_caches, "__wrapped__"))
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script], cwd=REPO, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "SAME_WORKER True PATCHED 1 READS 0" in out.stdout, out.stdout + out.stderr[-3000:]
+    assert "DRIVER_PATCHED False" in out.stdout
+
+
 def test_python_udf_runs_from_any_cwd(tmp_path):
     """Workers start the daemon by module name, so a driver outside the
     repository with no PYTHONPATH must still run a Python UDF."""
