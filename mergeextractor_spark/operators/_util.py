@@ -108,7 +108,7 @@ def scratch_dir(prefix: str) -> str:
 
     Every sink/roundtrip query used to call ``tempfile.mkdtemp`` at
     construction and never clean up, leaking one directory per registry
-    materialization (ADVICE r7).  All scratch dirs now nest under ONE
+    materialization.  All scratch dirs now nest under ONE
     process-scoped root removed at interpreter exit, so repeated
     materializations cost directories only until the process ends and
     nothing survives it.
@@ -196,7 +196,7 @@ def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
 
     Default (local mode): ``localCheckpoint(eager=True)`` — materializes
     to executor storage blocks, no filesystem round-trip. CAVEAT for real
-    clusters (VERDICT r5 item 7): localCheckpoint pins those blocks to
+    clusters: localCheckpoint pins those blocks to
     the *live executors* that computed them — under dynamic allocation
     or any executor loss the blocks vanish and the job fails, because
     the lineage needed to recompute them was just thrown away.
@@ -216,7 +216,7 @@ def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     dedups' Python decode stage appeared 4× in the banded join's
     physical plan).
 
-    Checkpoint-file lifecycle (ADVICE r6): reliable checkpoint files are
+    Checkpoint-file lifecycle: reliable checkpoint files are
     only deleted by the ContextCleaner when the checkpointed RDD is
     GC'd AND ``spark.cleaner.referenceTracking.cleanCheckpoints=true``
     (a SparkContext-startup conf, default false) — otherwise a 64-round
@@ -253,114 +253,185 @@ def truncate_lineage(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+def _two_phase_prefix(
+    df: DataFrame,
+    order_cols: list,
+    prefixes: dict[str, tuple[Column, Column]],
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Global running aggregates over ``order_cols`` WITHOUT a single-task
+    window: the one two-phase plan behind every rank and cumsum helper.
+
+    ``prefixes`` maps each output column to a pair (window function,
+    per-split total): ``(F.row_number(), F.count("*"))`` for a rank,
+    ``(F.sum(c), F.sum(c))`` for a running sum. The frame is range-
+    partitioned on the ordering (names ascend; ``F.desc(...)`` entries
+    are kept), each split runs the window in parallel, and each split's
+    offset — the prefix sum of the earlier splits' totals, a window over
+    a <= num_partitions-row aggregate — is broadcast-joined back on the
+    split id. The result composes into the caller's single action: no
+    driver collect, no data-dependent literal in the plan. Each output
+    takes its per-split total's type: bigint for a rank (a 32-bit
+    row_number would wrap past 2^31 rows), SUM(c)'s type for a sum. Ties
+    on ``order_cols`` colocate under range partitioning, so a RANGE-frame
+    sum keeps its peers-share-a-value semantics; a rank needs a total
+    order.
+
+    ``num_partitions`` (default: the session's parallelism) is the split
+    count; the equivalence tests in tests/test_invariants.py set it to
+    force 1 split, a few, and more splits than rows.
+
+    Construction runs the range exchange (its sampling job and map stage)
+    behind the second lazy cut — callers register ``eager=True``. Cluster
+    caveat: the offsets aggregate, including the first touch of that cut,
+    runs inside the broadcast-exchange thread, which
+    ``spark.sql.broadcastTimeout`` bounds (default 300 s); at ~1e7-row /
+    100 TB shapes raise that timeout, or materialize the cut (one noop
+    action) before demanding any consumer.
+    """
+    from pyspark.sql import Window as W
+
+    clash = [c for c in prefixes if c in df.columns]
+    if clash:
+        raise ValueError(f"output column(s) {clash} already exist on the frame")
+    if any(c.startswith("__tpp_") for c in df.columns):
+        raise ValueError("frame already carries __tpp_* temp columns")
+    pid = "__tpp_pid"
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    order_exprs = [F.asc(c) if isinstance(c, str) else c for c in order_cols]
+    # cut the input ONCE before the range exchange: the range partitioner
+    # runs a separate sampling job over its child, so an uncut heavy
+    # subtree (tokenize + vocab join in sample_logprob_bucket) would run
+    # twice per construction (measured: ~2x the subtree cost at sf0.1)
+    rp = truncate_lineage(df, eager=False).repartitionByRange(n, *order_exprs)
+    w = W.partitionBy(pid).orderBy(*order_exprs)
+    # cut again after the shuffle: the offsets branch and the main read
+    # must see the SAME range boundaries, which re-running the sampler
+    # per action would give only by its seeding accident
+    local = truncate_lineage(
+        rp.withColumn(pid, F.spark_partition_id()).select(
+            "*", *[fn.over(w).alias(f"__tpp_l_{o}") for o, (fn, _) in prefixes.items()]
+        ),
+        eager=False,
+    )
+    totals = local.groupBy(pid).agg(
+        *[tot.alias(f"__tpp_t_{o}") for o, (_, tot) in prefixes.items()]
+    )
+    types = dict(totals.dtypes)
+    # this window spans split COUNT rows, never data; the inner join is
+    # safe because every local row's split id has a total
+    before = W.orderBy(pid).rowsBetween(W.unboundedPreceding, -1)
+    offsets = totals.select(
+        pid,
+        *[
+            F.coalesce(F.sum(f"__tpp_t_{o}").over(before), F.lit(0)).alias(
+                f"__tpp_o_{o}"
+            )
+            for o in prefixes
+        ],
+    )
+    return (
+        local.join(F.broadcast(offsets), pid)
+        .withColumns(
+            {
+                o: (F.col(f"__tpp_o_{o}") + F.col(f"__tpp_l_{o}")).cast(
+                    types[f"__tpp_t_{o}"]
+                )
+                for o in prefixes
+            }
+        )
+        .drop(pid, *[f"__tpp_{x}_{o}" for o in prefixes for x in "lo"])
+    )
+
+
 def global_row_number(
     df: DataFrame,
-    order_cols: list[str],
+    order_cols: list,
     out: str = "i",
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Global 1-based rank over ``order_cols`` WITHOUT a single-task window.
+    """Global 1-based bigint rank over ``order_cols`` WITHOUT a
+    single-task window: :func:`_two_phase_prefix` with ``row_number()``.
 
     The single-partition ``row_number().over(W.orderBy(...))`` is correct
     but serializes the whole frame through one task — fine for a
     result-sized aggregate (agg_source_gini's default path), wrong for a
-    ~1e7-domain corpus. This is the standard two-phase form: range-
-    partition on the order keys, rank locally per partition (parallel
-    windows), then add each partition's cumulative row-count offset.
-    The offsets ride a BROADCAST JOIN on the partition id (r14): the
-    per-pid counts are a <= num_partitions-row aggregate and their
-    prefix sum a window over that tiny frame, so the whole rank
-    composes into the caller's single action — the previous driver
-    collect forced a blocking job per construction (plus the sampling
-    pass it eagerly materialized), serial round-trips every
-    partitioned_ntile / partitioned_row_number caller paid per run.
-    Consistency between the offsets subtree and the main read comes
-    from the lazy localCheckpoint both consume — the same materialized
-    blocks, so pids always agree — never from exchange-reuse accidents.
-    Cluster caveat (ADVICE r14): the offsets aggregate — including the
-    FIRST-TOUCH materialization of the lazy checkpoint of the full
-    frame — executes inside the broadcast-exchange thread, which is
-    bounded by ``spark.sql.broadcastTimeout`` (default 300 s); at
-    ~1e7-row/100 TB shapes raise that timeout for cluster runs, or
-    materialize the checkpoint (one noop action) before demanding any
-    consumer of this rank.
-
-    ``order_cols`` must be a total order (unique across rows), the same
-    requirement every deterministic row_number in this repo carries: ties
-    that straddle a range boundary would otherwise rank nondeterministically.
-    Entries may be column names (ranked ascending) or explicit sort
-    expressions (``F.desc(...)``) — the same spec drives the range
-    partitioner and the per-partition window, so the two phases always
-    agree. Equivalence with the single-window form is pytest-pinned in
+    ~1e7-domain corpus. ``order_cols`` must be a total order (unique
+    across rows), the same requirement every deterministic row_number in
+    this repo carries. A running count of 1s is no substitute on a
+    non-unique order: its RANGE frame gives tied rows one shared rank.
+    Equivalence with the single-window form is pytest-pinned in
     tests/test_invariants.py.
     """
-    if out in df.columns:
-        raise ValueError(f"output column {out!r} already exists on the frame")
-    pid_col, lrn_col = "__grn_pid", "__grn_lrn"
-    if pid_col in df.columns or lrn_col in df.columns:
-        raise ValueError("frame already carries __grn_* temp columns")
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    from pyspark.sql import Window as W
+    return _two_phase_prefix(
+        df, order_cols, {out: (F.row_number(), F.count("*"))}, num_partitions
+    )
 
-    order_exprs = [F.asc(c) if isinstance(c, str) else c for c in order_cols]
-    # materialize the input ONCE before the range exchange: Spark's
-    # range partitioner runs a separate SAMPLING job over the child, so
-    # an un-materialized heavy subtree (tokenize + vocab join in
-    # sample_logprob_bucket) would execute twice per construction
-    # (measured: ~2x the subtree cost at sf0.1). The frame is narrow by
-    # contract, so the extra cache is rows x a few columns.
-    src = truncate_lineage(df, eager=False)
-    rp = src.repartitionByRange(n, *order_exprs)
-    # checkpoint once more after the shuffle: the offsets job and the
-    # downstream read must see the SAME range boundaries (re-executing
-    # the range sampler for each action would be correct only by the
-    # sampler's seeding accident)
-    local = truncate_lineage(
-        rp.withColumn(pid_col, F.spark_partition_id()).withColumn(
-            lrn_col,
-            F.row_number().over(
-                W.partitionBy(pid_col).orderBy(*order_exprs)
-            ),
-        ),
-        eager=False,
-    )
-    # prefix-sum the per-pid counts over the (<= n)-row aggregate — the
-    # single-partition window is over partition COUNT rows, never data —
-    # and broadcast-join the offsets back on pid: zero driver collects,
-    # and an inner join is safe (every local row's pid is in the counts)
-    off_w = W.orderBy(pid_col).rowsBetween(W.unboundedPreceding, -1)
-    offsets_df = (
-        local.groupBy(pid_col)
-        .agg(F.count("*").alias("__grn_cnt"))
-        .select(
-            pid_col,
-            F.coalesce(F.sum("__grn_cnt").over(off_w), F.lit(0)).alias(
-                "__grn_off"
-            ),
+
+def global_cumsum(
+    df: DataFrame,
+    order_cols: list,
+    sum_cols: list[str],
+    num_partitions: int | None = None,
+) -> DataFrame:
+    """Running ``SUM(c) OVER (ORDER BY order_cols)``, appended as
+    ``cum_<c>`` (typed like SUM(c)) for each ``c`` in ``sum_cols``,
+    WITHOUT a single-task window: :func:`_two_phase_prefix` with
+    ``sum(c)``. Rows tying on ``order_cols`` share a value, as in the
+    window's default RANGE frame. A caller that needs the grand totals
+    takes them in-plan, from a one-row aggregate of this output (see
+    ks_frame). Equivalence with the single-window form is pytest-pinned
+    in tests/test_invariants.py.
+
+    FLOAT sum columns are REJECTED: the two-phase split reassociates
+    additions, so a double cumsum depends on the split layout — it and a
+    sequential window can disagree in the last ulp, which a 4-decimal
+    round can amplify into a spurious hash mismatch at a knife edge.
+    Quantize to scaled integers first (agg_ltv_curve's round(value*10000)
+    cents-style form) or use an exact-integer algebraic split
+    (events_changepoint_cusum's cum(n-m) = cum_n - rank*m form).
+    """
+    # the missing-column check runs first: a misspelled sum column would
+    # otherwise slip past the dtype guard and fail later inside the
+    # window with an opaque analysis error about generated plan internals
+    missing = [c for c in sum_cols if c not in df.columns]
+    if missing:
+        raise ValueError(
+            f"global_cumsum: sum column(s) {missing} not in frame "
+            f"(have: {df.columns})"
         )
-    )
-    return (
-        local.join(F.broadcast(offsets_df), pid_col)
-        .withColumn(out, (F.col("__grn_off") + F.col(lrn_col)).cast("bigint"))
-        .drop(pid_col, lrn_col, "__grn_off")
+    dtypes = dict(df.dtypes)
+    bad = [c for c in sum_cols if dtypes[c] in ("float", "double")]
+    if bad:
+        raise ValueError(
+            f"global_cumsum over float column(s) {bad}: the two-phase "
+            "prefix sum reassociates FP additions, making the result "
+            "partition-layout-dependent. Quantize to scaled integers "
+            "(round(x*10000) cents-style) first."
+        )
+    return _two_phase_prefix(
+        df,
+        order_cols,
+        {f"cum_{c}": (F.sum(c), F.sum(c)) for c in sum_cols},
+        num_partitions,
     )
 
 
 def _nullsafe_offsets_join(
-    left: DataFrame, offsets: DataFrame, part_cols: list[str], broadcast: bool
+    left: DataFrame, offsets: DataFrame, part_cols: list[str]
 ) -> DataFrame:
-    """Join the result-sized per-partition-value ``offsets`` frame back
-    onto ``left`` WITHOUT dropping NULL partition keys.
+    """Broadcast-join the result-sized per-partition-value ``offsets``
+    frame back onto ``left`` WITHOUT dropping NULL partition keys.
 
     The window forms these helpers replace (``... OVER (PARTITION BY
     part_cols)``) keep a NULL partition, and the DuckDB oracles' GROUP BY
     keeps a NULL group — but a plain equi-join on ``part_cols`` silently
-    drops every row whose key is NULL (ADVICE r9: lang/source are
-    routinely NULL in real web corpora). Null-safe equality (``<=>``) is
-    still a hash-joinable key in both broadcast and shuffle strategies,
-    so the join keeps its plan shape; :func:`partitioned_lag` has used
-    the same condition since r8. Empty ``part_cols`` = one global group
-    → the 1-row offsets frame broadcasts as a cross join.
+    drops every row whose key is NULL (lang/source are routinely NULL in
+    real web corpora). Null-safe equality (``<=>``) is still a
+    hash-joinable key, so the join keeps its plan shape;
+    :func:`partitioned_lag` uses the same condition. Empty ``part_cols``
+    = one global group → the 1-row offsets frame broadcasts as a cross
+    join.
     """
     import functools
     import operator
@@ -371,13 +442,11 @@ def _nullsafe_offsets_join(
         *[F.col(c).alias(f"__nsj_{c}") for c in part_cols],
         *[c for c in offsets.columns if c not in part_cols],
     )
-    if broadcast:
-        ren = F.broadcast(ren)
     cond = functools.reduce(
         operator.and_,
         [F.col(c).eqNullSafe(F.col(f"__nsj_{c}")) for c in part_cols],
     )
-    return left.join(ren, cond).drop(*[f"__nsj_{c}" for c in part_cols])
+    return left.join(F.broadcast(ren), cond).drop(*[f"__nsj_{c}" for c in part_cols])
 
 
 def partitioned_cumsum(
@@ -387,7 +456,6 @@ def partitioned_cumsum(
     sum_col: str,
     out: str = "cum",
     num_partitions: int | None = None,
-    broadcast_offsets: bool = True,
 ) -> DataFrame:
     """``SUM(sum_col) OVER (PARTITION BY part_cols ORDER BY order_cols)``
     WITHOUT a single-task cumulation per partition value: global
@@ -398,10 +466,10 @@ def partitioned_cumsum(
     exact, so oracles keep the plain window form. Requires
     ``sum_col >= 0`` (token counts, masses): with negative values
     ``min(cum - x)`` would not identify the group's first row.
-    Construction runs the offsets job — callers register ``eager=True``.
+    Construction runs the range exchange — callers register ``eager=True``.
     """
     part_cols = list(part_cols)
-    cum, _tot = global_cumsum(
+    cum = global_cumsum(
         df,
         part_cols + list(order_cols),
         [sum_col],
@@ -411,8 +479,7 @@ def partitioned_cumsum(
     offs = cum.groupBy(*part_cols).agg(
         F.min(F.col(gcol) - F.col(sum_col)).alias("__pcs_off")
     )
-    # see partitioned_row_number for the broadcast_offsets dial
-    j = _nullsafe_offsets_join(cum, offs, part_cols, broadcast_offsets)
+    j = _nullsafe_offsets_join(cum, offs, part_cols)
     return j.withColumn(
         out, (F.col(gcol) - F.col("__pcs_off")).cast("bigint")
     ).drop(gcol, "__pcs_off")
@@ -424,7 +491,6 @@ def grouped_exact_percentiles(
     col: str,
     ps: dict[str, float],
     num_partitions: int | None = None,
-    broadcast_offsets: bool = True,
 ) -> DataFrame:
     """EXACT linear-interpolated percentiles per group WITHOUT buffering
     whole groups: ``percentile()``/``median()`` are imperative
@@ -438,7 +504,7 @@ def grouped_exact_percentiles(
     oracles keep plain ``quantile_cont``. ``ps`` maps output column
     name → quantile in [0, 1]. Rank ties (equal values) pick either
     tied row — the extracted VALUE is identical. Construction runs the
-    offsets job — callers register ``eager=True``.
+    range exchange — callers register ``eager=True``.
     """
     part_cols = list(part_cols)
     # percentile()/quantile_cont skip NULLs — they must not occupy ranks
@@ -450,7 +516,6 @@ def grouped_exact_percentiles(
         out="__gep_r",
         n_out="__gep_n",
         num_partitions=num_partitions,
-        broadcast_offsets=broadcast_offsets,
     )
     r, n = F.col("__gep_r"), F.col("__gep_n")
     keep = F.lit(False)
@@ -489,22 +554,20 @@ def grouped_exact_percentiles(
     res = mid.groupBy(*part_cols).agg(*aggs)
     # percentile()/quantile_cont emit a group whose values are ALL NULL
     # as a row with a NULL quantile (GROUP BY keeps the key); the NULL
-    # filter above removed such groups entirely (ADVICE r9). Reinstate
-    # them: the lost keys appear in the IS NULL slice but not in the
-    # results — a pushdown-filtered scan plus a result-sized anti-join,
+    # filter above removed such groups entirely. Reinstate them: the
+    # lost keys appear in the IS NULL slice but not in the results — a
+    # pushdown-filtered scan plus a result-sized broadcast anti-join,
     # never a second full pass over the non-null mass.
     import functools
     import operator
 
     null_keys = df.filter(F.col(col).isNull()).select(*part_cols).distinct()
     resk = res.select(*[F.col(c).alias(f"__gep_k_{c}") for c in part_cols])
-    if broadcast_offsets:
-        resk = F.broadcast(resk)
     cond = functools.reduce(
         operator.and_,
         [F.col(c).eqNullSafe(F.col(f"__gep_k_{c}")) for c in part_cols],
     )
-    missing = null_keys.join(resk, cond, "left_anti")
+    missing = null_keys.join(F.broadcast(resk), cond, "left_anti")
     for name in ps:
         missing = missing.withColumn(name, F.lit(None).cast("double"))
     return res.unionByName(missing)
@@ -525,7 +588,7 @@ def partitioned_lag(
     (unique bigint key: parallel, skew-free) carries the previous row's
     value across, nulled when the partition value changes (the previous
     row belongs to another partition exactly at group boundaries).
-    Construction runs the offsets job — callers register ``eager=True``.
+    Construction runs the range exchange — callers register ``eager=True``.
     """
     import functools
     import operator
@@ -553,122 +616,6 @@ def partitioned_lag(
     )
 
 
-def global_cumsum(
-    df: DataFrame,
-    order_cols: list,
-    sum_cols: list[str],
-    num_partitions: int | None = None,
-    allow_float: bool = False,
-) -> tuple[DataFrame, dict[str, int | float]]:
-    """Running ``SUM(c) OVER (ORDER BY order_cols)`` for each ``c`` in
-    ``sum_cols`` WITHOUT a single-task window — the
-    :func:`global_row_number` pattern applied to sums (VERDICT r8 item
-    3): range-partition on the order keys, cumulate per partition
-    (parallel windows), then add each partition's prefix total. The
-    per-partition totals are collected to the driver — bounded by the
-    partition COUNT — and the grand totals come back for free as the
-    second return value (saving the caller an unpartitioned total
-    window over the same corpus-sized frame).
-
-    Appends ``cum_<c>`` columns typed like SUM(c) itself (bigint for
-    integral inputs, double for double — the pass-through exists for
-    ``allow_float=True`` callers; a hardcoded bigint cast would
-    silently truncate them). Rows tying on ``order_cols``
-    colocate under range partitioning, so the default RANGE window
-    frame's peers-share-a-value semantics survive the split. Like
-    global_row_number, construction runs the totals job — callers
-    register with ``eager=True``. Equivalence with the single-window
-    form is pytest-pinned in tests/test_invariants.py.
-
-    FLOAT sum columns are REJECTED unless ``allow_float=True`` (ADVICE
-    r11): the two-phase split reassociates additions, so a double
-    cumsum depends on defaultParallelism/partition layout — a
-    sequential window and this helper can legitimately disagree in the
-    last ulp, which a 4-decimal round can amplify into a spurious
-    hash mismatch at a knife edge. Quantize to scaled integers first
-    (agg_ltv_curve's round(value*10000) cents-style form) or use the
-    exact-integer algebraic split (events_changepoint_cusum's
-    cum(n-m) = cum_n - rank*m form); pass ``allow_float=True`` only
-    when the caller tolerates partition-layout-dependent low bits.
-    """
-    pid_col = "__gcs_pid"
-    if pid_col in df.columns:
-        raise ValueError("frame already carries __gcs_* temp columns")
-    # missing-column check FIRST (ADVICE r12): a misspelled sum column
-    # would silently pass the dtype guard (dtypes.get -> None) and only
-    # fail later inside the window expression with an opaque analysis
-    # error pointing at generated plan internals.
-    missing = [c for c in sum_cols if c not in df.columns]
-    if missing:
-        raise ValueError(
-            f"global_cumsum: sum column(s) {missing} not in frame "
-            f"(have: {df.columns})"
-        )
-    if not allow_float:
-        dtypes = dict(df.dtypes)
-        bad = [c for c in sum_cols if dtypes.get(c) in ("float", "double")]
-        if bad:
-            raise ValueError(
-                f"global_cumsum over float column(s) {bad}: the two-phase "
-                "prefix sum reassociates FP additions, making the result "
-                "partition-layout-dependent. Quantize to scaled integers "
-                "(round(x*10000) cents-style) or pass allow_float=True."
-            )
-    for c in sum_cols:
-        if f"cum_{c}" in df.columns:
-            raise ValueError(f"output column cum_{c} already exists")
-    order_exprs = [F.asc(c) if isinstance(c, str) else c for c in order_cols]
-    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    from pyspark.sql import Window as W
-
-    # pre-materialize: the range partitioner's sampling job would run
-    # the upstream subtree a second time (see global_row_number)
-    src = truncate_lineage(df, eager=False)
-    rp = src.repartitionByRange(n, *order_exprs)
-    w = W.partitionBy(pid_col).orderBy(*order_exprs)
-    local = truncate_lineage(
-        rp.withColumn(pid_col, F.spark_partition_id()).select(
-            "*", *[F.sum(c).over(w).alias(f"__gcs_l_{c}") for c in sum_cols]
-        ),
-        eager=False,
-    )
-    per_pid = {
-        r[pid_col]: r
-        for r in local.groupBy(pid_col)
-        .agg(*[F.sum(c).alias(c) for c in sum_cols])
-        .collect()
-    }
-    out = local
-    # cum_<c> keeps SUM(c)'s own type: the local window sum column already
-    # carries the sum-widened dtype (int→bigint, double→double), so casting
-    # to IT is the identity for integral callers (same plans as before the
-    # r11 generalization) and lossless for the double cumsum callers.
-    sum_types = dict(local.dtypes)
-    totals: dict[str, int | float] = {}  # floats iff allow_float=True
-    for c in sum_cols:
-        offsets, acc = {}, 0
-        for pid in sorted(per_pid):
-            offsets[pid] = acc
-            acc += per_pid[pid][c] or 0
-        totals[c] = acc
-        # empty input → empty offsets map (see global_row_number)
-        off = (
-            F.create_map(
-                *[F.lit(x) for kv in sorted(offsets.items()) for x in kv]
-            )[F.col(pid_col)]
-            if offsets
-            else F.lit(0)
-        )
-        out = out.withColumn(
-            f"cum_{c}",
-            (off + F.col(f"__gcs_l_{c}")).cast(sum_types[f"__gcs_l_{c}"]),
-        )
-    return (
-        out.drop(pid_col, *[f"__gcs_l_{c}" for c in sum_cols]),
-        totals,
-    )
-
-
 def ntile_from_rank(r: Column, n: Column, k: int) -> Column:
     """EXACT ``ntile(k)`` bucket for within-partition rank ``r`` (1-based)
     of ``n`` rows, in closed form: the first ``n % k`` buckets hold
@@ -691,24 +638,21 @@ def partitioned_row_number(
     out: str = "rn",
     n_out: str | None = None,
     num_partitions: int | None = None,
-    broadcast_offsets: bool = True,
 ) -> DataFrame:
     """``row_number() OVER (PARTITION BY part_cols ORDER BY order_cols)``
-    WITHOUT a single-task sort per partition value — the same two-phase
-    recipe as :func:`partitioned_ntile` (global range-partitioned rank,
-    result-sized per-partition-value offsets joined back), exposing
-    the within-partition rank itself. ``n_out`` optionally also emits
-    the partition-value row count (free from the same aggregate).
+    WITHOUT a single-task sort per partition value.
 
-    ``broadcast_offsets``: True (default) force-broadcasts the offsets
-    table — right for LOW-cardinality hot keys (lang, event_type),
-    where a shuffle join on the key would re-serialize the hot value
-    through one reduce task. Pass False for HIGH-cardinality keys
-    (~1e7 web domains: the offsets table itself is too big to ship to
-    every executor) — the join shuffles on the key and AQE's skew-join
-    split handles any residual hot value. Equivalence of both paths is
-    pytest-pinned. Construction runs the offsets job — callers register
-    ``eager=True``.
+    The plain window serializes each partition value through one task —
+    on a ~50%-English 100 TB corpus the 'en' partition is a single-task
+    sort of ~1e10 rows. This takes the global two-phase rank over
+    (part_cols ++ order_cols) — range-partitioned, so hot partition
+    values SPREAD across range splits — then broadcasts back a
+    result-sized per-value aggregate (start rank + row count; the
+    callers' keys are lang, source, event_type and the like).
+    ``n_out`` optionally also emits the partition value's row count.
+    Like :func:`global_row_number`, the combined ordering must be a
+    total order (callers tie-break on a unique id). Construction runs
+    the range exchange — callers register ``eager=True``.
     """
     part_cols = list(part_cols)
     gr = global_row_number(
@@ -721,7 +665,7 @@ def partitioned_row_number(
         F.min("__prn_i").alias("__prn_i0"),
         F.count("*").alias("__prn_n"),
     )
-    j = _nullsafe_offsets_join(gr, sizes, part_cols, broadcast_offsets)
+    j = _nullsafe_offsets_join(gr, sizes, part_cols)
     j = j.withColumn(
         out, (F.col("__prn_i") - F.col("__prn_i0") + 1).cast("bigint")
     )
@@ -737,46 +681,22 @@ def partitioned_ntile(
     k: int,
     out: str = "bucket",
     num_partitions: int | None = None,
-    broadcast_offsets: bool = True,
 ) -> DataFrame:
     """``ntile(k) OVER (PARTITION BY part_cols ORDER BY order_cols)``
-    WITHOUT a single-task sort per partition value.
-
-    The plain window form serializes each partition value through one
-    task — on a ~50%-English 100 TB corpus the 'en' partition is a
-    single-task sort of ~1e10 rows (the skewed-key shuffle VERDICT r8
-    item 2 names). This composes the repo's two scale-safe pieces
-    instead: a global two-phase rank over (part_cols ++ order_cols) —
-    range-partitioned, so hot partition values SPREAD across range
-    splits — then a result-sized per-partition-value aggregate (one row
-    per value: start rank + row count) broadcast back. The bucket is the
-    EXACT ntile value computed in closed form from the within-partition
-    rank r and size n: the first ``n % k`` buckets hold ``ceil(n/k)``
-    rows, the rest ``floor(n/k)`` (SQL-standard remainder front-loading,
-    identical in Spark and DuckDB) — so oracles keep plain ``ntile()``
-    and hashes are unchanged. Equivalence with the single-window form is
-    pytest-pinned in tests/test_invariants.py.
-
-    Like :func:`global_row_number`, the combined ordering must be a
-    total order (callers tie-break on a unique id). Construction runs
-    the offsets job (bounded by the partition COUNT) — callers register
-    with ``eager=True``.
+    WITHOUT a single-task sort per partition value:
+    :func:`partitioned_row_number` with its row count, then the
+    closed-form :func:`ntile_from_rank` — the EXACT ntile value, so
+    oracles keep plain ``ntile()``. Empty ``part_cols`` is one global
+    partition (the RFM quintile shape). Equivalence with the
+    single-window form is pytest-pinned in tests/test_invariants.py.
     """
-    part_cols = list(part_cols)
-    gr = global_row_number(
+    ranked = partitioned_row_number(
         df,
-        part_cols + list(order_cols),
-        out="__pnt_i",
+        part_cols,
+        order_cols,
+        out="__pnt_r",
+        n_out="__pnt_n",
         num_partitions=num_partitions,
     )
-    sizes = gr.groupBy(*part_cols).agg(
-        F.min("__pnt_i").alias("__pnt_i0"),
-        F.count("*").alias("__pnt_n"),
-    )
-    # empty part_cols = one global partition: the 1-row sizes aggregate
-    # broadcasts as a cross join (the RFM quintile shape); see
-    # partitioned_row_number for the broadcast_offsets cardinality dial
-    j = _nullsafe_offsets_join(gr, sizes, part_cols, broadcast_offsets)
-    r = F.col("__pnt_i") - F.col("__pnt_i0") + 1
-    bucket = ntile_from_rank(r, F.col("__pnt_n"), k)
-    return j.withColumn(out, bucket).drop("__pnt_i", "__pnt_i0", "__pnt_n")
+    bucket = ntile_from_rank(F.col("__pnt_r"), F.col("__pnt_n"), k)
+    return ranked.withColumn(out, bucket).drop("__pnt_r", "__pnt_n")

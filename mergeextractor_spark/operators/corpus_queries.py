@@ -56,7 +56,7 @@ from .text_queries import _tokens
     "(range-partitioned two-phase rank + broadcast per-lang offsets), "
     "not a per-lang window — a hot language would otherwise sort "
     "through one task (VERDICT r8 item 2).",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def sample_logprob_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
@@ -473,7 +473,7 @@ def agg_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "still reach ~1e9 rows, too big for one task per source (the r9 "
     "sweep of the VERDICT r8 item 2 class); the slope is "
     "covar_pop/var_pop, both map-side-combinable aggregates.",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import partitioned_row_number
@@ -610,7 +610,7 @@ ANNEAL_SHARE = 0.3  # token share of the anneal (phase-2) stage
     "broadcast per-lang offsets, never a single-task per-lang sort — "
     "VERDICT r8 item 2) over (doc_id, lang, n_tok, prob) only, and the "
     "phase totals are a 2-row aggregate broadcast back.",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def sample_anneal_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import partitioned_ntile

@@ -596,7 +596,7 @@ PACK_BUDGET = 2048  # token budget per packed training sequence
     "per-lang window is a single-task cumulation of the hot language at "
     "100 TB (the r9 sweep of the VERDICT r8 item 2 class); the pack "
     "rollup is one groupBy.",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def sample_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import partitioned_cumsum
@@ -718,7 +718,7 @@ def pack_interleaved(items: DataFrame, budget: int = PACK_BUDGET) -> DataFrame:
     "sequential-codec mirror) and unrolls the identical SQL. Boundary "
     "semantics (image exactly filling / overflowing a pack) pinned in "
     "tests/test_pack_interleaved.py.",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def sample_pack_interleaved(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .multimodal import _media_df, image_metadata
@@ -830,7 +830,7 @@ TOP_DECILES = 3  # keep the top 3 quality deciles per language
     "per-lang window — a ~50%-English corpus would otherwise sort its "
     "hot language through ONE task (VERDICT r8 item 2). Composes with "
     "any upstream quality scorer.",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def sample_quality_decile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import partitioned_ntile
@@ -1542,7 +1542,7 @@ def text_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     "two-phase rank + broadcast per-type offsets), never an "
     "event_type-partitioned window (|types| tasks — the r9 sweep of "
     "the VERDICT r8 item 2 class); the Gini reduces map-side.",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def dq_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import partitioned_row_number
@@ -2409,13 +2409,12 @@ VOCAB_CHECKPOINTS = (10, 100, 1000, 10000)
     "_util.global_cumsum over (desc n, asc w) with a constant-1 "
     "column: cum_one IS the global rank (the order is a total order, "
     "so the RANGE frame has no peers), one range exchange covers both "
-    "sums, and the grand totals (token mass, vocabulary size) come "
-    "back from the partition-totals collect for free. Only ranks "
+    "sums, and the grand totals (token mass, vocabulary size) are a "
+    "one-row aggregate of the cumsum broadcast back in-plan. Only ranks "
     "<= max(checkpoint) can ever contribute coverage, so the "
     "checkpoint cross join sees a bounded 10k-row frame, never the "
-    "vocabulary (the r12 swap off the coalesce(1) single-task sweep — "
-    "VERDICT r11 item 2).",
-    eager=True,  # construction collects the range-partition offsets
+    "vocabulary, and no stage funnels the vocabulary through one task.",
+    eager=True,  # construction runs the range-partition exchange
 )
 def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import global_cumsum
@@ -2430,8 +2429,10 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n"))
         .withColumn("one", F.lit(1).cast("bigint"))
     )
-    cum, tot = global_cumsum(wc, [F.desc("n"), F.asc("w")], ["one", "n"])
-    total, vocab = float(tot["n"]), int(tot["one"])
+    cum = global_cumsum(wc, [F.desc("n"), F.asc("w")], ["one", "n"])
+    totals = cum.agg(
+        F.sum("n").alias("total"), F.count("*").cast("bigint").alias("full_vocab")
+    )
     top = cum.filter(F.col("cum_one") <= max(VOCAB_CHECKPOINTS)).select(
         F.col("cum_one").alias("rn"), F.col("cum_n").alias("cum")
     )
@@ -2440,25 +2441,19 @@ def text_vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vocab_size"
         )
     )
-    return (
+    covered = (
         top.crossJoin(F.broadcast(checkpoints))
         .groupBy("vocab_size")
-        .agg(
-            r4(
-                F.coalesce(
-                    F.max(
-                        F.when(F.col("rn") <= F.col("vocab_size"), F.col("cum"))
-                    )
-                    / F.lit(total),
-                    F.lit(0.0),
-                )
-            ).alias("token_coverage")
-        )
-        .select(
-            "vocab_size",
-            "token_coverage",
-            F.lit(vocab).cast("bigint").alias("full_vocab"),
-        )
+        .agg(F.max(F.when(F.col("rn") <= F.col("vocab_size"), F.col("cum"))).alias("c"))
+    )
+    # the totals ride the plan as a broadcast one-row aggregate; an
+    # empty vocabulary leaves no covered rows, so total is never 0 here
+    return covered.crossJoin(F.broadcast(totals)).select(
+        "vocab_size",
+        r4(F.coalesce(F.col("c") / F.col("total"), F.lit(0.0))).alias(
+            "token_coverage"
+        ),
+        "full_vocab",
     )
 
 

@@ -192,7 +192,7 @@ def agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     "sketch alternative is percentile_approx (agg_percentile_approx, "
     "rows-only since sketches differ across engines); this key keeps "
     "EXACTNESS at scale.",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import grouped_exact_percentiles
@@ -242,7 +242,7 @@ PCTL_APPROX_ACC = 1000  # approx_percentile accuracy → rank error ≤ n/1000
     "them. The exact-rank side exists to make the bound hashable; the "
     "production scale path is the sketch aggregate alone (the exact "
     "twin is agg_percentile).",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def agg_percentile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import partitioned_row_number
@@ -1735,7 +1735,7 @@ def agg_numeric_correlations(spark: SparkSession, sf_dir: str) -> DataFrame:
     "never an event_type-partitioned window (5 partition VALUES = 5 "
     "tasks sorting the whole corpus at 100 TB; the r9 sweep of the "
     "VERDICT r8 item 2 class).",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def window_value_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import global_row_number, ntile_from_rank
@@ -1984,7 +1984,7 @@ def dq_duplicate_invoices(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the batch-profiling fence every DQ suite runs. The |groups|-row "
     "fence table broadcasts back into one counting aggregate — no "
     "row-level sort, no window.",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def dq_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import grouped_exact_percentiles

@@ -861,7 +861,7 @@ MAD_SIGMA = 1.4826  # normal-consistency constant for MAD-based z-scores
     "aggregator at 100 TB; the r9 exact-quantile rewrite); the sketch "
     "alternative remains approx_percentile when exactness is not "
     "contracted.",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def events_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import grouped_exact_percentiles
@@ -1162,11 +1162,11 @@ def agg_ab_test_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "report starts from. Ties broken by user_id so the quintile "
     "assignment is deterministic across engines. One purchase-filtered "
     "aggregate (map-side combinable), then the three GLOBAL quintile "
-    "cuts run FUSED through a single _util.partitioned_ntile pass "
-    "(VERDICT r12 item 2): the user frame unions into (metric, key, "
+    "cuts run FUSED through a single _util.partitioned_ntile pass: "
+    "the user frame unions into (metric, key, "
     "user_id) long form — keys cast to double, exact for int64 counts/"
     "epochs below 2^53 — and ntile(5) PARTITION BY metric assigns all "
-    "three scores in ONE range exchange + ONE offsets collect + ONE "
+    "three scores in ONE range exchange + ONE offsets join + ONE "
     "checkpoint where the r9 form chained three of each (the 3x "
     "fixed-cost floor the r12 bench flagged at 1.88x). Bucket "
     "assignment is bit-identical to three separate cuts (same "
@@ -1175,7 +1175,7 @@ def agg_ab_test_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "narrow rows through one parallel range sort — never a coalesce(1) "
     "single-task window — and the pivot back is a groupBy(user_id) "
     "map-side-combinable aggregate.",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def agg_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import partitioned_ntile, truncate_lineage
@@ -1412,7 +1412,7 @@ def agg_new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     "data-sized state per type — while the rank path selects the one "
     "or two middle rows and averages them (identical interpolation "
     "semantics, bit-equal to median()/quantile_cont).",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def events_interarrival_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-type lag over RAW events = |types| tasks sorting the whole
@@ -1532,53 +1532,58 @@ def ks_frame(vals: DataFrame) -> DataFrame:
 
     Filters NULL values first (a NULL is meaningless in an ECDF, and the
     two engines would otherwise cumulate it at OPPOSITE ends: Spark ASC
-    = NULLS FIRST, DuckDB default = NULLS LAST — r8 ADVICE), groups by
-    value (so cumulative sums are tie-correct and integer-exact), then
-    cumulates both ECDFs via _util.global_cumsum — the range-partitioned
-    two-phase prefix sum, never an unpartitioned ordered window over the
+    = NULLS FIRST, DuckDB default = NULLS LAST), groups by value (so
+    cumulative sums are tie-correct and integer-exact), then cumulates
+    both ECDFs via _util.global_cumsum — the range-partitioned two-phase
+    prefix sum, never an unpartitioned ordered window over the
     distinct-value table (a corpus-sized single task for a continuous
-    double at 100 TB — VERDICT r8 item 3). The sample sizes come back
-    from the cumsum's partition-totals collect, so the max gap and the
+    double at 100 TB). The sample sizes n_a/n_b are a one-row aggregate
+    of the cumsum output broadcast back onto it, so the max gap and the
     large-sample critical value c(alpha)·sqrt((n_a+n_b)/(n_a·n_b)) with
-    c = sqrt(-ln(alpha/2)/2) embed them as literals — no total window at
-    all. An empty sample on either side returns the defined zero frame
-    (ks_stat=0, not a NULL-vs-NaN engine divergence). Synthetic drifted/
-    identical fixtures are pytest-pinned in tests/test_invariants.py.
+    c = sqrt(-ln(alpha/2)/2) run in the same plan — no driver collect
+    and no total window. An empty sample on either side gives the
+    defined zero frame (ks_stat=0, not a NULL-vs-NaN engine divergence);
+    the divisions sit behind that guard, so ANSI mode never divides by
+    zero. Synthetic drifted/identical fixtures are pytest-pinned in
+    tests/test_invariants.py.
     """
     from ._util import global_cumsum
 
-    spark = vals.sparkSession
     vals = vals.filter(F.col("value").isNotNull())
     g = vals.groupBy("value").agg(F.sum("ia").alias("ca"), F.sum("ib").alias("cb"))
-    cum, tot = global_cumsum(g, ["value"], ["ca", "cb"])
-    n_a, n_b = int(tot["ca"]), int(tot["cb"])
-    if n_a == 0 or n_b == 0:
-        return spark.range(1).select(
-            F.lit(n_a).cast("bigint").alias("n_a"),
-            F.lit(n_b).cast("bigint").alias("n_b"),
-            F.lit(0.0).alias("ks_stat"),
-            F.lit(0.0).alias("ks_crit"),
-            F.lit(False).alias("drifted"),
-        )
-    # bigint literals: n_a * n_b overflows 32-bit at ~50k samples a side
+    cum = global_cumsum(g, ["value"], ["ca", "cb"])
+    # bigint sizes: n_a * n_b overflows 32-bit at ~50k samples a side
     # (ANSI ARITHMETIC_OVERFLOW, caught by the derived-sf1 scaling run);
     # DuckDB's window sums are HUGEINT so only the Spark side needs care
-    na_l, nb_l = F.lit(n_a).cast("bigint"), F.lit(n_b).cast("bigint")
-    ks = F.max(
+    sizes = cum.agg(
+        F.sum("ca").cast("bigint").alias("n_a"),
+        F.sum("cb").cast("bigint").alias("n_b"),
+    )
+    na, nb = F.col("n_a"), F.col("n_b")
+    both = (na > 0) & (nb > 0)
+    gap = F.when(
+        both,
         F.abs(
-            F.col("cum_ca").cast("double") / na_l
-            - F.col("cum_cb").cast("double") / nb_l
-        )
+            F.col("cum_ca").cast("double") / na - F.col("cum_cb").cast("double") / nb
+        ),
     )
-    crit = F.sqrt(
-        F.lit(-0.5 * math.log(KS_ALPHA / 2.0)) * (na_l + nb_l) / (na_l * nb_l)
+    # an empty cum joins to no rows: the global aggregate still emits
+    # one row, whose NULLs coalesce to the zero frame
+    stats = cum.crossJoin(F.broadcast(sizes)).agg(
+        F.coalesce(F.max(na), F.lit(0)).alias("n_a"),
+        F.coalesce(F.max(nb), F.lit(0)).alias("n_b"),
+        F.coalesce(F.max(gap), F.lit(0.0)).alias("ks"),
     )
-    return cum.agg(
-        na_l.alias("n_a"),
-        nb_l.alias("n_b"),
-        r4(ks).alias("ks_stat"),
+    crit = F.when(
+        both,
+        F.sqrt(F.lit(-0.5 * math.log(KS_ALPHA / 2.0)) * (na + nb) / (na * nb)),
+    ).otherwise(F.lit(0.0))
+    return stats.select(
+        na,
+        nb,
+        r4(F.col("ks")).alias("ks_stat"),
         r4(crit).alias("ks_crit"),
-        (ks > crit).alias("drifted"),
+        (F.col("ks") > crit).alias("drifted"),
     )
 
 
@@ -1750,10 +1755,10 @@ def dq_freshness_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     "expanding intervals into per-second rows. The global sweep runs "
     "over CHANGE POINTS (2 per session) via _util.global_cumsum — "
     "range-partition by time, cumulate per partition in parallel, add "
-    "the collected partition-boundary offsets (the r11 swap off the "
+    "the broadcast partition-boundary offsets (the r11 swap off the "
     "coalesce(1) single-task sweep this docstring used to merely "
     "prescribe; integer deltas, so the two-phase sum is hash-exact).",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     es = F.unix_timestamp("ts")
@@ -1785,7 +1790,7 @@ def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import global_cumsum
 
     merged = deltas.groupBy("t").agg(F.sum("d").alias("net"))
-    swept, _tot = global_cumsum(merged, ["t"], ["net"])
+    swept = global_cumsum(merged, ["t"], ["net"])
     swept = swept.withColumnRenamed("cum_net", "live")
     n_sess = sessions.agg(F.count("*").cast("bigint").alias("n_sessions"))
     return (
@@ -2212,7 +2217,7 @@ PSI_BINS = 10
     "rewrite, bit-equal per edge); edges are a 9-value broadcast; "
     "binning is map-side; the parity halves guarantee every decile is "
     "populated on both sides so the log never sees a zero.",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def eval_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import grouped_exact_percentiles
@@ -2285,7 +2290,7 @@ def eval_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     "split cumulates only bigints (hash-exact under any partitioning) "
     "and the sole float op is one multiply-subtract per output row; "
     "the corpus-sized work is one combinable daily count.",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import global_cumsum
@@ -2297,7 +2302,7 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n", F.col("n_i").cast("double"))
     )
     mu = daily.agg(F.avg("n").alias("m"))
-    cum, _tot = global_cumsum(
+    cum = global_cumsum(
         daily.withColumn("one", F.lit(1).cast("bigint")), ["day"], ["n_i", "one"]
     )
     cusum = cum.crossJoin(F.broadcast(mu)).select(
@@ -2350,7 +2355,7 @@ def events_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     "run via _util.grouped_exact_percentiles (no whole-group buffering "
     "— the r9 exact-quantile rewrite, bit-equal to quantile_cont), "
     "broadcast back over one stream scan.",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def agg_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import grouped_exact_percentiles
@@ -2468,14 +2473,14 @@ def events_fraud_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "(retention cohorts say WHO returns; this says what returning is "
     "WORTH). Revenue buckets by age in one pass; the running sum walks "
     "the |ages|-row aggregate via _util.global_cumsum (range-partition "
-    "on age, parallel per-partition cumulate, collected boundary "
+    "on age, parallel per-partition cumulate, broadcast boundary "
     "offsets — the r11 swap off the coalesce(1) single-task sweep) in "
-    "SCALED-INTEGER form (ADVICE r11): revenue is quantized to "
+    "SCALED-INTEGER form: revenue is quantized to "
     "round(value*10000) bigints BEFORE any summation on BOTH engines, "
     "so the two-phase prefix sum cumulates only integers — exact and "
     "hash-identical under ANY partition layout, where a double cumsum "
     "would reassociate FP additions and could flip the 4th decimal at "
-    "a knife edge. Known tradeoff (ADVICE r12): this is round-THEN-sum "
+    "a knife edge. Known tradeoff: this is round-THEN-sum "
     "— each event's value quantizes to 1e-4 before summation, so "
     "cum_revenue can drift up to ~5e-5 per purchase event vs a "
     "sum-then-round metric; both engines quantize identically so the "
@@ -2486,7 +2491,7 @@ def events_fraud_velocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Survivor counts come from the tenure HISTOGRAM (|distinct "
     "tenures| <= observation days — result-sized), never an ages x "
     "users cross join (r9 inverse-class audit).",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def agg_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = F.floor(F.unix_timestamp("ts") / 86400).cast("bigint")
@@ -2509,7 +2514,7 @@ def agg_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import global_cumsum
 
     by_age = rev.groupBy("age").agg(F.sum("v_i").alias("day_rev_i"))
-    cum_df, _tot = global_cumsum(by_age, ["age"], ["day_rev_i"])
+    cum_df = global_cumsum(by_age, ["age"], ["day_rev_i"])
     cum = cum_df.select(
         "age", (F.col("cum_day_rev_i") / F.lit(10000.0)).alias("cum_rev")
     )
@@ -2637,7 +2642,7 @@ def eval_ab_power_mde(spark: SparkSession, sf_dir: str) -> DataFrame:
     "computable); the running sum walks the |days|-row aggregate via "
     "_util.global_cumsum (the r11 swap off the coalesce(1) single-task "
     "sweep — integer counts, so the two-phase sum is hash-exact).",
-    eager=True,  # construction collects the range-partition offsets
+    eager=True,  # construction runs the range-partition exchange
 )
 def agg_user_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import global_cumsum
@@ -2651,7 +2656,7 @@ def agg_user_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_day = firsts.groupBy(F.col("first_day").alias("day")).agg(
         F.count("*").alias("new_users")
     )
-    cum, _tot = global_cumsum(per_day, ["day"], ["new_users"])
+    cum = global_cumsum(per_day, ["day"], ["new_users"])
     return cum.select(
         "day",
         F.col("new_users").cast("bigint").alias("new_users"),

@@ -1392,9 +1392,9 @@ def text_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     "group's midrank is cum-count algebra: rank_first = cum-cnt+1, "
     "midrank = rank_first+(cnt-1)/2, contributing pos*midrank to the "
     "rank-sum (a product of exactly-representable halves — bit-equal to "
-    "the per-row sum). No coalesce(1), no global window (the r9 sweep "
-    "of the VERDICT r8 item 2 class).",
-    eager=True,  # construction collects the range-partition offsets
+    "the per-row sum). No coalesce(1), no global window: either would "
+    "funnel every distinct score through one task.",
+    eager=True,  # construction runs the range-partition exchange
 )
 def eval_langid_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._util import global_cumsum
@@ -1411,7 +1411,7 @@ def eval_langid_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").alias("cnt"),
         F.sum(F.col("label").cast("long")).alias("pos"),
     )
-    cum, _tot = global_cumsum(g, ["score"], ["cnt"])
+    cum = global_cumsum(g, ["score"], ["cnt"])
     midrank = (
         (F.col("cum_cnt") - F.col("cnt") + 1) + (F.col("cnt") - 1) / 2.0
     )

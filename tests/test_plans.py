@@ -414,14 +414,20 @@ def test_governance_keys_single_scan(spark):
         plan = plan_of(spark, key)
         assert plan.count("FileScan") == 1, key
         assert "CartesianProduct" not in plan, key
-    # eval_ks_drift cumulates its ECDFs via _util.global_cumsum (VERDICT
-    # r8 item 3): the single events scan runs at construction into the
-    # two-phase rank checkpoint, the final plan reads the RDD back and
-    # must carry NO ordered window over the distinct-value table
+    # eval_ks_drift cumulates its ECDFs via _util.global_cumsum: the
+    # single events scan runs at construction into the two-phase
+    # checkpoint, the final plan reads the RDD back and must carry NO
+    # ordered window over the distinct-value table — its only window is
+    # the prefix sum over the per-split totals, ordered by the split id
+    import re
+
     plan = plan_of(spark, "eval_ks_drift")
     assert plan.count("FileScan") == 0
     assert "Scan ExistingRDD" in plan
-    assert "Window" not in plan
+    for line in plan.splitlines():
+        if "Window [" in line:
+            assert re.search(r"windowspecdefinition\(__tpp_pid#\d+ ASC", line), line
+            assert "value" not in line, line
     assert "CartesianProduct" not in plan
     # sample_anneal_mix materializes its ranked table inside
     # partitioned_ntile (the totals join and the output both read it),
@@ -525,6 +531,17 @@ def test_r11_streaming_cumsum_keys_no_single_task_sweep(spark):
     plan = plan_of(spark, "events_slo_burn_rate")
     assert "Generate explode" in plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan
+
+
+def test_user_growth_curve_construction_runs_no_collect(spark):
+    """Constructing a global_cumsum key runs only the range exchange
+    behind the helper's lazy cut: the per-split offsets join the plan
+    instead of a driver collect, so construction stays within five
+    Spark jobs at sf0.001 (seven when the totals were collected)."""
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    first_job = scheduler.nextJobId()
+    load_all()["agg_user_growth_curve"].spark(spark, SF)
+    assert scheduler.nextJobId() - first_job <= 5
 
 
 def test_r12_vocab_curve_two_phase(spark):

@@ -201,3 +201,28 @@ def test_pretouch_heap_fits_half_of_ram(tmp_path):
         warnings.simplefilter("error")
         assert pretouch_heap_gb(str(meminfo)) == 16
         assert pretouch_heap_gb(str(tmp_path / "absent")) == 16
+
+
+def test_bench_scaling_derives_only_the_tables_its_keys_read(spark, tmp_path, monkeypatch):
+    """tools/bench_scaling.py derives the sf1 tables its keys' oracle SQL
+    names, leaves a complete copy alone, and stops when a table it needs
+    did not land."""
+    import os
+
+    import tools.bench_scaling as bs
+
+    monkeypatch.setattr(bs, "SCRATCH", str(tmp_path))
+    assert bs.tables_read(["agg_user_growth_curve", "olap_pricing_summary"]) == {
+        "events",
+        "lineitem",
+    }
+    src = "/root/testdata/sf0.001"
+    bs.materialize(spark, src, {"nation", "region"}, rebuild=False)
+    assert sorted(os.listdir(tmp_path)) == ["nation.parquet", "region.parquet"]
+    done = tmp_path / "nation.parquet" / "_SUCCESS"
+    before = done.stat().st_mtime_ns
+    bs.materialize(spark, src, {"nation"}, rebuild=False)
+    assert done.stat().st_mtime_ns == before
+    monkeypatch.setattr(bs, "_built", lambda name: False)
+    with pytest.raises(SystemExit, match="missing"):
+        bs.materialize(spark, src, {"region"}, rebuild=False)

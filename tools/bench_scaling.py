@@ -1,4 +1,4 @@
-"""Scaling bench (VERDICT r3 item 8): measure headline queries at
+"""Scaling bench: measure headline queries at
 sf0.01 / sf0.1 / a DERIVED ~sf1, and report per-decade scaling exponents.
 
 sf1 fixtures don't exist, so this materializes one under
@@ -15,11 +15,16 @@ the exponent would measure output growth rather than the plan).
 Exponent: e = log(t_hi/t_lo) / log(10) per decade of data. e≈1 is
 linear, e<1 means fixed overheads still dominate, e>1.2 flags
 superlinear candidate growth — the thing this probe exists to catch
-(VERDICT r3 named dedup_minhash_lsh verify fan-out and ann_ivf_pq code
-scan as the suspects).
+(dedup_minhash_lsh's verify fan-out and ann_ivf_pq's code scan were the
+first suspects).
+
+Only the tables named in the benched keys' oracle SQL are derived, and
+each only when ``.scratch/sf1`` lacks a complete copy (``--rebuild``
+re-derives them), so ``--keys`` on a fresh checkout builds a few tables,
+not all ten.
 
 Usage:
-    python tools/bench_scaling.py [--runs 3] [--rebuild]
+    python tools/bench_scaling.py [--runs 3] [--rebuild] [--keys k1,k2]
 Prints a markdown table + one JSON line.
 """
 
@@ -28,6 +33,7 @@ from __future__ import annotations
 import argparse
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -39,7 +45,7 @@ from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from mergeextractor_spark.registry import load_all  # noqa: E402
 from mergeextractor_spark.session import get_spark  # noqa: E402
-from mergeextractor_spark.sources.fixtures import table  # noqa: E402
+from mergeextractor_spark.sources.fixtures import TABLE_NAMES, table  # noqa: E402
 
 K = 10
 SCRATCH = os.path.join(_REPO, ".scratch", "sf1")
@@ -60,7 +66,6 @@ STRIDES = {
         {"l_suppkey": 100_000, "l_partkey": 1_000_000},
     ),
 }
-COPY_AS_IS = ["region", "nation"]  # fixed-cardinality dims at every TPC-H SF
 
 QUERIES = [
     "extract_section_pipeline",
@@ -120,10 +125,10 @@ QUERIES = [
     # scan (pure map + 10-group agg; exponent ≈ 1.0 expected for both)
     "sample_token_budget",
     "eval_calibration_bins",
-    # round-9 shapes: the two-phase rank/cumsum/lag rewrites (VERDICT r8
-    # items 2-3 + the class sweep). Exponent ≈ 1.0 expected: the range
-    # exchange, per-split windows, and offsets collect are all linear in
-    # rows; the offsets collect itself is bounded by the PARTITION count
+    # round-9 shapes: the two-phase rank/cumsum/lag rewrites. Exponent
+    # ≈ 1.0 expected: the range exchange and per-split windows are
+    # linear in rows; the broadcast offsets are bounded by the PARTITION
+    # count
     "sample_quality_decile",
     "sample_logprob_bucket",
     "sample_anneal_mix",
@@ -229,16 +234,40 @@ def replicate(df: DataFrame, pk: str, stride: int, fks: dict[str, int], k: int) 
     return out.select(df.columns)  # original column order, _copy dropped
 
 
-def materialize(spark, src_sf: str) -> None:
+def tables_read(keys: list[str]) -> set[str]:
+    """Fixture tables the keys read, as named in their oracle SQL."""
+    reg = load_all()
+    need = set()
+    for key in keys:
+        names = {n for n in TABLE_NAMES if re.search(rf"\b{n}\b", reg[key].oracle)}
+        if not names:
+            raise SystemExit(f"{key}: its oracle SQL names no fixture table")
+        need |= names
+    return need
+
+
+def _built(name: str) -> bool:
+    return os.path.exists(os.path.join(SCRATCH, f"{name}.parquet", "_SUCCESS"))
+
+
+def materialize(spark, src_sf: str, names: set[str], rebuild: bool) -> None:
+    """Derive each table in ``names`` under SCRATCH unless a complete
+    copy (``_SUCCESS`` written) is there already or ``rebuild`` is set."""
     os.makedirs(SCRATCH, exist_ok=True)
-    for name in COPY_AS_IS:
-        table(spark, src_sf, name).write.mode("overwrite").parquet(
-            os.path.join(SCRATCH, f"{name}.parquet")
-        )
-    for name, (pk, stride, fks) in STRIDES.items():
-        big = replicate(table(spark, src_sf, name), pk, stride, fks, K)
-        big.write.mode("overwrite").parquet(os.path.join(SCRATCH, f"{name}.parquet"))
-    print(f"materialized derived sf1 at {SCRATCH}", flush=True)
+    for name in sorted(names):
+        if _built(name) and not rebuild:
+            continue
+        df = table(spark, src_sf, name)
+        # tables without a stride (region, nation: fixed-cardinality dims
+        # at every TPC-H SF) are copied as they are
+        if name in STRIDES:
+            pk, stride, fks = STRIDES[name]
+            df = replicate(df, pk, stride, fks, K)
+        df.write.mode("overwrite").parquet(os.path.join(SCRATCH, f"{name}.parquet"))
+        print(f"materialized derived sf1 {name} at {SCRATCH}", flush=True)
+    missing = sorted(n for n in names if not _built(n))
+    if missing:
+        raise SystemExit(f"derived sf1 tables missing after materialize: {missing}")
 
 
 def run_noop(df: DataFrame) -> None:
@@ -335,8 +364,7 @@ def main() -> None:
         },
     )
     spark.range(1).count()
-    if args.rebuild or not os.path.exists(os.path.join(SCRATCH, "lineitem.parquet")):
-        materialize(spark, "/root/testdata/sf0.1")
+    materialize(spark, "/root/testdata/sf0.1", tables_read(QUERIES), args.rebuild)
 
     results = {}
     for label, sf_dir in [
